@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.CheckpointOps
 
 import graft.functions.VectorFunctions
 import graft.operators.{Cdc, Dedup, Funnel, Merge, Similarity, Skew, TextAnalysis, UrlOps}
@@ -5668,7 +5669,7 @@ object SparkEntry {
       val first = ev.groupBy(col("user_id"))
         .agg(min(col("ts")).as("__f"))
         .select(col("user_id"), wk(col("__f")).as("cohort_week"))
-        .localCheckpoint(eager = false) // sizes + the revenue join
+        .transform(CheckpointOps(_, eager = false)) // sizes + the revenue join
       val sizes = first.groupBy(col("cohort_week"))
         .agg(count(lit(1)).as("n_users"))
       val w = Window.partitionBy(col("cohort_week")).orderBy(col("period"))

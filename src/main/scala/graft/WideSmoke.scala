@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Wide-regime exercise for the declared keyed-checkpoint layout
-  * (`CheckpointOps.checkpointHashPartitioned*`, used by the iterative
+  * (`CheckpointOps.keyed`, used by the iterative
   * graph family): every bench/verify configuration runs in the NARROW
   * regime (data-derived width < session parallelism), so until r16 the
   * declared-layout branch had never executed outside a unit test —
@@ -127,8 +127,7 @@ object WideSmoke {
       val spark = session("wide-smoke-probe", 2)
       val e = edges(spark, dir)
       val ck = org.apache.spark.sql.graft.CheckpointOps
-        .checkpointHashPartitioned(e, Seq("src"), reliable = false,
-          declareNarrow = false)
+        .keyed(e, Seq("src"), None)
       val declared = ck.queryExecution.analyzed match {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
           lr.outputPartitioning.toString

@@ -26,7 +26,7 @@ object TableStatistics {
   /** LOGICAL stats identity (cache/invalidation key, legacy file). The
     * committed content lives in generation files `_graft_stats.g{N}.json`
     * beside it — the same rename-NO-overwrite CAS protocol as
-    * [[graft.sources.Checkpoints.saveCas]], because a plain
+    * [[graft.sources.OffsetMarks.saveCas]], because a plain
     * read-merge-overwrite loses one commit's partition entries whenever
     * two jobs insert into DISJOINT partitions concurrently (both read the
     * same base, last rename wins, the loser's partitions revert to stale

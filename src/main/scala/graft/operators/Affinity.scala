@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Market-basket co-occurrence mining — "what is bought (clicked, read,
   * co-edited) together?": item pairs sharing a basket, with support and
@@ -39,7 +40,7 @@ object Affinity {
       .groupBy(col("__b"))
       .agg(sort_array(collect_set(col("__i"))).as("__items"))
       .filter(size(col("__items")) <= maxBasketSize)
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
 
   /** Each basket's `a < b` item pairs as `(__x, __y)` rows, generated
     * map-side from the sorted set: the array is distinct and
@@ -197,7 +198,7 @@ object Affinity {
       .filter(col("__sz") <= maxGroupsPerEntity)
       .select(col("__e"))
     val kept = posts.join(sized, Seq("__e"), "left_semi")
-      .localCheckpoint(eager = false) // sizes + the pair join
+      .transform(CheckpointOps(_, eager = false)) // sizes + the pair join
     val sizes = kept.groupBy(col("__g")).agg(count(lit(1)).as("__n"))
     val pairs = kept.as("a")
       .join(kept.as("b"),

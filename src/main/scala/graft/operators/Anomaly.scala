@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Event-rate anomaly detection — "did the error rate spike this hour?":
   * the monitoring consumer at the end of the reference's log-collector
@@ -53,7 +54,7 @@ object Anomaly {
         "week" -> "interval 7 days")
       require(step.contains(bucket),
         s"dense calendars support hour/day/week buckets, got $bucket")
-      val checkpointed = sparse.localCheckpoint(eager = false)
+      val checkpointed = CheckpointOps(sparse, eager = false)
       checkpointed
         .groupBy(col("series"))
         .agg(min(col("bucket")).as("__lo"), max(col("bucket")).as("__hi"))

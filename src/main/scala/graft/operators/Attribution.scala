@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Marketing-style conversion attribution and path mining over an event
   * stream — the revenue-credit companion of [[Funnel]] (same
@@ -113,7 +114,7 @@ object Attribution {
         col(ts).isNotNull)
       .groupBy(col(entity).as("__e"), step.as("__s"))
       .agg(min(col(ts)).as("__mn"), max(col(ts)).as("__mx"))
-      .localCheckpoint(eager = false) // pair join + audience sizes
+      .transform(CheckpointOps(_, eager = false)) // pair join + audience sizes
     val pairs = spans.as("a")
       .join(spans.as("b"),
         col("a.__e") === col("b.__e") && col("a.__s") =!= col("b.__s") &&

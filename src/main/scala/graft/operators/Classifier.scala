@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.graft.CheckpointOps
 
 import scala.collection.mutable
 
@@ -126,7 +127,7 @@ object Classifier {
       // scan's partitioning — 20 epochs of scheduler overhead on
       // hundreds of tiny tasks would dominate the actual math.
       .coalesce(8)
-      .transform(Checkpointing(_, eager = false))
+      .transform(CheckpointOps(_, eager = false))
     val nDocs = math.max(1L,
       feats.filter(col("__b") === -1).count())
 
@@ -227,7 +228,8 @@ object Classifier {
         sum(col(labelCol).cast("decimal(28,6)")).cast("decimal(28,6)")
           .as("__s"))
       .filter(!isnan(col("score")))
-      .localCheckpoint(eager = false) // driver fit + the block join-back
+      // driver fit + the block join-back
+      .transform(CheckpointOps(_, eager = false))
     val pts = stats.orderBy(col("score")).collect()
     require(pts.length <= maxPoints,
       s"${pts.length} distinct scores exceed maxPoints=$maxPoints — " +
@@ -300,7 +302,8 @@ object Classifier {
     val ranged = byValue
       .repartitionByRange(buckets, col("__v"))
       .withColumn("__b", spark_partition_id())
-      .localCheckpoint(eager = false) // bucket ids must not re-randomize
+      // bucket ids must not re-randomize
+      .transform(CheckpointOps(_, eager = false))
     val offs = ranged.groupBy(col("__b"))
       .agg(sum(col("__nt")).as("__tt"))
       .select(col("__b"),
@@ -573,7 +576,8 @@ object Classifier {
     val base = df.select(raterA.cast("string").as("__a"),
         raterB.cast("string").as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
-      .localCheckpoint(eager = false) // agreement + marginal consumers
+      // agreement + marginal consumers
+      .transform(CheckpointOps(_, eager = false))
     val agree = base.agg(count(lit(1)).as("n"),
       sum(when(col("__a") === col("__b"), 1L).otherwise(0L))
         .as("agree"))
@@ -680,7 +684,7 @@ object Classifier {
       .filter(col("__i").isNotNull && col("__c").isNotNull)
       .groupBy(col("__i"), col("__c"))
       .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(eager = false) // item + category rollups
+      .transform(CheckpointOps(_, eager = false)) // item + category rollups
     val items = cells.groupBy(col("__i"))
       .agg(sum(col("__n")).as("__ni"),
         sum((d19(col("__n")) * d19(col("__n"))).cast("decimal(38,0)"))
@@ -758,7 +762,7 @@ object Classifier {
         col("__c").isNotNull)
       .groupBy(col("__i"), col("__m"))
       .agg(max(col("__c").cast("int")).as("__x"))
-      .localCheckpoint(eager = false) // example + model rollups
+      .transform(CheckpointOps(_, eager = false)) // example + model rollups
     val k = cells.agg(countDistinct(col("__m")).as("k"))
     val perId = cells.groupBy(col("__i"))
       .agg(count(lit(1)).as("__cnt"), sum(col("__x")).as("__r"))
@@ -918,7 +922,7 @@ object Classifier {
         calib.cast("boolean").as("__c"))
       .filter(col("__v").isNotNull && !isnan(col("__v")) &&
         col("__c").isNotNull)
-      .localCheckpoint(eager = false) // calib rank + eval coverage
+      .transform(CheckpointOps(_, eager = false)) // calib rank + eval coverage
     val cal = base.filter(col("__c")).select(col("__id"), col("__v"))
     val nCal = cal.agg(count(lit(1)).as("n_calib"))
       .select(col("n_calib"),
@@ -985,7 +989,7 @@ object Classifier {
       .agg(count(lit(1)).as("n_category"),
         sum(col("__y").cast("decimal(19,0)")).cast("decimal(28,0)")
           .as("__sc"))
-      .localCheckpoint(eager = false) // global total + the row join
+      .transform(CheckpointOps(_, eager = false)) // global total + the row join
     val tot = perC.agg(sum(col("n_category")).cast("decimal(19,0)")
         .as("__n"),
       sum(col("__sc")).cast("decimal(38,0)").as("__s"))
@@ -1094,13 +1098,15 @@ object Classifier {
         floor(col("__sm") * 1000000.0 + 0.5).cast("long").as("__s"))
       .groupBy(col("__r"), col("__i"))
       .agg(min(col("__s")).as("__s"))
-      .localCheckpoint(eager = false) // k inference + both moment passes
+      // k inference + both moment passes
+      .transform(CheckpointOps(_, eager = false))
     val k = base.select(col("__i")).distinct().count()
     val wR = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__r"))
     val marked = base
       .withColumn("__rn", count(lit(1)).over(wR))
-      .localCheckpoint(eager = false) // complete + incomplete consumers
+      // complete + incomplete consumers
+      .transform(CheckpointOps(_, eager = false))
     val nIncomplete = marked.filter(col("__rn") =!= k)
       .select(col("__r")).distinct().count()
     val complete = marked.filter(col("__rn") === k)
@@ -1183,7 +1189,7 @@ object Classifier {
         sum(d19(col("__s"))).cast("decimal(28,0)").as("__sy"),
         sum((d19(col("__s")) * d19(col("__s"))).cast("decimal(38,0)"))
           .cast("decimal(38,0)").as("__syy"))
-      .localCheckpoint(eager = false) // excluded count + fold
+      .transform(CheckpointOps(_, eager = false)) // excluded count + fold
     val nExcluded = per.filter(col("__n") =!= k).count()
     val nD = lit(k.toDouble)
     // per complete target: within-SS (exact) and the group mean
@@ -1259,7 +1265,7 @@ object Classifier {
       // checkpoint freezes the AQE-coalesced (often 1-partition)
       // layout and runs them single-threaded — the quantized decimal
       // sums are exact, so the layout cannot change results
-      .transform(org.apache.spark.sql.graft.CheckpointOps.checkpointSpread)
+      .transform(CheckpointOps.spread)
     val counts = base.agg(
       sum(when(col("__y"), 1L).otherwise(0L)).as("np"),
       sum(when(col("__y"), 0L).otherwise(1L)).as("nn")).collect()(0)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.CheckpointOps
 
 import graft.functions.VectorFunctions
 
@@ -157,7 +158,7 @@ object Dedup {
       .withColumn("bands", org.apache.spark.sql.graft.NativeFunctions
         .minhashBands(col(textCol), shingleK, numHashes, bands))
       .withColumn("sh", shingleHashes(col(textCol), shingleK))
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     // Intra-batch pair candidates from the precomputed sketches — the
     // same band→cap→pair→jaccard-verify shape as [[minhashNearDups]],
     // minus its per-doc kernels.
@@ -189,7 +190,7 @@ object Dedup {
     // sketch checkpoint — no kernel re-run.
     val intra = withSk
       .join(intraLosers, withSk(idCol) === col("__l"), "left_anti")
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
 
     val incBanded = intra
       .select(col(idCol).as("inc_id"), posexplode(col("bands")))
@@ -386,7 +387,7 @@ object Dedup {
     val pairs = bucketPairs(pruned, Seq("band_idx", "band_hash"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
 
     // shingle sets computed ONCE, for candidate ids only, and kept as a
     // candidates-sized block (never corpus-sized): the former shape
@@ -399,7 +400,7 @@ object Dedup {
     val sh = docs.select(col(idCol).as("id"),
       shingleHashes(col(textCol), shingleK).as("sh"))
       .join(candIds, Seq("id"), "left_semi")
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     pairs
       .join(sh.withColumnsRenamed(Map("id" -> "id_a", "sh" -> "sh_a")), "id_a")
       .join(sh.withColumnsRenamed(Map("id" -> "id_b", "sh" -> "sh_b")), "id_b")
@@ -537,7 +538,8 @@ object Dedup {
       docFreqCap: Int = 32): DataFrame = {
     val sh = docs.select(col(idCol).as("id"),
       shingleHashes(col(textCol), shingleK).as("sh"))
-      .localCheckpoint(eager = false) // postings + both verify joins
+      // postings + both verify joins
+      .transform(CheckpointOps(_, eager = false))
     val posting = sh.select(col("id"), explode(col("sh")).as("gh"))
     val prunedPosting = capBuckets(posting, Seq("gh"), docFreqCap)
     val pairs = bucketPairs(prunedPosting, Seq("gh"))
@@ -572,15 +574,15 @@ object Dedup {
   def lshRecallReport(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 4, threshold: Double = 0.35, numHashes: Int = 128,
       bands: Int = 32, maxBucketSize: Int = 64): DataFrame = {
-    val slice = docs.localCheckpoint(eager = false) // both joins read it
+    val slice = CheckpointOps(docs, eager = false) // both joins read it
     val exact = ngramJaccardNearDups(slice, idCol, textCol, shingleK,
         threshold, docFreqCap = Int.MaxValue)
       .select(col("id_a"), col("id_b"))
-      .localCheckpoint(eager = false) // count + the match join
+      .transform(CheckpointOps(_, eager = false)) // count + the match join
     val lsh = minhashNearDups(slice, idCol, textCol, shingleK, numHashes,
         bands, threshold, maxBucketSize)
       .select(col("id_a"), col("id_b"))
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     val ne = exact.agg(count(lit(1)).as("exact_pairs"))
     val nl = lsh.agg(count(lit(1)).as("lsh_pairs"))
     val nm = lsh.join(exact, Seq("id_a", "id_b"))
@@ -627,7 +629,7 @@ object Dedup {
   /** Duplicate clusters from a pair list: connected components by min-label
     * propagation, so every member maps to its component's smallest id (the
     * canonical survivor). Each iteration is one join + agg over the
-    * (small) dup-pair graph with lineage truncated via `localCheckpoint` —
+    * (small) dup-pair graph with lineage truncated via `CheckpointOps` —
     * the standard DataFrame shape for iterative graph algorithms; LSH dup
     * graphs have tiny diameters so this converges in a few rounds.
     * Checkpoint blocks are O(graph vertices) — two longs per dup-pair
@@ -644,11 +646,11 @@ object Dedup {
     // pipeline once per union branch (measured: the near-dup loser plan
     // in the p332 pipeline carried the corpus chain twice, ~600 KB of
     // physical plan).
-    val p0 = Checkpointing(
+    val p0 = CheckpointOps(
       pairs.select(col("id_a"), col("id_b")), eager = true)
     val edges =
       p0.union(p0.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-    var labels = Checkpointing(
+    var labels = CheckpointOps(
       edges.select(col("id_a").as("id")).distinct()
         .withColumn("label", col("id")),
       eager = true)
@@ -667,7 +669,7 @@ object Dedup {
           sum(when(col("label") =!= col("__old"), 1L).otherwise(0L)),
           lit(0L)).as("chg"))
         .select("id", "label")
-        .transform(Checkpointing(_, eager = true))
+        .transform(CheckpointOps(_, eager = true))
       converged = obs.get("chg").asInstanceOf[Long] == 0L
       labels = updated
       i += 1

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Data-quality expectations (Deequ-style, declarative): per-row
   * predicates verified in ONE aggregation pass over the table, returned
@@ -267,7 +268,8 @@ object Expectations {
     val ranged = byValue
       .repartitionByRange(buckets, col("__v"))
       .withColumn("__b", spark_partition_id())
-      .localCheckpoint(eager = false) // bucket ids must not re-randomize
+      // bucket ids must not re-randomize
+      .transform(CheckpointOps(_, eager = false))
     val wB = Window.partitionBy(col("__b")).orderBy(col("__v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val offs = ranged.groupBy(col("__b"))
@@ -376,7 +378,8 @@ object Expectations {
     val ranged = base
       .repartitionByRange(buckets, col("__g"), col("__v"), col("__id"))
       .withColumn("__b", spark_partition_id())
-      .localCheckpoint(eager = false) // bucket ids must not re-randomize
+      // bucket ids must not re-randomize
+      .transform(CheckpointOps(_, eager = false))
     val wB = Window.partitionBy(col("__b"), col("__g"))
       .orderBy(col("__v"), col("__id"))
     val counts = ranged.groupBy(col("__b"), col("__g"))
@@ -639,7 +642,8 @@ object Expectations {
         col(sensitiveCol).as("__v"))
     val cells = rows.groupBy(col("__q"), col("__v"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = false) // domain + totals + the completion
+      // domain + totals + the completion
+      .transform(CheckpointOps(_, eager = false))
     val domain = cells.select(col("__v")).distinct()
     val m = domain.count()
     require(m <= maxDomain && m >= 2,
@@ -807,7 +811,8 @@ object Expectations {
             .as(s"__sp_${a}__$b")
         }.toSeq
     val agg = clean.agg(sums.head, sums.tail: _*)
-      .localCheckpoint(eager = false) // one row, carved p(p−1)/2 times
+      // one row, carved p(p−1)/2 times
+      .transform(CheckpointOps(_, eager = false))
     def dbl(c: Column): Column = c.cast("string").cast("double")
     cols.combinations(2).map { case Seq(a, b) =>
       val n = col("__n").cast("double")
@@ -890,7 +895,7 @@ object Expectations {
   def referentialIntegrity(child: DataFrame, childKey: Column,
       parent: DataFrame, parentKey: Column): DataFrame = {
     val c = child.select(childKey.as("__k"))
-      .localCheckpoint(eager = false) // totals + the anti-join
+      .transform(CheckpointOps(_, eager = false)) // totals + the anti-join
     val totals = c.agg(count(lit(1)).as("child_rows"),
       sum(when(col("__k").isNull, 1L).otherwise(0L))
         .as("null_key_rows"))
@@ -1070,7 +1075,7 @@ object Expectations {
     val base = df.select(colA.cast("string").as("__a"),
         colB.cast("string").as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
-      .localCheckpoint(eager = false) // cells + two marginals
+      .transform(CheckpointOps(_, eager = false)) // cells + two marginals
     val cells = base.groupBy(col("__a"), col("__b"))
       .agg(count(lit(1)).as("__o"))
     val ra = base.groupBy(col("__a")).agg(count(lit(1)).as("__ra"))
@@ -1134,7 +1139,7 @@ object Expectations {
     val base = df.select(colA.cast("string").as("__a"),
         colB.cast("string").as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
-      .localCheckpoint(eager = false) // cells + two marginals
+      .transform(CheckpointOps(_, eager = false)) // cells + two marginals
     val cells = base.groupBy(col("__a"), col("__b"))
       .agg(count(lit(1)).as("__o"))
     val ra = base.groupBy(col("__a")).agg(count(lit(1)).as("__ra"))
@@ -1200,7 +1205,7 @@ object Expectations {
         abs(col("__vm")) < lit(Double.PositiveInfinity))
       .select(col("group"),
         floor(col("__vm") * 1000000.0 + 0.5).cast("long").as("__v"))
-      .localCheckpoint(eager = false) // median + deviation + screen
+      .transform(CheckpointOps(_, eager = false)) // median + deviation + screen
     // exact LOWER median from a (group, value) count table: first value
     // whose doubled cumulative count reaches the group total
     def lowerMedian(in: DataFrame, out: String): DataFrame = {

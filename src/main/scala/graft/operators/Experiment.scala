@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** A/B experiment analysis — the decision layer over [[Funnel]] /
   * [[Retention]]: per-variant conversion rates with a two-proportion
@@ -155,7 +156,8 @@ object Experiment {
     val ranged = byValue
       .repartitionByRange(buckets, col("__v"))
       .withColumn("__b", spark_partition_id())
-      .localCheckpoint(eager = false) // bucket ids must not re-randomize
+      // bucket ids must not re-randomize
+      .transform(CheckpointOps(_, eager = false))
     val offs = ranged.groupBy(col("__b"))
       .agg(sum(col("__nt")).as("__tt"))
       .select(col("__b"),
@@ -241,13 +243,15 @@ object Experiment {
         col("__g").isNotNull)
     val byVG = base.groupBy(col("__v"), col("__g"))
       .agg(count(lit(1)).as("__ng"))
-      .localCheckpoint(eager = false) // value rollup + rank join back
+      // value rollup + rank join back
+      .transform(CheckpointOps(_, eager = false))
     val byV = byVG.groupBy(col("__v"))
       .agg(sum(col("__ng")).as("__nt"))
     val ranged = byV
       .repartitionByRange(buckets, col("__v"))
       .withColumn("__b", spark_partition_id())
-      .localCheckpoint(eager = false) // bucket ids must not re-randomize
+      // bucket ids must not re-randomize
+      .transform(CheckpointOps(_, eager = false))
     val offs = ranged.groupBy(col("__b"))
       .agg(sum(col("__nt")).as("__tt"))
       .select(col("__b"),
@@ -260,7 +264,7 @@ object Experiment {
       .select(col("__v"), col("__nt"),
         (col("__off") + coalesce(sum(col("__nt")).over(wB), lit(0L)))
           .cast(d19).as("__cb"))
-      .localCheckpoint(eager = false) // group join + tie totals
+      .transform(CheckpointOps(_, eager = false)) // group join + tie totals
     // per group: exact n_g and 2R_g (cb + cb + nt + 1 stays in d19 —
     // ranks are ≤ n; the product against n_g needs the wide cast)
     val perG = byVG.join(cums, Seq("__v"))
@@ -355,7 +359,8 @@ object Experiment {
         sum(d19(col("__y"))).cast("decimal(28,0)").as("__sy"),
         sum((d19(col("__y")) * d19(col("__y"))).cast("decimal(38,0)"))
           .cast("decimal(38,0)").as("__syy"))
-      .localCheckpoint(eager = false) // pooled weights + variant finale
+      // pooled weights + variant finale
+      .transform(CheckpointOps(_, eager = false))
     val perS = perVS.groupBy(col("__s"))
       .agg(sum(col("__nvs")).cast("decimal(19,0)").as("__ns"))
     val tot = perS.agg(sum(col("__ns")).cast("decimal(19,0)").as("__n"),
@@ -495,10 +500,10 @@ object Experiment {
     val base = df.select(colA.cast("string").as("__a"),
         colB.cast("string").as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
-      .localCheckpoint(eager = false) // cells + marginals
+      .transform(CheckpointOps(_, eager = false)) // cells + marginals
     val cells = base.groupBy(col("__a"), col("__b"))
       .agg(count(lit(1)).as("__o"))
-      .localCheckpoint(eager = false) // chi2 parts + the 2x2 pick
+      .transform(CheckpointOps(_, eager = false)) // chi2 parts + the 2x2 pick
     val ra = base.groupBy(col("__a")).agg(count(lit(1)).as("__ra"))
     val cb = base.groupBy(col("__b")).agg(count(lit(1)).as("__cb"))
     val tot = base.agg(count(lit(1)).as("__n"),
@@ -616,7 +621,7 @@ object Experiment {
     * (`MicroBatch.readBradleyTerry`). */
   private[graft] def guardedPairCollect(pairAgg: DataFrame,
       maxVariants: Int): Seq[(String, String, Long)] = {
-    val cached = pairAgg.localCheckpoint(eager = false) // guard + collect
+    val cached = CheckpointOps(pairAgg, eager = false) // guard + collect
     val kGuard = cached
       .select(explode(array(col("__w"), col("__l"))).as("__v"))
       .agg(countDistinct(col("__v")).as("__k"))
@@ -733,7 +738,7 @@ object Experiment {
       .groupBy(col(variantCol).as("variant"))
       .agg(count(lit(1)).as("n"),
         sum(col(convertedCol).cast("long")).as("conv"))
-      .localCheckpoint(eager = false) // two consumers below
+      .transform(CheckpointOps(_, eager = false)) // two consumers below
     val ctrl = stats.filter(col("variant") === control)
       .select(col("n").as("n0"), col("conv").as("c0"))
     require(!ctrl.isEmpty, s"control variant '$control' not present")
@@ -780,7 +785,8 @@ object Experiment {
         date_trunc("day", col(tsCol)).cast("date").as("bucket"))
       .agg(sum(value.cast("decimal(28,6)")).cast("decimal(16,6)")
         .as("v"))
-      .localCheckpoint(eager = false) // median selection + the sign pass
+      // median selection + the sign pass
+      .transform(CheckpointOps(_, eager = false))
     val wRank = Window.partitionBy(col("series"))
       .orderBy(col("v"), col("bucket"))
     val wAll = Window.partitionBy(col("series"))
@@ -838,14 +844,16 @@ object Experiment {
       .select(x.cast("double").as("__x"), y.cast("double").as("__y"))
       .filter(col("__x").isNotNull && !isnan(col("__x")) &&
         col("__y").isNotNull && !isnan(col("__y")))
-      .localCheckpoint(eager = false) // two rank passes + the join-back
+      // two rank passes + the join-back
+      .transform(CheckpointOps(_, eager = false))
     def midrank2(vcol: String): DataFrame = {
       val byValue = pts.groupBy(col(vcol).as("__v"))
         .agg(count(lit(1)).as("__nt"))
       val ranged = byValue
         .repartitionByRange(buckets, col("__v"))
         .withColumn("__b", spark_partition_id())
-        .localCheckpoint(eager = false) // bucket ids must not re-randomize
+        // bucket ids must not re-randomize
+        .transform(CheckpointOps(_, eager = false))
       val offs = ranged.groupBy(col("__b"))
         .agg(sum(col("__nt")).as("__tt"))
         .select(col("__b"),
@@ -1119,7 +1127,8 @@ object Experiment {
       .select(col("variant"),
         floor(col("__ym") * 1000000.0 + 0.5).cast("long").as("__y"),
         floor(col("__xm") * 1000000.0 + 0.5).cast("long").as("__x"))
-      .localCheckpoint(eager = false) // pooled + per-variant consumers
+      // pooled + per-variant consumers
+      .transform(CheckpointOps(_, eager = false))
     val pooled = base.agg(
       count(lit(1)).as("__n"),
       sum(d19(col("__x"))).cast("decimal(28,0)").as("__sx"),
@@ -1338,7 +1347,7 @@ object Experiment {
         abs(col("__ym")) < lit(Double.PositiveInfinity))
       .select(col("group"), col("__id"),
         floor(col("__ym") * 1000000.0 + 0.5).cast("long").as("__y"))
-      .localCheckpoint(eager = false) // replicate + point consumers
+      .transform(CheckpointOps(_, eager = false)) // replicate + point consumers
     // Poisson(1) by inverse CDF on a hash uniform: P(K ≤ k) literals
     val cdf = Seq(0.3678794411714423, 0.7357588823428846,
       0.9196986029286058, 0.9810118431238462, 0.9963401531726563,
@@ -1417,7 +1426,8 @@ object Experiment {
         value.cast("double").as("__v"), col(idCol).as("__id"))
       .filter(col("__g").isNotNull && col("__v").isNotNull &&
         !isnan(col("__v")) && abs(col("__v")) < lit(Double.PositiveInfinity))
-      .localCheckpoint(eager = false) // center pass + deviation pass
+      // center pass + deviation pass
+      .transform(CheckpointOps(_, eager = false))
     val centers: DataFrame = center match {
       case "median" =>
         Expectations.exactQuantiles(base, "__g", col("__v"),
@@ -1561,18 +1571,20 @@ object Experiment {
       .filter(col("__dm").isNotNull && !isnan(col("__dm")) &&
         abs(col("__dm")) < lit(Double.PositiveInfinity))
       .select(floor(col("__dm") * 1000000.0 + 0.5).cast("long").as("__d"))
-      .localCheckpoint(eager = false) // zero count + rank machinery
+      .transform(CheckpointOps(_, eager = false)) // zero count + rank machinery
     val nZero = diffs.agg(
       sum(when(col("__d") === 0L, 1L).otherwise(0L)).as("__nz"))
     val byVS = diffs.filter(col("__d") =!= 0L)
       .groupBy(abs(col("__d")).as("__v"), (col("__d") > 0).as("__pos"))
       .agg(count(lit(1)).as("__ng"))
-      .localCheckpoint(eager = false) // value rollup + rank join back
+      // value rollup + rank join back
+      .transform(CheckpointOps(_, eager = false))
     val byV = byVS.groupBy(col("__v")).agg(sum(col("__ng")).as("__nt"))
     val ranged = byV
       .repartitionByRange(buckets, col("__v"))
       .withColumn("__b", spark_partition_id())
-      .localCheckpoint(eager = false) // bucket ids must not re-randomize
+      // bucket ids must not re-randomize
+      .transform(CheckpointOps(_, eager = false))
     val offs = ranged.groupBy(col("__b"))
       .agg(sum(col("__nt")).as("__tt"))
       .select(col("__b"),
@@ -1585,7 +1597,7 @@ object Experiment {
       .select(col("__v"), col("__nt"),
         (col("__off") + coalesce(sum(col("__nt")).over(wB), lit(0L)))
           .cast(d19).as("__cb"))
-      .localCheckpoint(eager = false) // sign rollup + tie totals
+      .transform(CheckpointOps(_, eager = false)) // sign rollup + tie totals
     // per sign: exact 2·(rank sum) — 2·mid = 2·below + ties + 1
     val perSign = byVS.join(cums, Seq("__v"))
       .groupBy(col("__pos"))
@@ -1662,12 +1674,13 @@ object Experiment {
       // a duplicate rating is a data issue surfaced by the count
       .groupBy(col("__blk"), col("__t"))
       .agg(min(col("__s")).as("__s"))
-      .localCheckpoint(eager = false) // k inference + rank pass
+      .transform(CheckpointOps(_, eager = false)) // k inference + rank pass
     val k = base.groupBy(col("__t")).count().count()
     val wBlk = Window.partitionBy(col("__blk"))
     val complete = base
       .withColumn("__bn", count(lit(1)).over(wBlk))
-      .localCheckpoint(eager = false) // complete + incomplete consumers
+      // complete + incomplete consumers
+      .transform(CheckpointOps(_, eager = false))
     val nIncomplete = complete.filter(col("__bn") =!= k)
       .select(col("__blk")).distinct().count()
     // within-block midranks, doubled to integers:
@@ -1682,7 +1695,8 @@ object Experiment {
     val perT = ranked.groupBy(col("__t"))
       .agg(sum(col("__r2").cast(d19)).cast("decimal(38,0)").as("__rs2"),
         count(lit(1)).as("__nb"))
-      .localCheckpoint(eager = false) // A-sum + finale share the pass
+      // A-sum + finale share the pass
+      .transform(CheckpointOps(_, eager = false))
     val aSum = ranked.agg(
       sum((col("__r2").cast(d19) * col("__r2").cast(d19))
         .cast("decimal(38,0)")).cast("decimal(38,0)").as("__a4"))
@@ -1787,7 +1801,8 @@ object Experiment {
       q(wgt, 1e6).as("__sw"),
       q(wgt * mean, 1e6).as("__swm"),
       q(wgt * mean * mean, 1e3).as("__swm2"))
-      .localCheckpoint(eager = false) // h-pass re-reads the same fold
+      // h-pass re-reads the same fold
+      .transform(CheckpointOps(_, eager = false))
     // hⱼ needs Σw, so a SECOND k-sized pass joins the 1-row fold back
     // onto the per-group table (both tiny; the corpus is not re-read)
     val withTot = per.crossJoin(broadcast(
@@ -1987,7 +2002,7 @@ object Experiment {
         xs0.indices.map(j =>
           floor(col(s"__xm$j") * 1000000.0 + 0.5).cast("long")
             .as(s"__x$j"))): _*)
-      .localCheckpoint(eager = false) // two Grams + the ψ finale
+      .transform(CheckpointOps(_, eager = false)) // two Grams + the ψ finale
     val gramCols = (col("__y") +: (0 until d).map(j => col(s"__x$j")))
     val g1 = Regression.gramSums(
       base.filter(col("__t")).select(gramCols: _*), d)

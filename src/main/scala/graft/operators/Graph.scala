@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Link-graph centrality — the host/domain AUTHORITY signal web-corpus
   * curation ranks sources by (the public Common-Crawl-style recipe:
@@ -20,70 +21,14 @@ import org.apache.spark.sql.functions._
   * mass, and a nodes-sized checkpoint to truncate lineage (iterative
   * plans otherwise grow exponentially). Node count N is the single
   * driver-side scalar, computed once.
+  *
+  * Every truncation goes through [[CheckpointOps]], so durability is
+  * the session's `spark.graft.checkpointDir` choice. Edge tables that
+  * each round joins on a fixed key take a keyed checkpoint, which on a
+  * wide (cluster-scale) table declares its hash layout so the edges
+  * are not re-shuffled every round.
   */
 object Graph {
-
-  /** Per-run checkpoint strategy. Every iterative operator here
-    * truncates lineage once per round; HOW it truncates is a
-    * durability choice the caller makes via `checkpointDir`:
-    *
-    *  - `None` (default): `localCheckpoint` — executor-local blocks,
-    *    no extra I/O. Right for local runs and tests, but the blocks
-    *    are NON-REPLICATED executor state: on a real cluster, losing
-    *    one executor mid-run kills the job with no lineage left to
-    *    recompute from.
-    *  - `Some(dir)`: reliable `checkpoint` to `dir` (HDFS/object
-    *    store) — each round's state is written to durable storage, so
-    *    a 10-iteration PageRank over a 100 TB-derived host graph
-    *    survives executor loss. The state written per round is
-    *    nodes-sized (edges checkpoint once), so the extra I/O is small
-    *    relative to the edge joins.
-    *
-    * Returns a checkpoint strategy bound to the chosen durability; sets
-    * the SparkContext checkpoint dir once up front for the reliable
-    * path. */
-  private def ckptFn(df0: DataFrame, dir: Option[String]): Ckpt = {
-    // explicit param wins; else the session-wide switch
-    // ([[Checkpointing.ConfKey]]) selects durability
-    val resolved = dir.orElse(Checkpointing.configuredDir(df0))
-    resolved.foreach(df0.sparkSession.sparkContext.setCheckpointDir)
-    new Ckpt(resolved.isDefined)
-  }
-
-  /** The per-run checkpoint strategy [[ckptFn]] resolves. `apply` is
-    * the plain lineage truncation; [[keyed]] additionally pins and
-    * DECLARES a hash layout on `keys`
-    * ([[org.apache.spark.sql.graft.CheckpointOps]]) so that every
-    * later join/aggregate keyed on `keys` reads the checkpointed side
-    * in place instead of re-shuffling it — for the iterative loops
-    * here that is the difference between shuffling the edge table once
-    * (at the keyed checkpoint) and shuffling it once PER ITERATION
-    * (`localCheckpoint` under AQE comes back `UnknownPartitioning`, so
-    * `EnsureRequirements` re-exchanges it every round). */
-  private[graft] final class Ckpt(reliable: Boolean)
-      extends (Boolean => DataFrame => DataFrame) {
-    def apply(eager: Boolean): DataFrame => DataFrame = df =>
-      if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
-    // declareNarrow = false: the declared layout only pays when the
-    // data-derived width reaches the session parallelism (a 100 TB edge
-    // table on a cluster); below it, pinning every iteration's joins to
-    // a 2-partition layout measured 1.13–1.70× at bench scale — there
-    // the plain checkpoint + AQE-coalesced exchange is the faster plan
-    def keyed(eager: Boolean, keys: String*): DataFrame => DataFrame = {
-      require(eager, "keyed checkpoints are eager (size-adaptive layout)")
-      df => org.apache.spark.sql.graft.CheckpointOps
-        .checkpointHashPartitioned(df, keys, reliable,
-          declareNarrow = false)
-    }
-    /** [[keyed]] for loops that already hold (an upper bound on) the
-      * state's row count — sizes the layout from it and skips the
-      * sizing pass. */
-    def keyedSized(rowsUpperBound: Long, keys: String*)
-        : DataFrame => DataFrame =
-      df => org.apache.spark.sql.graft.CheckpointOps
-        .checkpointHashPartitionedSized(df, keys, reliable, rowsUpperBound,
-          declareNarrow = false)
-  }
 
   /** Standard damped PageRank with uniform dangling-mass redistribution:
     *
@@ -102,9 +47,9 @@ object Graph {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 10, damping: Double = 0.85,
-      roundTo: Int = 6, checkpointDir: Option[String] = None): DataFrame =
+      roundTo: Int = 6): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, iterations, damping, roundTo,
-      weightCol = None, teleportIds = None, checkpointDir)
+      weightCol = None, teleportIds = None)
 
   /** Weighted PageRank: parallel (src, dst) edges collapse by SUMMING
     * `weightCol` (a link count, a click volume), and each source
@@ -114,9 +59,9 @@ object Graph {
     * execution shape and dangling semantics as [[pageRank]]. */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iterations: Int = 10, damping: Double = 0.85,
-      roundTo: Int = 6, checkpointDir: Option[String] = None): DataFrame =
+      roundTo: Int = 6): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, iterations, damping, roundTo,
-      weightCol = Some(weightCol), teleportIds = None, checkpointDir)
+      weightCol = Some(weightCol), teleportIds = None)
 
   /** Personalized (topic-sensitive) PageRank: the random surfer
     * teleports UNIFORMLY OVER `seeds` instead of over all nodes, so
@@ -128,17 +73,15 @@ object Graph {
     * receive their teleport share. Scores sum to 1 over nodes ∪ seeds. */
   def pageRankPersonalized(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, iterations: Int = 10,
-      damping: Double = 0.85, roundTo: Int = 6,
-      checkpointDir: Option[String] = None): DataFrame =
+      damping: Double = 0.85, roundTo: Int = 6): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, iterations, damping, roundTo,
-      weightCol = None, teleportIds = Some(seeds), checkpointDir)
+      weightCol = None, teleportIds = Some(seeds))
 
   private def pageRankImpl(edges: DataFrame, srcCol: String,
       dstCol: String, iterations: Int, damping: Double, roundTo: Int,
-      weightCol: Option[String], teleportIds: Option[DataFrame],
-      checkpointDir: Option[String]): DataFrame = {
+      weightCol: Option[String], teleportIds: Option[DataFrame])
+      : DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    val ck = ckptFn(edges, checkpointDir)
     require(damping >= 0.0 && damping <= 1.0,
       s"damping in [0,1], got $damping")
     // weighted: parallel edges merge additively; unweighted: collapse.
@@ -162,7 +105,7 @@ object Graph {
       .map(s => graphNodes.union(
         s.select(s.columns.head).toDF("id")).distinct())
       .getOrElse(graphNodes)
-      .transform(ck(false))
+      .transform(CheckpointOps(_, eager = false))
     val n = nodes.count()
     require(n > 0, "pageRank needs a non-empty edge list")
     // teleport share per node: uniform 1/n, or 1/|seeds| on seeds and 0
@@ -171,7 +114,7 @@ object Graph {
     val withT = teleportIds match {
       case Some(s) =>
         val seedSet = s.select(s.columns.head).toDF("id").distinct()
-          .transform(ck(false))
+          .transform(CheckpointOps(_, eager = false))
         val k = seedSet.count()
         require(k > 0, "personalized pageRank needs at least one seed")
         nodes.join(seedSet.withColumn("__t", lit(1.0 / k)), Seq("id"), "left")
@@ -179,7 +122,7 @@ object Graph {
       case None => nodes.select(col("id"), lit(1.0 / n).as("__t"))
     }
     // read once, by the final rank join — lazy is strictly cheaper
-    val tNodes = withT.transform(ck(false))
+    val tNodes = withT.transform(CheckpointOps(_, eager = false))
     val outW = e.groupBy(col("src")).agg(sum(col("__w")).as("__deg"))
     // weight share AND the source's teleport share ride WITH each edge
     // so the per-iteration join touches only (edges ⋈ contrib) —
@@ -191,7 +134,7 @@ object Graph {
     // is loss-free.
     val eDeg = e.join(outW, "src")
       .join(withT.select(col("id").as("src"), col("__t")), Seq("src"))
-      .transform(ck.keyed(true, "src"))
+      .transform(CheckpointOps.keyed(_, Seq("src"), None))
 
     // The iteration state is the CONTRIBUTION table (in-degree-holders
     // only), not the nodes-wide rank table: rank(u) is recomputed
@@ -224,7 +167,7 @@ object Graph {
         .select(col("dst").as("id"),
           (col("rank") * col("__w") / col("__deg")).as("__c"))
         .groupBy(col("id")).agg(sum(col("__c")).as("__c"))
-        .transform(ck(false))
+        .transform(CheckpointOps(_, eager = false))
       // dangling mass by conservation: every non-sink distributes its
       // whole rank, so Σ contrib = 1 − (rank parked on sinks) — one
       // scalar over the already-aggregated contrib table instead of a
@@ -261,23 +204,21 @@ object Graph {
     * Returns (id, auth, hub) per node, rounded to `roundTo`; nodes with
     * no in-edges have auth 0, nodes with no out-edges hub 0. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 10, roundTo: Int = 6,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iterations: Int = 10, roundTo: Int = 6): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val ck = ckptFn(edges, checkpointDir)
     // the edge list is read keyed by src (auth step) AND by dst (hub
     // step) every iteration: pin BOTH layouts once so neither step
     // ever re-shuffles edges — only the nodes-sized score table moves
     val eSrc = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().transform(ck.keyed(true, "src"))
-    val eDst = eSrc.transform(ck.keyed(true, "dst"))
+      .distinct().transform(CheckpointOps.keyed(_, Seq("src"), None))
+    val eDst = eSrc.transform(CheckpointOps.keyed(_, Seq("dst"), None))
     // read by the two final score joins only — lazy: the first read
     // materializes, the second reads blocks
     val nodes = eSrc.select(col("src").as("id"))
       .union(eSrc.select(col("dst").as("id"))).distinct()
-      .transform(ck(false))
+      .transform(CheckpointOps(_, eager = false))
     // The iteration state is the RAW half-step aggregate (score-holding
     // nodes only), not the nodes-wide normalized table: a node absent
     // from aRaw/hRaw has score 0, and 0-valued rows are additive
@@ -305,7 +246,7 @@ object Graph {
       // each read re-runs the edge join
       val aRaw = withHub
         .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("__a"))
-        .transform(ck(false))
+        .transform(CheckpointOps(_, eager = false))
       val aNorm = aRaw.agg(sum(col("__a")).as("__s"))
       aState = Some((aRaw, aNorm))
       val hRaw = eDst
@@ -313,7 +254,7 @@ object Graph {
         .crossJoin(broadcast(aNorm))
         .withColumn("auth", col("__a") / col("__s"))
         .groupBy(col("src").as("id")).agg(sum(col("auth")).as("__h"))
-        .transform(ck(false))
+        .transform(CheckpointOps(_, eager = false))
       val hNorm = hRaw.agg(sum(col("__h")).as("__s"))
       hState = Some((hRaw, hNorm))
     }
@@ -354,11 +295,9 @@ object Graph {
     * round removes nothing — further rounds are no-ops, which is what
     * lets a fixed-unroll oracle reproduce the result exactly). */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxRounds: Int = 30, checkpointDir: Option[String] = None)
-      : DataFrame = {
+      maxRounds: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val ck = ckptFn(edges, checkpointDir)
     val und = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("a"), col(dstCol).as("b"))
@@ -368,7 +307,7 @@ object Graph {
     var e = und.union(und.select(col("b").as("a"), col("a").as("b")))
       .filter(col("a") =!= col("b")) // self-loops add no core support
       .distinct()
-      .transform(ck.keyed(true, "a"))
+      .transform(CheckpointOps.keyed(_, Seq("a"), None))
     var n = e.count()
     var rounds = 0
     var converged = n == 0L
@@ -381,7 +320,7 @@ object Graph {
         .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
         // the surviving set only shrinks: last round's count bounds it
-        .transform(ck.keyedSized(n, "a"))
+        .transform(CheckpointOps.keyed(_, Seq("a"), Some(n)))
       val m = pruned.count()
       converged = m == n || m == 0 // empty is trivially the fixpoint
       e = pruned; n = m; rounds += 1
@@ -476,10 +415,8 @@ object Graph {
     * Returns (id, component) for every node with at least one edge,
     * `component` = the smallest node id in the component. */
   def connectedComponents(edges: DataFrame, srcCol: String,
-      dstCol: String, maxRounds: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dstCol: String, maxRounds: Int = 20): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val ck = ckptFn(edges, checkpointDir)
     val und = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("a"), col(dstCol).as("b"))
@@ -488,7 +425,7 @@ object Graph {
     // materialization here was one whole extra job for nothing
     val nodes = und.select(col("a").as("id"))
       .union(und.select(col("b").as("id"))).distinct()
-      .transform(ck(false))
+      .transform(CheckpointOps(_, eager = false))
     // m(u) = min(Γ(u) ∪ {u}) from the both-directions view
     def gamma(pairs: DataFrame): DataFrame =
       pairs.union(pairs.select(col("b").as("a"), col("a").as("b")))
@@ -539,17 +476,14 @@ object Graph {
     var p = und
       .select(greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
-      .distinct().transform(ck(false))
+      .distinct().transform(CheckpointOps(_, eager = false))
     var pCount = p.count()
     var rounds = 0
     var converged = pCount == 0L
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && rounds < maxRounds) {
-      val __t0 = System.nanoTime()
-      val next = smallStar(largeStar(p)).transform(ck(false))
+      val next = smallStar(largeStar(p))
+        .transform(CheckpointOps(_, eager = false))
       val nCount = next.count()
-      if (dbg) System.err.println(f"[cc] round $rounds: $pCount -> " +
-        f"$nCount pairs, ${(System.nanoTime() - __t0) / 1e9}%.2f s")
       // Convergence, checked only on count-stable rounds (counts
       // stabilize before content at the tail, so this guard is free):
       // 1. STAR CHECK (r16): the canonical pair set is a disjoint
@@ -608,16 +542,14 @@ object Graph {
     * dedup family. The returned labels feed the next increment. */
   def connectedComponentsIncrement(labels: DataFrame,
       deltaEdges: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 20, checkpointDir: Option[String] = None)
-      : DataFrame = {
+      maxRounds: Int = 20): DataFrame = {
     require(labels.columns.length >= 2,
       "labels must be the (id, component) table connectedComponents returns")
     val star = labels.select(col(labels.columns.head).as("src"),
       col(labels.columns(1)).as("dst"))
     val delta = deltaEdges.select(col(srcCol).as("src"),
       col(dstCol).as("dst"))
-    connectedComponents(star.union(delta), "src", "dst", maxRounds,
-      checkpointDir)
+    connectedComponents(star.union(delta), "src", "dst", maxRounds)
   }
 
   /** Degree assortativity (Newman's r): the Pearson correlation of the
@@ -676,15 +608,14 @@ object Graph {
     * Frontier-expansion shape: per hop ONE edges⋈frontier join, a
     * distinct, and an anti-join against the settled set — each keyed by
     * node id; the settled table is nodes-sized and checkpointed per
-    * round ([[Checkpointing]] semantics: local by default, durable via
-    * `checkpointDir` or the session conf). The only driver traffic is
+    * round ([[CheckpointOps]]: local by default, durable under the
+    * session conf). The only driver traffic is
     * the per-round frontier count for early exit, so a saturated graph
     * stops paying for the remaining hops. */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, maxHops: Int, directed: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      seeds: DataFrame, maxHops: Int, directed: Boolean = true)
+      : DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val ck = ckptFn(edges, checkpointDir)
     val valid = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -694,13 +625,13 @@ object Graph {
     // keyed by src: every hop's frontier join reads the edge table in
     // place; only the (tiny) frontier is exchanged per hop
     val e = sym.filter(col("src") =!= col("dst")).distinct()
-      .transform(ck.keyed(true, "src"))
+      .transform(CheckpointOps.keyed(_, Seq("src"), None))
     // lazy checkpoints: the per-hop count materializes the frontier in
     // the same job, and the dist union materializes inside its next
     // reader — one job per hop instead of three (r16)
     var dist = seeds.select(col(seeds.columns.head).as("id")).distinct()
       .withColumn("hops", lit(0))
-      .transform(ck(false))
+      .transform(CheckpointOps(_, eager = false))
     var frontier = dist.select(col("id"))
     var hop = 0
     var exhausted = false
@@ -710,10 +641,10 @@ object Graph {
         .select(col("dst").as("id")).distinct()
         .join(dist.select(col("id")), Seq("id"), "left_anti")
         .withColumn("hops", lit(hop))
-        .transform(ck(false))
+        .transform(CheckpointOps(_, eager = false))
       if (next.count() == 0L) exhausted = true
       else {
-        dist = dist.union(next).transform(ck(false))
+        dist = dist.union(next).transform(CheckpointOps(_, eager = false))
         frontier = next.select(col("id"))
       }
     }
@@ -739,13 +670,12 @@ object Graph {
     *
     * Scale: per hop ONE join frontier⋈edges + an anti-join against the
     * seen set — state is (nodes × landmarks)-sized, bounded by the
-    * landmark budget, and checkpointed per round ([[ckptFn]]'s
+    * landmark budget, and checkpointed per round ([[CheckpointOps]]'s
     * durability contract). */
   def harmonicCentrality(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, maxHops: Int, directed: Boolean = false,
-      checkpointDir: Option[String] = None): DataFrame = {
+      seeds: DataFrame, maxHops: Int, directed: Boolean = false)
+      : DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val ck = ckptFn(edges, checkpointDir)
     val valid = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -754,11 +684,11 @@ object Graph {
         col("src").as("dst")))
     // keyed by src — same layout contract as [[bfsHops]]
     val e = sym.filter(col("src") =!= col("dst")).distinct()
-      .transform(ck.keyed(true, "src"))
+      .transform(CheckpointOps.keyed(_, Seq("src"), None))
     // lazy checkpoints — same one-job-per-hop shape as [[bfsHops]]
     var dist = seeds.select(col(seeds.columns.head).as("id")).distinct()
       .select(col("id"), col("id").as("seed"), lit(0).as("hops"))
-      .transform(ck(false))
+      .transform(CheckpointOps(_, eager = false))
     var frontier = dist.select(col("id"), col("seed"))
     var hop = 0
     var exhausted = false
@@ -772,10 +702,10 @@ object Graph {
         .join(dist.select(col("id"), col("seed")), Seq("id", "seed"),
           "left_anti")
         .withColumn("hops", lit(hop))
-        .transform(ck(false))
+        .transform(CheckpointOps(_, eager = false))
       if (next.count() == 0L) exhausted = true
       else {
-        dist = dist.union(next).transform(ck(false))
+        dist = dist.union(next).transform(CheckpointOps(_, eager = false))
         frontier = next.select(col("id"), col("seed"))
       }
     }
@@ -830,7 +760,7 @@ object Graph {
     val e = und.union(und.select(col("b").as("a"), col("a").as("b")))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint(eager = false) // degrees, wedges, adjacency
+      .transform(CheckpointOps(_, eager = false)) // degrees, wedges, adjacency
     val deg = e.groupBy(col("a").as("v")).agg(count(lit(1)).as("__dv"))
     val d18 = "decimal(28,18)"
     val spark = edges.sparkSession
@@ -887,17 +817,15 @@ object Graph {
     * Per round: ONE edges⋈frontier join + a dst-keyed min aggregate
     * (map-side combinable) + one improvement anti-semi pass against the
     * nodes-sized settled table, which is checkpointed per round
-    * ([[Checkpointing]]: local by default, durable via `checkpointDir`
-    * or the session conf). Driver traffic is one improved-count scalar
+    * ([[CheckpointOps]]: local by default, durable under the session
+    * conf). Driver traffic is one improved-count scalar
     * per round, so a converged graph stops paying for remaining hops —
     * early exit is a no-op semantically because an unimproved round
     * leaves the fixpoint unchanged. */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, seeds: DataFrame, maxHops: Int,
-      directed: Boolean = true, checkpointDir: Option[String] = None)
-      : DataFrame = {
+      directed: Boolean = true): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val ck = ckptFn(edges, checkpointDir)
     val valid = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
         col(weightCol).isNotNull && col(weightCol) >= 0)
@@ -909,11 +837,11 @@ object Graph {
     // keyed by src — same layout contract as [[bfsHops]]
     val e = sym.filter(col("src") =!= col("dst"))
       .groupBy(col("src"), col("dst")).agg(min(col("__w")).as("__w"))
-      .transform(ck.keyed(true, "src"))
+      .transform(CheckpointOps.keyed(_, Seq("src"), None))
     // lazy checkpoints — same one-job-per-round shape as [[bfsHops]]
     var dist = seeds.select(col(seeds.columns.head).as("id")).distinct()
       .withColumn("dist", lit(0L))
-      .transform(ck(false))
+      .transform(CheckpointOps(_, eager = false))
     var frontier = dist
     var hop = 0
     var converged = false
@@ -928,14 +856,14 @@ object Graph {
           Seq("id"), "left")
         .filter(col("__old").isNull || col("dist") < col("__old"))
         .select(col("id"), col("dist"))
-        .transform(ck(false))
+        .transform(CheckpointOps(_, eager = false))
       if (improved.count() == 0L) converged = true
       else {
         // min(old, improved) — improved rows are strictly smaller, so
         // the union-min rewrites exactly the improved ids
         dist = dist.union(improved)
           .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-          .transform(ck(false))
+          .transform(CheckpointOps(_, eager = false))
         frontier = improved
       }
     }
@@ -959,10 +887,8 @@ object Graph {
     * Returns (id, label) with communities named by their smallest
     * member label. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 5, checkpointDir: Option[String] = None)
-      : DataFrame = {
+      iterations: Int = 5): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val ck = ckptFn(edges, checkpointDir)
     val und = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("a"), col(dstCol).as("b"))
@@ -971,12 +897,13 @@ object Graph {
     val e = und.union(und.select(col("b").as("a"), col("a").as("b")))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .transform(ck.keyed(true, "b")) // reused every round, fixed lineage
+      // reused every round, fixed lineage
+      .transform(CheckpointOps.keyed(_, Seq("b"), None))
     // lazy: each round's labels are read once (by the next round) —
     // the truncated plan is what matters, not an eager materialization
     var labels = e.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-      .transform(ck(false))
+      .transform(CheckpointOps(_, eager = false))
     val w = Window.partitionBy(col("id"))
       .orderBy(col("__n").desc, col("label").asc)
     for (_ <- 1 to iterations) {
@@ -987,7 +914,7 @@ object Graph {
         .withColumn("__r", row_number().over(w))
         .filter(col("__r") === 1)
         .select(col("id"), col("label"))
-        .transform(ck(false))
+        .transform(CheckpointOps(_, eager = false))
     }
     labels
   }
@@ -1019,7 +946,7 @@ object Graph {
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .distinct()
-      .localCheckpoint(eager = false) // m + degrees + intra count
+      .transform(CheckpointOps(_, eager = false)) // m + degrees + intra count
     val lab = labels.select(col("id"), col("label"))
     val deg = und.select(col("a").as("id"))
       .unionAll(und.select(col("b").as("id")))
@@ -1071,7 +998,7 @@ object Graph {
         col(srcCol) =!= col(dstCol))
       .select(col(srcCol).as("a"), col(dstCol).as("b"))
       .distinct()
-      .localCheckpoint(eager = false) // count + both join sides
+      .transform(CheckpointOps(_, eager = false)) // count + both join sides
     val recip = e.as("x")
       .join(e.as("y"), col("x.a") === col("y.b") && col("x.b") === col("y.a"),
         "left_semi")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** N-gram language-model training and perplexity scoring — the CCNet-style
   * quality filter (Wenzek et al. 2020): score each document by the
@@ -97,10 +98,10 @@ object LanguageModel {
     // both model-sized tables feed two consumers each (totals + the
     // scoring joins) — truncate lineage so each corpus count runs once
     val bi = ngramCounts(df, textCol, 2).withColumnRenamed("n", "c_ab")
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     val uni = df.select(explode(tokensOf(col(textCol))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     // totals BEFORE the minCount filter: probabilities are over the whole
     // corpus, not the surviving pairs
     val totals = bi.agg(sum(col("c_ab")).as("n_bi"))
@@ -146,7 +147,7 @@ object LanguageModel {
     val d19 = "decimal(19,0)"
     def dbl(c: Column): Column = c.cast("string").cast("double")
     val bi = ngramCounts(df, textCol, 2).withColumnRenamed("n", "c_ab")
-      .localCheckpoint(eager = false) // marginals + total + scoring
+      .transform(CheckpointOps(_, eager = false)) // marginals + total + scoring
     val rowM = bi.groupBy(col("ctx")).agg(sum(col("c_ab")).as("__r1"))
     val colM = bi.groupBy(col("word")).agg(sum(col("c_ab")).as("__c1"))
     val tot = bi.agg(sum(col("c_ab")).cast(d19).as("__nn"))
@@ -194,7 +195,8 @@ object LanguageModel {
       alpha: Double = 0.1, backoff: Option[Double] = None): NgramLm = {
     val counts = ngramCounts(df, textCol, n)
       .withColumnRenamed("n", "c")
-      .localCheckpoint(eager = false) // model-sized; feeds three consumers
+      // model-sized; feeds three consumers
+      .transform(CheckpointOps(_, eager = false))
     val vocab = counts.select(col("word")).distinct().count()
     val ctxTotals = counts.groupBy(col("ctx"))
       .agg(sum(col("c")).as("c_ctx"))
@@ -269,7 +271,7 @@ object LanguageModel {
     // Feeds the cut fit and the keep-filter — checkpoint once
     // (doc-id + 3 doubles per doc, not the corpus text).
     val scoredAll = perplexity(target, lm, idCol, textCol)
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     val cutRow = scoredAll.filter(col("perplexity").isNotNull)
       .agg(expr(s"approx_percentile(perplexity, $keepQuantile)"))
       .head()

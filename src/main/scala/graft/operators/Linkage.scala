@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Record-linkage / entity-resolution blocking: candidate-pair
   * generation without the O(n²) cross join. The reference stops at
@@ -94,7 +95,8 @@ object Linkage {
       .select(col(idCol).as("__id"), sortKey.as("__key"))
       .repartitionByRange(buckets, col("__key"), col("__id"))
       .withColumn("__b", spark_partition_id())
-      .localCheckpoint(eager = false) // bucket ids must not re-randomize
+      // bucket ids must not re-randomize
+      .transform(CheckpointOps(_, eager = false))
     val wB = Window.partitionBy(col("__b"))
       .orderBy(col("__key"), col("__id"))
     val ranked = ranged.withColumn("__r", row_number().over(wB))
@@ -119,7 +121,7 @@ object Linkage {
       .filter(col("__r") <= neighborhood ||
         col("__r") > col("__n") - neighborhood)
       .select(col("__b"), col("__id"), (col("__off") + col("__r")).as("__g"))
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     val cross = sliver.as("a").join(sliver.as("b"),
         col("b.__g") > col("a.__g") &&
           col("b.__g") <= col("a.__g") + neighborhood &&
@@ -200,7 +202,8 @@ object Linkage {
     val ranged = df
       .repartitionByRange(buckets, sortKey, col(idCol))
       .withColumn("__b", spark_partition_id())
-      .localCheckpoint(eager = false) // bucket ids must not re-randomize
+      // bucket ids must not re-randomize
+      .transform(CheckpointOps(_, eager = false))
     val wB = Window.partitionBy(col("__b"))
       .orderBy(sortKey, col(idCol))
     val offsets = ranged.groupBy(col("__b")).agg(count(lit(1)).as("__n"))
@@ -238,7 +241,7 @@ object Linkage {
     require(n >= 2, s"need at least 2 rows to sample negatives, got $n")
     // one distributed-sort pass feeds both sides of the position join
     val ranks = globalRank(df.select(col(idCol)), idCol, col(idCol),
-      buckets).localCheckpoint(eager = false)
+      buckets).transform(CheckpointOps(_, eager = false))
     val idx = ranks.select(col(idCol).as("neg"), col("grank"))
     val anchors = ranks
       .select(col(idCol).as("anchor"), col("grank").as("__ga"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Multi-feature ordinary least squares over a DataFrame — the missing
   * step between the per-series single-feature trend
@@ -163,7 +164,7 @@ object Regression {
       // plain checkpoint freezes an AQE-coalesced (1-partition) layout
       // and runs them single-threaded — exact decimal moments, so the
       // layout cannot change results
-      .transform(org.apache.spark.sql.graft.CheckpointOps.checkpointSpread)
+      .transform(CheckpointOps.spread)
     val counts = base.agg(count(lit(1)).as("n"),
       sum(col("__y")).as("sy")).collect()(0)
     val n = counts.getLong(0)
@@ -375,7 +376,7 @@ object Regression {
           floor(col(s"__xm$j") * 1000000.0 + 0.5).cast("long")
             .as(s"__x$j"))): _*)
       // spread checkpoint (see poissonFit): two Gram passes read this
-      .transform(org.apache.spark.sql.graft.CheckpointOps.checkpointSpread)
+      .transform(CheckpointOps.spread)
     val gMain = gramSums(base, d)
     val schema = StructType(Seq(
       StructField("n", LongType, nullable = false),
@@ -473,7 +474,7 @@ object Regression {
       .select(col("__bucket"),
         col("__xv").cast("string").cast("double").as("__x"),
         col("__yv").cast("string").cast("double").as("__y"))
-      .localCheckpoint(eager = false) // self-joined once per lag
+      .transform(CheckpointOps(_, eager = false)) // self-joined once per lag
     val lagged = (1 to maxLag).foldLeft(
       days.select(col("__bucket"), col("__x").as("__ym"))) { (acc, j) =>
         acc.join(days.select(
@@ -488,7 +489,7 @@ object Regression {
       (quant(col("__ym")).as("__y") +:
         ((0 until L).map(j => quant(col(s"__xlm$j")).as(s"__x$j")) ++
          (0 until L).map(j => quant(col(s"__ylm$j")).as(s"__x${L + j}")))): _*)
-      .localCheckpoint(eager = false) // two Gram aggregates
+      .transform(CheckpointOps(_, eager = false)) // two Gram aggregates
     val gFull = gramSums(full, 2 * L)
     val gRestr = gramSums(
       full.select((col("__y") +: (0 until L).map(j => col(s"__x$j"))): _*),

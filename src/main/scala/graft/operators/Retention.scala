@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Cohort retention analysis — the companion question to [[Funnel]]:
   * "of the entities whose FIRST activity fell in period P, how many were
@@ -36,7 +37,7 @@ object Retention {
     val firsts = events
       .groupBy(col(entity))
       .agg(min(date_trunc(period, col(ts))).as("cohort"))
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     val active = events
       .select(col(entity), date_trunc(period, col(ts)).as("p"))
       .distinct()
@@ -142,7 +143,8 @@ object Retention {
       .select(col("user_id"),
         expr("(__cm - __last) div 86400000000").as("recency_days"),
         col("frequency"), col("__m").cast("double").as("monetary"))
-      .localCheckpoint(eager = false) // three rank passes + final join
+      // three rank passes + final join
+      .transform(CheckpointOps(_, eager = false))
     val n = base.count()
     def tiled(out: String, key: Column): DataFrame =
       Linkage.globalRank(base.select(col("user_id"), key.as("__k")),
@@ -183,7 +185,7 @@ object Retention {
     val firsts = events
       .groupBy(col(entity))
       .agg(min(date_trunc(period, col(ts))).as("cohort"))
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     val rev = events
       .select(col(entity), date_trunc(period, col(ts)).as("p"),
         valueCents.cast("long").as("__v"))

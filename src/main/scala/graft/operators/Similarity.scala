@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 import graft.functions.VectorFunctions._
 import Dedup.hyperplaneBucket
@@ -363,7 +364,8 @@ object Similarity {
     val fraction = math.min(1.0, fitSampleRows.toDouble / math.max(n, 1L))
     val sample = embDf.select(col(embCol).as("e"))
       .sample(withReplacement = false, fraction, seed = 42)
-      .localCheckpoint(eager = true) // bounded rows; read once, fit m times
+      // bounded rows; read once, fit m times
+      .transform(CheckpointOps(_, eager = true))
     pqFitFromSample(sample, m, codebookSize)
   }
 
@@ -406,7 +408,7 @@ object Similarity {
     val fraction = math.min(1.0, fitSampleRows.toDouble / math.max(n, 1L))
     val sample = embDf.select(col(embCol).as("e"))
       .sample(withReplacement = false, fraction, seed = 42)
-      .localCheckpoint(eager = true)
+      .transform(CheckpointOps(_, eager = true))
     val centers = new KMeans().setK(nlist).setSeed(42).setMaxIter(8)
       .setInitMode("random")
       .fit(sample.select(array_to_vector(col("e")).as("features")))
@@ -562,7 +564,8 @@ object Similarity {
     val sample = embDf
       .select(array_to_vector(col(embCol).cast("array<double>")).as("features"))
       .sample(withReplacement = false, fraction, seed = 42)
-      .localCheckpoint() // fit + mean read the SAME sample once
+      // fit + mean read the SAME sample once
+      .transform(CheckpointOps(_, eager = true))
     val mean = sample.select(Summarizer.mean(col("features")))
       .head().getAs[org.apache.spark.ml.linalg.Vector](0).toArray.toSeq
     val fitted = new MlPca().setK(outDim)
@@ -799,7 +802,8 @@ object Similarity {
       .filter(col(idCol).isNotNull && col(embCol).isNotNull)
       .select(col(idCol).as("__id"),
         col(embCol).cast("array<double>").as("__emb"))
-      .localCheckpoint(eager = false) // scanned once per Lloyd round
+      // scanned once per Lloyd round
+      .transform(CheckpointOps(_, eager = false))
     // seeded order-statistic init: k distinct-hash rows, ties broken by
     // id — one TakeOrderedAndProject, never a full sort
     val init = base
@@ -961,7 +965,8 @@ object Similarity {
         col("__y").isNotNull)
       .withColumn("__cx", fdiv(col("__x")).cast("long"))
       .withColumn("__cy", fdiv(col("__y")).cast("long"))
-      .localCheckpoint(eager = false) // both join sides + the finale
+      // both join sides + the finale
+      .transform(CheckpointOps(_, eager = false))
     // in-plan density guard: any cell past the cap refuses BEFORE the
     // 3×3 join can form a quadratic pair set — the error expression
     // rides the join key itself (the powerMde pattern), so column
@@ -1020,7 +1025,8 @@ object Similarity {
     val pairs = lhs.join(rhs, Seq("__cx", "__cy"))
       .filter(within)
       .select(col("__id"), col("__jd"))
-      .localCheckpoint(eager = false) // counts, edges, border attach
+      // counts, edges, border attach
+      .transform(CheckpointOps(_, eager = false))
     val counts = pairs.groupBy(col("__id"))
       .agg(count(lit(1)).as("__deg")) // self-pair included (textbook)
     // the small derived tables checkpoint too: nodes, the initial pair
@@ -1030,20 +1036,22 @@ object Similarity {
     // identical work — guide §1.1's "decide where the time is going")
     val flagged = counts
       .select(col("__id"), (col("__deg") >= minPts).as("__core"))
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     // core-core edges → components; isolated cores label as themselves
     val coreIds = flagged.filter(col("__core")).select(col("__id"))
     val edges = pairs
       .join(coreIds, "__id")
       .join(coreIds.select(col("__id").as("__jd")), "__jd")
       .filter(col("__id") < col("__jd"))
-      .localCheckpoint(eager = false) // CC reads it twice (nodes + p)
+      // CC reads it twice (nodes + p)
+      .transform(CheckpointOps(_, eager = false))
     val comp = Graph.connectedComponents(edges, "__id", "__jd")
       .select(col("id").as("__id"), col("component").as("__cl"))
     val coreLbl = coreIds.join(comp, Seq("__id"), "left")
       .select(col("__id"), coalesce(col("__cl"), col("__id"))
         .as("__cluster"))
-      .localCheckpoint(eager = false) // border attach + the label union
+      // border attach + the label union
+      .transform(CheckpointOps(_, eager = false))
     // border: non-core attaches to its MIN core neighbor's cluster
     val borderLbl = pairs
       .join(flagged.filter(!col("__core")).select(col("__id")), "__id")

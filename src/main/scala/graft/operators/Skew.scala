@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Skew mitigation for joins/aggregations whose key distribution breaks the
   * one-shuffle-partition-per-key assumption at scale.
@@ -116,7 +117,7 @@ object Skew {
     // summary and the top-N consume it, so truncate the lineage (lazy:
     // materializes on first use) instead of scanning twice
     val counts = df.groupBy(key.as("key")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     val summary = counts.agg(
       count(lit(1)).as("distinct_keys"),
       sum(col("cnt")).as("total_rows"),
@@ -167,7 +168,8 @@ object Skew {
     val ranged = items
       .repartitionByRange(buckets, col("__v").desc, col("__id"))
       .withColumn("__b", spark_partition_id())
-      .localCheckpoint(eager = false) // bucket ids must not re-randomize
+      // bucket ids must not re-randomize
+      .transform(CheckpointOps(_, eager = false))
     val wB = Window.partitionBy(col("__b"))
       .orderBy(col("__v").desc, col("__id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -508,7 +510,7 @@ object Skew {
         (col("left_rows").cast("decimal(19,0)") *
           col("right_rows").cast("decimal(19,0)"))
           .cast("decimal(38,0)").as("__out"))
-      .localCheckpoint(eager = false) // total + top-k
+      .transform(CheckpointOps(_, eager = false)) // total + top-k
     val tot = contrib.agg(coalesce(sum(col("__out")),
       lit(0).cast("decimal(38,0)")).cast("decimal(38,0)").as("__tot"))
     contrib.crossJoin(broadcast(tot))

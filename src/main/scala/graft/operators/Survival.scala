@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Time-to-event (survival) estimation over subject tables — the
   * churn/retention companion of [[Retention]] and [[Funnel]]: those
@@ -223,7 +224,7 @@ object Survival {
       // join, and every Newton iteration's exp + quantized-moment pass
       // — the fit's dominant per-row work — runs single-threaded. The
       // moments are exact decimals, so the layout cannot change them.
-      .transform(org.apache.spark.sql.graft.CheckpointOps.checkpointSpread)
+      .transform(CheckpointOps.spread)
     val counts = base.agg(count(lit(1)).as("n"),
       sum(when(col("__e"), 1L).otherwise(0L)).as("ne")).collect()(0)
     val (n, nEvents) = (counts.getLong(0), counts.getLong(1))
@@ -324,10 +325,7 @@ object Survival {
         (for (j <- 0 until d; k <- j until d) yield
           qf(deD * (s2(j, k) / s0 - (s1(j) / s0) * (s1(k) / s0)))
             .as(s"__h_${j}_$k"))
-      val __t0 = System.nanoTime()
       val row = cum.agg(folds.head, folds.tail: _*).collect()(0)
-      if (sys.env.contains("GRAFT_COX_DEBUG"))
-        System.err.println(f"[cox] iter $it: ${(System.nanoTime() - __t0) / 1e9}%.2f s")
       def v(name: String): Double = {
         val x = row.get(row.fieldIndex(name))
         if (x == null) 0.0

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Text-analysis operators for large-scale document pipelines.
   *
@@ -738,7 +739,7 @@ object TextAnalysis {
       .filter(col("__t") =!= "")
       .groupBy(col("__s"), col("__t"))
       .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(eager = false) // totals + the pair join
+      .transform(CheckpointOps(_, eager = false)) // totals + the pair join
     val tot = posts.groupBy(col("__s")).agg(sum(col("__n")).as("__N"))
     val ln2 = log(lit(2.0))
     val pairs = posts.as("a")
@@ -801,7 +802,8 @@ object TextAnalysis {
       .select(col("id"),
         explode(LanguageModel.ngrams(col("__toks"), n)).as("__g"))
       .select(col("id"), key(concat_ws(" ", fields: _*)).as("__k"))
-      .localCheckpoint(eager = false) // df aggregate + the join back
+      // df aggregate + the join back
+      .transform(CheckpointOps(_, eager = false))
     val docFreq = occ.distinct()
       .groupBy(col("__k")).agg(count(lit(1)).as("__df"))
     val counted = occ.join(docFreq, Seq("__k"))
@@ -845,7 +847,8 @@ object TextAnalysis {
       .filter(col("term") =!= "")
       .groupBy(col("id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false) // df-count side + the score join
+      // df-count side + the score join
+      .transform(CheckpointOps(_, eager = false))
     val docFreq = tf.groupBy(col("term"))
       .agg(count(lit(1)).as("df"))
     val total = df.agg(count(lit(1)).as("__n"))
@@ -1102,7 +1105,8 @@ object TextAnalysis {
         explode(split(col(textCol), " ")).as("token"))
       .filter(col("token") =!= "")
       .distinct()
-      .localCheckpoint(eager = false) // sizes + both sides of pair join
+      // sizes + both sides of pair join
+      .transform(CheckpointOps(_, eager = false))
     val sizes = toks.groupBy(col("g")).agg(count(lit(1)).as("n"))
     toks.as("a")
       .join(toks.as("b"),
@@ -1209,7 +1213,7 @@ object TextAnalysis {
       .groupBy(col("phrase")).agg(count(lit(1)).as("n"))
       .withColumn("__words", split(col("phrase"), " "))
       .withColumn("__len", size(col("__words")))
-      .localCheckpoint(eager = false) // word stats + score join
+      .transform(CheckpointOps(_, eager = false)) // word stats + score join
     val wordStats = phraseTable
       .select(explode(col("__words")).as("__w"), col("n"), col("__len"))
       .groupBy(col("__w"))

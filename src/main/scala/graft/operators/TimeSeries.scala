@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Time-series regularization — the densifying step [[Anomaly]] and any
   * dashboard rollup sit on: raw event buckets SKIP empty periods, so a
@@ -35,7 +36,8 @@ object TimeSeries {
       .groupBy(col(seriesCol).as("series"),
         date_trunc(bucket, col(tsCol)).as("bucket"))
       .agg(count(lit(1)).as("__n"), valueAgg.as("__v"))
-      .localCheckpoint(eager = false) // calendar spans + the fill join
+      // calendar spans + the fill join
+      .transform(CheckpointOps(_, eager = false))
     val calendar = agg
       .groupBy(col("series"))
       .agg(min(col("bucket")).as("__lo"), max(col("bucket")).as("__hi"))
@@ -137,7 +139,8 @@ object TimeSeries {
         to_date(date_trunc("day", col(tsCol))).as("bucket"))
       .agg(NativeFunctions
         .thetaSketchAgg(col(idCol).cast("string")).as("__sk"))
-      .localCheckpoint(eager = false) // both sides of the range join
+      // both sides of the range join
+      .transform(CheckpointOps(_, eager = false))
     val anchors = daily.select(col("series"), col("bucket"))
     anchors.as("a")
       .join(daily.as("b"),
@@ -182,7 +185,7 @@ object TimeSeries {
         to_date(date_trunc("day", col(tsCol))).as("bucket"))
       .agg(NativeFunctions
         .kllSketchAgg(value.cast("double"), k).as("__sk"))
-      .localCheckpoint(eager = false)
+      .transform(CheckpointOps(_, eager = false))
     val anchors = daily.select(col("series"), col("bucket"))
     val folded = anchors.as("a")
       .join(daily.as("b"),
@@ -239,7 +242,8 @@ object TimeSeries {
       .withColumn("__det",
         floor((col("__v").cast("double") - col("trend")) * lit(1000000.0)
           + lit(0.5)).cast("long"))
-      .localCheckpoint(eager = false) // seasonal means + the final join
+      // seasonal means + the final join
+      .transform(CheckpointOps(_, eager = false))
     val slot = pmod(datediff(col("bucket"), lit("1970-01-01")) + 4, lit(7))
     val seasonal = trended
       .withColumn("__slot", slot)
@@ -719,7 +723,7 @@ object TimeSeries {
       .select(col("series"),
         datediff(col("__d"), col("__f")).cast("long").as("__x"),
         col("__y"))
-      .localCheckpoint(eager = false) // moments + residual pass
+      .transform(CheckpointOps(_, eager = false)) // moments + residual pass
     val d19 = "decimal(19,0)"
     val moments = pts.groupBy(col("series")).agg(
       count(lit(1)).as("__n"),
@@ -788,7 +792,7 @@ object TimeSeries {
         date_trunc("day", col(tsCol)).cast("date").as("bucket"))
       .agg(sum(value.cast("decimal(28,6)")).cast("decimal(16,6)")
         .as("v"))
-      .localCheckpoint(eager = false) // both sides of the pair join
+      .transform(CheckpointOps(_, eager = false)) // both sides of the pair join
     val pairs = dly.as("i")
       .join(dly.as("j"),
         col("i.series") === col("j.series") &&
@@ -963,7 +967,8 @@ object TimeSeries {
         date_trunc("day", col(tsCol)).cast("date").as("bucket"))
       .agg(sum(value.cast("decimal(28,6)")).cast("decimal(16,6)")
         .as("v"))
-      .localCheckpoint(eager = false) // pair join sides + the tie pass
+      // pair join sides + the tie pass
+      .transform(CheckpointOps(_, eager = false))
     val s = dly.as("i")
       .join(dly.as("j"),
         col("i.series") === col("j.series") &&
@@ -1156,7 +1161,7 @@ object TimeSeries {
       .withColumn("interval_days",
         datediff(col("bucket"), lag(col("bucket"), 1).over(w))
           .cast("decimal(16,6)"))
-      .localCheckpoint(eager = false) // two weighted lag stacks
+      .transform(CheckpointOps(_, eager = false)) // two weighted lag stacks
     def treeSum(cols: Seq[Column]): Column =
       if (cols.sizeIs == 1) cols.head
       else treeSum(cols.grouped(2).map(_.reduce(_ + _)).toSeq)

@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graft.CheckpointOps
 
 import graft.operators.{Dedup, TextAnalysis}
 import graft.sources.PartitionedWrite
@@ -487,7 +488,7 @@ object TrainingDataPipeline {
     // shuffles/minhash kernels never re-run for the audit
     val exactLosersDf = dropLedger.map { _ =>
       Dedup.exactLosers(clean, "doc_id", Seq("text"))
-        .select(col("doc_id")).localCheckpoint(eager = false)
+        .select(col("doc_id")).transform(CheckpointOps(_, eager = false))
     }
     val exact = exactLosersDf
       .map(l => clean.join(l, Seq("doc_id"), "left_anti"))
@@ -499,7 +500,8 @@ object TrainingDataPipeline {
       Dedup.dupClusters(Dedup.minhashNearDups(exact, "doc_id", "text",
           shingleK = cfg.shingleK, threshold = cfg.nearDupThreshold))
         .filter(col("id") =!= col("cluster_id"))
-        .select(col("id").as("doc_id")).localCheckpoint(eager = false)
+        .select(col("id").as("doc_id"))
+        .transform(CheckpointOps(_, eager = false))
     }
     val nearDeduped = nearLosersDf
       .map(l => exact.join(l, Seq("doc_id"), "left_anti"))
@@ -566,7 +568,7 @@ object TrainingDataPipeline {
       // Observation (see the plumbing note) — turning the union's plan
       // into a union of LogicalRDD stubs; each branch's (single-prefix)
       // plan is planned on its own instead of inside one giant tree
-      val all = ledgerBuf.map(_.localCheckpoint(eager = false))
+      val all = ledgerBuf.map(CheckpointOps(_, eager = false))
         .reduce(_ unionByName _)
       val rows =
         if (dl.sampleMod > 1L)

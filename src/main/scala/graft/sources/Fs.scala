@@ -117,7 +117,7 @@ object Fs {
     * delete-then-rename, so a concurrent reader may briefly see the file
     * MISSING (never torn). Use only where a missing-file read degrades
     * gracefully (e.g. the stats file → estimate fallback); durable
-    * last-value state uses the backup-chain protocol in `Checkpoints`. */
+    * last-value state uses the backup-chain protocol in `OffsetMarks`. */
   def renameOverwrite(src: Path, dst: Path): Unit = {
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(src.toUri, conf())
     fc.rename(src, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)

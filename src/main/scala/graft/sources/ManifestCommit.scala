@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * partition→generation map; readers resolve ONLY through the latest
   * pointer, never by listing data paths. The same protocol family as
   * the streaming LSM segment log (`MicroBatch.foldSegments`) and the
-  * `Checkpoints` generation marks, applied to table writes — and the
+  * `OffsetMarks` generation marks, applied to table writes — and the
   * plain-parquet expression of what table formats' commit logs do.
   *
   * Layout under the table root:
@@ -210,7 +210,7 @@ object ManifestCommit {
       (rel +: gens.map(_.toString)).mkString("\t")
     }).mkString("\n")
     // no-overwrite CREATE = the atomic claim on pointer id `id` (the
-    // Checkpoints generation-mark discipline; maps onto a conditional
+    // OffsetMarks generation-mark discipline; maps onto a conditional
     // PUT on object stores): two writers racing the same table NEVER
     // silently clobber — the loser gets [[PointerClaimLost]], which
     // [[casCommit]] turns into a re-based retry or a loud refusal

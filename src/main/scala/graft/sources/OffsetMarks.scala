@@ -14,7 +14,7 @@ import org.apache.hadoop.fs.Path
   * incremental job can checkpoint to the cluster's durable store (HDFS,
   * S3A, file://) — not just the driver's local disk.
   */
-final class Checkpoints(dir: String) {
+final class OffsetMarks(dir: String) {
   private val root = new Path(dir)
   Fs.mkdirs(root)
 
@@ -124,7 +124,7 @@ final class Checkpoints(dir: String) {
       s".$job.cas.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     Fs.writeString(tmp, value)
     val next = genFile(job, expectedGen + 1)
-    val won = Checkpoints.casLock.synchronized {
+    val won = OffsetMarks.casLock.synchronized {
       listGens(job).map(_._1).maxOption.getOrElse(0L) == expectedGen && {
         // FileContext + Rename.NONE refuses an existing destination
         // (atomically on HDFS; checked on the local FS, race-free here
@@ -158,8 +158,8 @@ final class Checkpoints(dir: String) {
   }
 }
 
-object Checkpoints {
+object OffsetMarks {
   /** Serializes same-JVM CAS commits (see the cross-thread layer above);
-    * global because two `Checkpoints` instances may point at one dir. */
+    * global because two `OffsetMarks` instances may point at one dir. */
   private[sources] val casLock = new Object
 }

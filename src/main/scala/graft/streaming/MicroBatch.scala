@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Structured-Streaming re-expression of the reference's ingest plugins.
   *
@@ -1025,7 +1026,7 @@ object MicroBatch {
     def dbl(c: org.apache.spark.sql.Column) =
       c.cast("string").cast("double")
     val state = currentSegState(spark, dir, "", KeySumSums, "key-sum")
-      .localCheckpoint(eager = false) // top-k + the grand total
+      .transform(CheckpointOps(_, eager = false)) // top-k + the grand total
     val total = state.agg(sum(col("__s")).cast("decimal(28,0)")
       .as("__tot"))
     state
@@ -2052,7 +2053,7 @@ object MicroBatch {
       val survivors = graft.operators.Dedup.nearDupIncrementIndexed(
           pinned, index, idCol, textCol, shingleK, numHashes, bands,
           threshold, maxBucketSize)
-        .localCheckpoint(eager = true)
+        .transform(CheckpointOps(_, eager = true))
       // the two survivor writes read the same checkpointed blocks and
       // are independent — run them concurrently (guide §2.6): the
       // per-batch wall here is job-count-bound, not data-bound

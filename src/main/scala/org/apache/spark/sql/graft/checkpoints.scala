@@ -4,61 +4,69 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Partition-preserving checkpoints for iterative operators.
+/** The one materialization policy: every lineage truncation in graft
+  * goes through this module, and one session conf decides how durable
+  * the result is.
   *
-  * `Dataset.localCheckpoint` / `checkpoint` under AQE rebuilds the
-  * frame as a `LogicalRDD` with `UnknownPartitioning` (the adaptive
-  * plan does not expose a stable output partitioning at checkpoint
-  * time), so EVERY post-checkpoint keyed join or aggregate re-shuffles
-  * the checkpointed side — for an iterative graph loop that means the
-  * edge table crosses the wire once per iteration even though its rows
-  * never move. This helper makes the layout explicit and keeps it:
+  * With [[ConfKey]] unset, every checkpoint is a `localCheckpoint` —
+  * executor-local blocks, no extra I/O, but NON-REPLICATED executor
+  * state: on a cluster, losing one executor kills the job with no
+  * lineage left to recompute from. Setting
   *
-  *  1. materialize the frame once with a plain eager checkpoint and
-  *     count it from the cached blocks (cheap: no recompute);
-  *  2. pick the layout width from that size —
-  *     `n = clamp(ceil(rows / rowsPerPartition), 1, shuffle.partitions)`
-  *     — so a small graph collapses to one partition (what AQE's
-  *     coalescing would have done) and a big one spreads to the
-  *     session's configured parallelism: scale-adaptive by DATA size,
-  *     never a constant tuned for local mode or for the cluster;
-  *  3. `repartition(n, keys)` — an explicit user repartition AQE will
-  *     not coalesce, so the physical layout IS `hash(keys) pmod n`;
-  *  4. checkpoint again (local or reliable — caller's durability
-  *     choice) and rebuild the `LogicalRDD` declaring that
-  *     `HashPartitioning`, so downstream `EnsureRequirements` sees the
-  *     truth and plans keyed joins/aggregations on `keys` with NO
-  *     exchange on this side;
-  *  5. unpersist the phase-1 blocks (the declared copy is the state).
+  *   spark.conf.set(CheckpointOps.ConfKey, "hdfs://.../graft-ckpt")
   *
-  * The declared partitioning is exactly what step 3 produced; if the
-  * checkpoint ever stops resolving to a bare `LogicalRDD` (a future
-  * Spark change), the helper degrades to the plain checkpoint rather
-  * than mis-declaring a layout. */
+  * switches EVERY checkpoint — iterative loops and single-pass
+  * truncations alike — to a reliable `checkpoint` on that directory,
+  * so a long job survives executor loss. A reliable checkpoint is
+  * always eager, whatever the site asks for: a lazy one would run its
+  * input once for its first consumer and again for the write, and an
+  * input such as range-partition bucket ids can differ between the two
+  * runs, so consumers would disagree. The cost, paid at every site: one
+  * job at the call that writes the rows to durable storage, and every
+  * consumer reading them back from there; at a site that is lazy under
+  * `localCheckpoint`, the input is computed in that write job instead of
+  * inside its first consumer. */
 object CheckpointOps {
-  /** Eager localCheckpoint whose cached blocks are guaranteed at least
-    * the session's default parallelism when the materialized layout
-    * came out narrower: under AQE an upstream join/aggregate often
+  /** Session conf naming the reliable-checkpoint directory. */
+  val ConfKey = "spark.graft.checkpointDir"
+
+  /** Checkpoint `df`: reliable and eager on the [[ConfKey]] directory
+    * when it is set, `localCheckpoint(eager)` otherwise. */
+  def apply(df: DataFrame, eager: Boolean): DataFrame =
+    df.sparkSession.conf.getOption(ConfKey).filter(_.nonEmpty) match {
+      case Some(dir) =>
+        val sc = df.sparkSession.sparkContext
+        // setCheckpointDir mints a fresh UUID subdir per call; only
+        // (re)set when the current dir is not already under ours
+        if (!sc.getCheckpointDir.exists(_.contains(
+            dir.stripPrefix("file:")))) {
+          sc.setCheckpointDir(dir)
+        }
+        df.checkpoint(eager = true)
+      case None => df.localCheckpoint(eager)
+    }
+
+  /** Eager checkpoint whose blocks are guaranteed at least the
+    * session's default parallelism when the materialized layout came
+    * out narrower: under AQE an upstream join/aggregate often
     * materializes COALESCED (1–4 partitions at bench scale), and every
     * subsequent scan of the checkpoint — a Newton pass per iteration,
     * an epoch, a Gram aggregate — then runs nearly single-threaded on
     * one core. Real-cluster inputs already carry ≥ parallelism
     * partitions, so there this is a zero-cost identity; when the
     * layout IS degenerate, one narrow round-robin shuffle of the
-    * already-cached blocks buys full parallelism for every later scan.
-    * Only safe-by-construction consumers use it (exact decimal/long
-    * aggregates — partitioning cannot change their results). */
-  def checkpointSpread(df: DataFrame): DataFrame = {
-    val ck0 = df.localCheckpoint(true)
+    * already-materialized blocks buys full parallelism for every later
+    * scan. Only safe-by-construction consumers use it (exact
+    * decimal/long aggregates — partitioning cannot change their
+    * results). */
+  def spread(df: DataFrame): DataFrame = {
+    val ck0 = apply(df, eager = true)
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val lr0 = ck0.queryExecution.analyzed match {
-      case lr: LogicalRDD => Some(lr)
-      case _ => None
-    }
+    val lr0 = logicalRdd(ck0)
     val parts = lr0.map(_.rdd.getNumPartitions).getOrElse(target)
     if (parts >= target) ck0
     else {
-      val out = ck0.repartition(target).localCheckpoint(true)
+      val out = apply(ck0.repartition(target), eager = true)
       lr0.foreach(_.rdd.unpersist(false))
       out
     }
@@ -69,97 +77,92 @@ object CheckpointOps {
     * advisory partition size, expressed in rows. */
   val DefaultRowsPerPartition = 1L << 20
 
-  def checkpointHashPartitioned(df: DataFrame, keys: Seq[String],
-      reliable: Boolean,
-      rowsPerPartition: Long = DefaultRowsPerPartition,
-      declareNarrow: Boolean = true): DataFrame = {
-    val ck0 = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    val rows = ck0.count()
-    if (!declareNarrow &&
-        layoutWidth(ck0, rows, rowsPerPartition) < wideRegimeFloor(ck0))
-      return ck0 // narrow regime: the plain checkpoint (see below)
-    val out = checkpointHashPartitionedSized(ck0, keys, reliable,
-      rows, rowsPerPartition)
-    // phase-1 blocks are dead weight once the declared copy exists
-    ck0.queryExecution.analyzed match {
-      case lr0: LogicalRDD => lr0.rdd.unpersist(false)
-      case _ =>
+  /** Eager checkpoint that, in the wide regime, pins and DECLARES a
+    * hash layout on `keys`. A plain checkpoint under AQE comes back as a
+    * `LogicalRDD` with `UnknownPartitioning`, so EVERY later keyed join
+    * or aggregate re-shuffles it — for an iterative graph loop, the edge
+    * table crosses the wire once per round though its rows never move.
+    *
+    *  1. Size the frame: `rowsUpperBound` when the caller holds one
+    *     (e.g. last round's count of a shrinking state, which skips a
+    *     sizing pass), else one plain eager checkpoint, counted.
+    *  2. Width `n = clamp(ceil(rows / DefaultRowsPerPartition), 1,
+    *     shuffle.partitions)` — adaptive to DATA size.
+    *  3. Below [[wideRegimeFloor]] (always at bench scale), stop with
+    *     the plain checkpoint: a declared layout PINS the width of every
+    *     downstream keyed join (AQE cannot expand it), and a narrow one
+    *     measured 1.13–1.70× slower on the pagerank family than the
+    *     plain checkpoint plus an AQE-coalesced exchange per round.
+    *  4. Otherwise `repartition(n, keys)` (a user repartition AQE will
+    *     not coalesce, so the layout IS `hash(keys) pmod n`), checkpoint,
+    *     and rebuild the `LogicalRDD` declaring that `HashPartitioning`,
+    *     so `EnsureRequirements` plans keyed joins on `keys` with NO
+    *     exchange on this side. Should the checkpoint ever stop
+    *     resolving to a bare `LogicalRDD`, the plain one is returned
+    *     rather than a mis-declared layout. */
+  def keyed(df: DataFrame, keys: Seq[String],
+      rowsUpperBound: Option[Long]): DataFrame = {
+    require(keys.nonEmpty, "keyed checkpoints need >= 1 key")
+    rowsUpperBound match {
+      case Some(bound) =>
+        val n = layoutWidth(df, bound)
+        if (n < wideRegimeFloor(df)) apply(df, eager = true)
+        else declared(df, keys, n)
+      case None =>
+        val ck0 = apply(df, eager = true)
+        val n = layoutWidth(ck0, ck0.count())
+        if (n < wideRegimeFloor(ck0)) ck0
+        else {
+          val out = declared(ck0, keys, n)
+          // phase-1 blocks are dead weight once the declared copy exists
+          logicalRdd(ck0).foreach(_.rdd.unpersist(false))
+          out
+        }
     }
-    out
   }
+
+  private def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** The width the declared layout would get: the data-derived
     * partition count, capped at the session's shuffle parallelism. */
-  def layoutWidth(df: DataFrame, rowsUpperBound: Long,
-      rowsPerPartition: Long = DefaultRowsPerPartition): Int = {
-    val maxN = df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf.numShufflePartitions
-    math.max(1L, math.min(maxN.toLong,
-      (rowsUpperBound + rowsPerPartition - 1L) / rowsPerPartition)).toInt
-  }
+  def layoutWidth(df: DataFrame, rowsUpperBound: Long): Int =
+    math.max(1L, math.min(shufflePartitions(df).toLong,
+      (rowsUpperBound + DefaultRowsPerPartition - 1L) /
+        DefaultRowsPerPartition)).toInt
 
   /** The width at which the declared layout starts to pay: the session's
-    * parallelism, CAPPED at its shuffle-partition count. `layoutWidth`
-    * itself caps at `spark.sql.shuffle.partitions`, so comparing it
-    * against bare `defaultParallelism` on a cluster where
-    * shuffle.partitions (default 200) < cores would make the wide gate
-    * unreachable — silently disabling the declared keyed-checkpoint
-    * layout in exactly the large-cluster regime it targets. Every keyed
-    * shuffle in the session runs at ≤ shuffle.partitions width anyway,
-    * so a declared layout AT that width pins nothing below what the
-    * session's own exchanges would use. */
-  def wideRegimeFloor(df: DataFrame): Int = {
-    val spark =
-      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    math.min(spark.sparkContext.defaultParallelism,
-      spark.sessionState.conf.numShufflePartitions)
-  }
+    * parallelism, capped at `spark.sql.shuffle.partitions`. `layoutWidth`
+    * caps there too, so an uncapped floor would make the wide regime
+    * unreachable on a cluster with more cores than shuffle partitions —
+    * exactly the regime the declared layout targets. */
+  private def wideRegimeFloor(df: DataFrame): Int =
+    math.min(df.sparkSession.sparkContext.defaultParallelism,
+      shufflePartitions(df))
 
-  /** Single-pass variant for loops that already know (an upper bound
-    * on) the row count — e.g. the previous round's convergence count of
-    * a monotonically shrinking state: sizes the layout from the bound
-    * and checkpoints ONCE, skipping the sizing materialization.
-    *
-    * `declareNarrow = false` restricts the declared layout to the WIDE
-    * regime (data-derived width ≥ the session's default parallelism —
-    * always true for a 100 TB edge table, never at bench scale): the
-    * declared layout PINS the width of every downstream keyed
-    * join/aggregate (`EnsureRequirements` co-partitions to it and AQE
-    * cannot expand it), so a narrow declared layout runs whole
-    * iterations at 2-task parallelism — measured r15 on the pagerank
-    * family: narrow-declared 1.13–1.70× vs the plain checkpoint, and a
-    * parallelism-floored width was WORSE still (1.4×: dozens of
-    * near-empty non-coalescable partitions per iteration). In the
-    * narrow regime the plain checkpoint + AQE-coalesced per-iteration
-    * exchange is simply the cheaper plan; in the wide regime the
-    * declared layout removes a corpus-scale exchange per iteration.
-    * The wide threshold is [[wideRegimeFloor]] — parallelism capped at
-    * shuffle.partitions, since [[layoutWidth]] is capped there too. */
-  def checkpointHashPartitionedSized(df: DataFrame, keys: Seq[String],
-      reliable: Boolean, rowsUpperBound: Long,
-      rowsPerPartition: Long = DefaultRowsPerPartition,
-      declareNarrow: Boolean = true): DataFrame = {
-    require(keys.nonEmpty, "checkpointHashPartitioned needs >= 1 key")
-    val spark =
-      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val n = layoutWidth(df, rowsUpperBound, rowsPerPartition)
-    if (!declareNarrow && n < wideRegimeFloor(df))
-      return if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    val rep = df.repartition(n, keys.map(df.col): _*)
-    val ck = if (reliable) rep.checkpoint(true)
-      else rep.localCheckpoint(true)
+  private def logicalRdd(df: DataFrame): Option[LogicalRDD] =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD => Some(lr)
+      case _ => None
+    }
+
+  /** `df` hash-partitioned into `n` partitions on `keys`, checkpointed,
+    * and rebuilt as a `LogicalRDD` that declares that layout. */
+  private def declared(df: DataFrame, keys: Seq[String],
+      n: Int): DataFrame = {
+    val ck = apply(df.repartition(n, keys.map(df.col): _*), eager = true)
+    val spark = Catalogs.classic(df.sparkSession)
     val resolver = spark.sessionState.analyzer.resolver
-    ck.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
+    logicalRdd(ck) match {
+      case Some(lr) =>
         val keyAttrs = keys.flatMap(k =>
           lr.output.find(a => resolver(a.name, k)))
         if (keyAttrs.length != keys.length) ck
-        else org.apache.spark.sql.classic.Dataset.ofRows(spark,
+        else Catalogs.ofRows(spark,
           new LogicalRDD(lr.output, lr.rdd,
             HashPartitioning(keyAttrs, n), lr.outputOrdering,
             lr.isStreaming, lr.stream)(spark, None, None))
-      case _ => ck
+      case None => ck
     }
   }
 }

@@ -1205,27 +1205,29 @@ case class InterleaveBits(child: Expression, bits: Int)
   override def prettyName: String = "interleave_bits"
 }
 
-/** Bridge to the session's catalog manager (private[sql]) for catalog-aware
-  * helpers like max_pt. */
+/** Bridge to the session's package-private state (catalog manager,
+  * `Dataset.ofRows`) for catalog-aware helpers like max_pt. */
 object Catalogs {
+  /** The one cast to the classic session that exposes `sessionState`. */
+  def classic(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.classic.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
   def plugin(spark: org.apache.spark.sql.SparkSession,
       name: String): org.apache.spark.sql.connector.catalog.CatalogPlugin =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.catalogManager.catalog(name)
+    classic(spark).sessionState.catalogManager.catalog(name)
 
   /** DataFrame over an analyzed logical plan (private[sql] Dataset.ofRows) —
     * used by the strategy-planned write path. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+    org.apache.spark.sql.classic.Dataset.ofRows(classic(spark), plan)
 
   /** The session's current (catalog name, namespace) — the context a view
     * definition must be resolved in, captured at CREATE VIEW time. */
   def currentContext(spark: org.apache.spark.sql.SparkSession): (String, Array[String]) = {
-    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.catalogManager
+    val cm = classic(spark).sessionState.catalogManager
     (cm.currentCatalog.name(), cm.currentNamespace)
   }
 
@@ -1235,8 +1237,7 @@ object Catalogs {
     * view was DEFINED, not where the reader happens to be. */
   def withCurrentContext[A](spark: org.apache.spark.sql.SparkSession,
       catalog: String, namespace: Array[String])(f: => A): A = {
-    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.catalogManager
+    val cm = classic(spark).sessionState.catalogManager
     val (prevCat, prevNs) = (cm.currentCatalog.name(), cm.currentNamespace)
     try {
       cm.setCurrentCatalog(catalog)

@@ -140,32 +140,49 @@ class DedupSpec extends SparkTestBase {
 
   test("spark.graft.checkpointDir switches iterative loops to reliable " +
       "checkpoints with identical results") {
-    import graft.operators.{Checkpointing, Classifier}
+    import graft.operators.{Classifier, Graph}
+    import org.apache.spark.sql.graft.CheckpointOps
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("id_a", "id_b")
     val docs = (0 until 200).map(i =>
       (i.toLong, if (i % 3 == 0) "join the spam club now" else
         s"plain document number $i about suppliers", i % 3 min 1))
       .toDF("doc_id", "text", "label")
-    val local = Dedup.dupClusters(pairs).orderBy("id").collect().toSeq
+    val base = Tables.documents(spark, sf).select("doc_id", "text")
+    val donor = base.filter($"doc_id" === 7).select($"text").head()
+      .getString(0)
+    val corpus = base.unionByName(Seq((100007L,
+      donor.split(" ").dropRight(1).mkString(" ") + " zzz"))
+      .toDF("doc_id", "text"))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(df.columns.map(col): _*).collect().toSeq
+    // a graph loop, the min-label loop, and a former raw single-pass
+    // truncation on the curation path
+    val runs: Seq[() => Seq[org.apache.spark.sql.Row]] = Seq(
+      () => sorted(Dedup.dupClusters(pairs)),
+      () => sorted(Graph.connectedComponents(pairs, "id_a", "id_b")),
+      () => sorted(Dedup.minhashNearDups(corpus, "doc_id", "text",
+        threshold = 0.6)))
+    val local = runs.map(_())
+    assert(local(2).nonEmpty, "the planted near-dup pair must be found")
     val mLocal = Classifier.train(docs, "text", "label",
       dim = 256, epochs = 4, maxTrainRows = 200)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckconf")
-    spark.conf.set(Checkpointing.ConfKey, dir.toString)
-    try {
-      assert(Dedup.dupClusters(pairs).orderBy("id").collect().toSeq
-        === local)
-      val mRel = Classifier.train(docs, "text", "label",
-        dim = 256, epochs = 4, maxTrainRows = 200)
-      assert(mRel.weights.toSeq === mLocal.weights.toSeq &&
-        mRel.bias === mLocal.bias)
+    // each input under its own directory, so each must write state
+    def reliably[A](run: () => A): A = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_ckconf")
+      val out = withConf(CheckpointOps.ConfKey -> dir.toString)(run())
       val wrote = java.nio.file.Files.walk(dir)
         .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
       assert(wrote > 0, s"no reliable checkpoint state under $dir")
-    } finally spark.conf.unset(Checkpointing.ConfKey)
+      out
+    }
+    assert(runs.map(reliably(_)) === local)
+    val mRel = reliably(() => Classifier.train(docs, "text", "label",
+      dim = 256, epochs = 4, maxTrainRows = 200))
+    assert(mRel.weights.toSeq === mLocal.weights.toSeq &&
+      mRel.bias === mLocal.bias)
     // conf unset: back to localCheckpoint (still correct)
-    assert(Dedup.dupClusters(pairs).orderBy("id").collect().toSeq
-      === local)
+    assert(runs.map(_()) === local)
   }
 
   test("hashSample is deterministic and close to the target fraction") {

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 import graft.operators.Graph
 
 class GraphSpec extends SparkTestBase {
@@ -147,21 +151,15 @@ class GraphSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_gck").toString
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 1L),
       (5L, 6L), (6L, 5L)).toDF("src", "dst")
-    val some = Some(dir)
-    assert(Graph.pageRank(edges, "src", "dst", checkpointDir = some)
-      .orderBy("id").collect().toSeq ===
-      Graph.pageRank(edges, "src", "dst").orderBy("id").collect().toSeq)
-    assert(Graph.hits(edges, "src", "dst", checkpointDir = some)
-      .orderBy("id").collect().toSeq ===
-      Graph.hits(edges, "src", "dst").orderBy("id").collect().toSeq)
-    assert(Graph.kCore(edges, "src", "dst", k = 2, checkpointDir = some)
-      .orderBy("id").collect().toSeq ===
-      Graph.kCore(edges, "src", "dst", k = 2)
-        .orderBy("id").collect().toSeq)
-    assert(Graph.labelPropagation(edges, "src", "dst",
-        checkpointDir = some).orderBy("id").collect().toSeq ===
-      Graph.labelPropagation(edges, "src", "dst")
-        .orderBy("id").collect().toSeq)
+    val runs: Seq[() => DataFrame] = Seq(
+      () => Graph.pageRank(edges, "src", "dst"),
+      () => Graph.hits(edges, "src", "dst"),
+      () => Graph.kCore(edges, "src", "dst", k = 2),
+      () => Graph.labelPropagation(edges, "src", "dst"))
+    def rows(run: () => DataFrame) = run().orderBy("id").collect().toSeq
+    val local = runs.map(rows)
+    val reliable = withConf(CheckpointOps.ConfKey -> dir)(runs.map(rows))
+    assert(reliable === local)
     // the reliable path actually wrote RDD checkpoint state to the dir
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
@@ -348,9 +346,12 @@ class GraphSpec extends SparkTestBase {
     // is exactly where a wrong star test would stop early with wrong
     // labels — cross-check every one against the independent
     // min-propagation loop
+    val treeIds = new scala.util.Random(7).shuffle((0L until 127L).toVector)
     val shapes = Seq(
-      // binary tree, ids shuffled so parent < child never holds
-      (0L until 126L).map(i => ((i * 37) % 127, ((2 * i + 1) * 37) % 127)),
+      // binary tree of depth 6 (children 2i+1, 2i+2), relabelled
+      // through a fixed permutation so ids do not follow depth
+      (0 until 63).flatMap(i => Seq(2 * i + 1, 2 * i + 2)
+        .map(c => (treeIds(i), treeIds(c)))),
       // two chains joined at one end through a high id (combined
       // diameter kept under dupClusters' 20-hop propagation bound)
       (1L until 9L).map(i => (i * 3, (i + 1) * 3)) ++
@@ -511,65 +512,60 @@ class GraphSpec extends SparkTestBase {
     assert(again.getDouble(4) === got.getDouble(4))
   }
 
-  test("declareNarrow=false gates the declared layout on the wide " +
-      "regime: narrow data falls back to the plain checkpoint, wide " +
-      "data still declares") {
-    import spark.implicits._
+  test("keyed checkpoint declares its layout only in the wide regime: " +
+      "narrow data falls back to the plain checkpoint, wide data still " +
+      "declares") {
     val e = (1L to 5000L).map(i => (i % 97, i)).toDF("src", "dst")
-    // narrow: data-derived width (1 at the default 2^20 rows/partition)
-    // is below the session parallelism — plain checkpoint, no pinned
-    // 1-partition layout throttling every downstream join
-    val narrow = org.apache.spark.sql.graft.CheckpointOps
-      .checkpointHashPartitioned(e, Seq("src"), reliable = false,
-        declareNarrow = false)
-    assert(!narrow.queryExecution.analyzed
-      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-      .outputPartitioning.isInstanceOf[
-        org.apache.spark.sql.catalyst.plans.physical.HashPartitioning])
-    assert(narrow.count() === 5000L)
-    // wide: rowsPerPartition=1 drives the width to shuffle.partitions
-    // (= the test session's parallelism), the cluster regime — the
-    // layout IS declared
-    val wide = org.apache.spark.sql.graft.CheckpointOps
-      .checkpointHashPartitioned(e, Seq("src"), reliable = false,
-        rowsPerPartition = 1L, declareNarrow = false)
-    assert(wide.queryExecution.analyzed
-      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-      .outputPartitioning.isInstanceOf[
-        org.apache.spark.sql.catalyst.plans.physical.HashPartitioning])
-    assert(wide.count() === 5000L)
+    def declares(ck: DataFrame): Boolean =
+      ck.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+        .outputPartitioning.isInstanceOf[HashPartitioning]
+    // narrow: the data-derived width (1 at 2^20 rows/partition) is below
+    // the session parallelism — plain checkpoint, no pinned 1-partition
+    // layout throttling every downstream join; sized or not
+    for (bound <- Seq(None, Some(5000L))) {
+      val narrow = CheckpointOps.keyed(e, Seq("src"), bound)
+      assert(!declares(narrow) && narrow.count() === 5000L)
+    }
+    // wide: one shuffle partition puts the floor at the data width, the
+    // cluster regime — the layout IS declared
+    withConf("spark.sql.shuffle.partitions" -> "1") {
+      for (bound <- Seq(None, Some(5000L))) {
+        val wide = CheckpointOps.keyed(e, Seq("src"), bound)
+        assert(declares(wide) && wide.count() === 5000L)
+      }
+    }
   }
 
   test("keyed checkpoint declares its hash layout: a keyed join plans " +
       "with NO Exchange on the checkpointed side") {
-    import spark.implicits._
     val e = (1L to 5000L).map(i => (i % 97, i)).toDF("src", "dst")
-    val ck = org.apache.spark.sql.graft.CheckpointOps
-      .checkpointHashPartitioned(e, Seq("src"), reliable = false)
-    // the LogicalRDD must carry the declared HashPartitioning …
-    val scan = ck.queryExecution.analyzed
-      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-    assert(scan.outputPartitioning.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.physical.HashPartitioning],
-      s"declared partitioning lost: ${scan.outputPartitioning}")
-    // … and a join keyed on it must not re-exchange the checkpointed
-    // side: the only Exchange in the plan shuffles the OTHER side.
-    // (A plain localCheckpoint comes back UnknownPartitioning under
-    // AQE and both sides re-shuffle — the per-iteration edge shuffle
-    // the graph loops paid before r15.)
     val ranks = (0L to 96L).map(i => (i, i * 0.5)).toDF("id", "rank")
-    val joined = ck.join(ranks, ck("src") === ranks("id"))
-    val plan = joined.queryExecution.executedPlan.toString
-    val exchanges = "Exchange hashpartitioning\\(([a-z]+)".r
-      .findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(!exchanges.contains("src"),
-      s"checkpointed side re-shuffled:\n$plan")
-    assert(joined.count() === 5000L)
-    // the plain checkpoint really does lose it (the fact this guards)
-    val plain = e.localCheckpoint()
-    val plainScan = plain.queryExecution.analyzed
-      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-    assert(!plainScan.outputPartitioning.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.physical.HashPartitioning])
+    // exchanges keyed on src in the executed plan of a src-keyed join
+    // (broadcast off, so both sides must be clustered on the key)
+    def srcExchanges(ck: DataFrame): Int = {
+      val joined = ck.join(ranks, ck("src") === ranks("id"))
+      assert(joined.count() === 5000L)
+      "Exchange hashpartitioning\\(src".r
+        .findAllIn(joined.queryExecution.executedPlan.toString).size
+    }
+    withConf("spark.sql.shuffle.partitions" -> "1",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      // wide regime (see above): the LogicalRDD must carry the declared
+      // HashPartitioning …
+      val ck = CheckpointOps.keyed(e, Seq("src"), None)
+      val scan = ck.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+      assert(scan.outputPartitioning.isInstanceOf[HashPartitioning],
+        s"declared partitioning lost: ${scan.outputPartitioning}")
+      // … and a join keyed on it must not re-exchange the checkpointed
+      // side: the only Exchange in the plan shuffles the OTHER side
+      assert(srcExchanges(ck) === 0)
+      // the plain checkpoint really does lose it (the fact this guards):
+      // it comes back UnknownPartitioning and re-shuffles on src — the
+      // per-iteration edge shuffle the graph loops would pay
+      val plain = e.localCheckpoint()
+      assert(!plain.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+        .outputPartitioning.isInstanceOf[HashPartitioning])
+      assert(srcExchanges(plain) === 1)
+    }
   }
 }

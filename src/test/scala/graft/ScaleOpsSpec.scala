@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Similarity, Skew}
-import graft.sources.Checkpoints
+import graft.sources.OffsetMarks
 
 class ScaleOpsSpec extends SparkTestBase {
   import spark.implicits._
@@ -43,7 +43,7 @@ class ScaleOpsSpec extends SparkTestBase {
 
   test("checkpoints advance atomically and drive incremental reads") {
     val dir = Files.createTempDirectory("graft_ckpt").toString
-    val ck = new Checkpoints(dir)
+    val ck = new OffsetMarks(dir)
     assert(ck.load("job1").isEmpty)
     val ev = Tables.events(spark, sf)
     var firstBatch = 0L

@@ -127,7 +127,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("checkpoints work over file:// URIs and survive a crash mid-save") {
     val dir = "file://" + Files.createTempDirectory("graft_ckpt_fs").toString
-    val ck = new graft.sources.Checkpoints(dir)
+    val ck = new graft.sources.OffsetMarks(dir)
     ck.save("job", "100")
     assert(ck.load("job").contains("100"))
     // simulate a crash after the tmp write but before the rename: a stale
@@ -453,9 +453,9 @@ class SourcesSpec extends SparkTestBase {
 
   test("CAS checkpoints: a stale commit fails, racing advances never " +
       "lose an update") {
-    import graft.sources.Checkpoints
+    import graft.sources.OffsetMarks
     val dir = Files.createTempDirectory("graft_cas").toString
-    val ck = new Checkpoints(dir)
+    val ck = new OffsetMarks(dir)
 
     val (v0, g0) = ck.loadCas("job")
     assert(v0.isEmpty && g0 == 0L)

@@ -71,7 +71,7 @@ SYMBOL = re.compile(
     r"Multimodal|Retrieval|Linkage|Graph|Anomaly|Experiment|Expectations|"
     r"TimeSeries|Cdc|Funnel|Retention|Sessionize|Skew|UrlOps|ZOrder|Merge|"
     r"TemporalJoins|BloomJoin|StreamFunnel|MicroBatch|CdcStream|JdbcImport|"
-    r"FileFormats|PartitionedWrite|BucketedTables|Checkpoints|AsyncPrefetch|"
+    r"FileFormats|PartitionedWrite|BucketedTables|OffsetMarks|AsyncPrefetch|"
     r"GraftCatalog|NativeFunctions|Aggregators|TrainingDataPipeline|"
     r"MediaCurationPipeline)\.(\w+)")
 
