@@ -1,319 +1,253 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import java.lang.management.ManagementFactory
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.{ListMap, TreeMap}
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: one JSON line on stdout (driver contract), per-query
   * seconds inside it.
   *
   * A full run SHARDS itself across `SPARK_GRAFT_BENCH_SHARDS` (default
-  * 3) sequential child JVMs, round-robin by sorted query index, and
-  * merges their per-query maps. Rationale (round-9 finding): in one
-  * ~200-query process, heap/GC/codegen-cache pressure accumulates and
-  * inflates the later tail by 2-3x — regressions became
+  * 3) sequential child JVMs, assigned by a stable hash of the gate
+  * name, and merges their per-query maps. Rationale (round-9 finding):
+  * in one ~200-query process, heap/GC/codegen-cache pressure accumulates
+  * and inflates the later tail by 2-3x — regressions became
   * indistinguishable from run-length noise. Sharding bounds the
   * per-process query count so timings reflect the query, not its
   * position in the run; each child pays its own (untimed) warmup.
   * Subset runs (SPARK_GRAFT_ONLY) and explicit SHARDS=1 stay
-  * single-process.
+  * single-process; a child is exactly such a subset run.
   *
   * `GRAFT_BENCH_RUNS=N` (default 1) repeats the WHOLE bench N times
-  * (each repeat a fresh child process, sharded as usual) and emits
+  * (each repeat's shards forked fresh by this process) and emits
   * per-query MINs as the headline `queries` map, with every raw run
   * kept under `runs_raw`. Rationale: two consecutive rounds burned a
   * judge/builder cycle re-proving that single-run spikes on shared
   * boxes were shard noise — MIN-of-N is the adjudication basis the
   * verdicts already use, now produced by one invocation.
+  *
+  * A gate that throws is reported on stderr and listed under `failed`
+  * in the artifact line; its seconds (time to the failure) stay in the
+  * map.
   */
 object Bench {
-  /** Final-line driver contract: the full artifact line can run tens of
-    * kilobytes (386 queries; MIN-of-N carries every raw run), and the
-    * driver reconstructs its summary from a TRUNCATED captured log tail
-    * of a few thousand chars — even the `BENCH_JSON:` compact line
-    * (full query map, no `runs_raw`) is ~15 KB and never survives that
-    * window, and r14/r15 both ended `parsed: null` because no COMPLETE
-    * bare JSON line sat inside the tail (the prefixed `BENCH_SUMMARY:`
-    * line does not `json.loads`). So every exit path now prints, as the
-    * very LAST stdout line, a BARE one-line JSON digest short enough to
-    * fit the tail window whole — no prefix dependence — with the same
-    * digest kept in `bench_out/summary.json`; the full per-query map
-    * stays in `bench_out/latest.json` plus a `$SPARK_GRAFT_CPUS`-keyed
-    * copy (`latest_c<cpus>.json`) so runs at different core counts
-    * never overwrite each other's map. */
-  private def printBenchJson(compactLine: String): Unit = {
-    println("BENCH_JSON: " + compactLine)
-    printBenchSummary(compactLine)
+  private val Json = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** One bench run: per-gate seconds and the gates that threw. */
+  final case class Run(queries: Map[String, Double], failed: Set[String]) {
+    def total: Double = queries.values.sum
   }
 
-  /** The short digest of a headline artifact line (total, gate count,
-    * basis, sf): printed once prefixed (`BENCH_SUMMARY:`, grep-able)
-    * and once BARE as the final stdout line (tail-window parseable),
-    * and written to `bench_out/summary.json`. `queries` is present but
-    * empty by design — the full map never fits the tail window; it
-    * lives at the `artifact` path. */
-  private def printBenchSummary(line: String): Unit = {
-    val total = "\"value\":([0-9.Ee+-]+)".r.findFirstMatchIn(line)
-      .map(_.group(1)).getOrElse("null")
-    val gates = parseQueries(line).size
-    val basis = "\"basis\":\"([a-z0-9]+)\"".r.findFirstMatchIn(line)
-      .map(m => "\"" + m.group(1) + "\"").getOrElse("\"single\"")
-    val runs = "\"runs\":(\\d+)".r.findFirstMatchIn(line)
-      .map(_.group(1)).getOrElse("1")
-    val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(line)
-      .map(_.group(1)).getOrElse("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val digest = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":{},"gates":$gates,"basis":$basis,"runs":$runs,""" +
-      s""""cpus":$cpus,"sf":"$sf",""" +
-      s""""artifact":"bench_out/latest_c$cpus.json"}"""
-    println("BENCH_SUMMARY: " + digest)
-    locally {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      import java.nio.charset.StandardCharsets
-      val dir = Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out"))
-      Files.createDirectories(dir)
-      Files.write(dir.resolve("summary.json"),
-        (digest + "\n").getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    }
-    println(digest) // the bare final line IS the driver contract
-  }
+  /** `SPARK_GRAFT_ONLY=q01_scan_filter,d29_...`: the gate subset a run
+    * is limited to (Bench, Verify and ScaleSmoke). */
+  private[graft] lazy val only: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
 
-  /** Write a headline artifact line to `<out>/<name>` and, for the full
-    * (non-partial) artifact, a `$SPARK_GRAFT_CPUS`-keyed copy — the r15
-    * 8-core driver run overwrote the 32-core map because both runs
-    * shared one `latest.json`. */
-  private def writeArtifact(line: String, name: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    import java.nio.charset.StandardCharsets
-    val dir = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out"))
-    Files.createDirectories(dir)
-    val bytes = (line + "\n").getBytes(StandardCharsets.UTF_8)
-    Files.write(dir.resolve(name), bytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    if (name == "latest.json") {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      Files.write(dir.resolve(s"latest_c$cpus.json"), bytes,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    }
-  }
+  private def outDir: Path =
+    Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out"))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val shards = sys.env.getOrElse("SPARK_GRAFT_BENCH_SHARDS", "3").toInt
-    val isChild = sys.env.contains("SPARK_GRAFT_SHARD_CHILD")
-    val minRuns = sys.env.getOrElse("GRAFT_BENCH_RUNS", "1").toInt
-    if (minRuns > 1 && !isChild) {
-      runMinOfN(minRuns, sfDir)
-      return
-    }
-    if (shards > 1 && !isChild && sys.env.get("SPARK_GRAFT_ONLY").isEmpty) {
-      runSharded(shards, sfDir)
-      return
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup: initialize parquet reader + codegen + shuffle/window/join
-    // machinery so the first timed queries measure steady state (what a
-    // long-running job sees), not one-time JIT/session costs.
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .selectExpr("sum(l_quantity)").collect()
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val w = spark.range(100000).select(col("id"), (col("id") % 97).as("k"))
-      w.withColumn("c", count(lit(1)).over(Window.partitionBy("k")))
-        .join(w.select(col("k"), col("id").as("id2")), "k")
-        .select(explode(array(col("id"), col("id2"))).as("x"))
-        .groupBy().max("x").collect()
-      // warm the Spark ML KMeans path too (class loading + codegen for
-      // vector ops) — every ANN/clustering query pays ~3s of one-time
-      // ML initialization otherwise, which is session cost, not query
-      // cost (a long-running serve job fits models once)
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val tiny = spark.range(256)
-        .select(array_to_vector(array((0 until 8).map(j =>
-          ((col("id") * (j + 3)) % 17).cast("double")): _*)).as("features"))
-      new KMeans().setK(4).setSeed(1).setMaxIter(2).setInitMode("random")
-        .fit(tiny)
-    }
-    // Optional subset for iteration: SPARK_GRAFT_ONLY=q01_scan_filter,d29_...
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val results = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
-    }.toMap
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    println(line)
-    // Durable copy: stdout log tails truncate under the driver harness, which
-    // loses per-query timings needed for cross-round regression diffing. The
-    // file is the artifact of record; stdout stays the driver contract.
-    // A subset run must never clobber the full artifact of record
-    // (same contract as ScaleSmoke's sf1_smoke_partial.json).
-    writeArtifact(line,
-      if (only.isDefined) "latest_partial.json" else "latest.json")
-    // child shard/min-run processes must not emit the driver-contract
-    // line — only the top-level process's merged artifact is canonical
-    // (a failure-path fallback child re-enables it via the env flag,
-    // since its output IS the top-level stdout there)
-    if (!isChild || sys.env.contains("SPARK_GRAFT_EMIT_BENCH_JSON"))
-      printBenchJson(line)
-    spark.stop()
-  }
-
-  /** `{"name":sec,...}` pairs out of a bench artifact's `queries` map —
-    * names are [a-z0-9_] by construction, values plain doubles. */
-  private def parseQueries(line: String): Map[String, Double] = {
-    val qs = "\"([a-z0-9_]+)\":([0-9.Ee+-]+)".r
-    val inQueries = line.substring(line.indexOf("\"queries\""))
-    qs.findAllMatchIn(inQueries.substring(0, inQueries.indexOf("}") + 1))
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
-
-  /** Fork N complete bench runs (sequential child processes, each
-    * sharding as usual) and emit per-query MINs as the headline
-    * `queries` map plus every raw run under `runs_raw` — the
-    * adjudication-basis artifact (GRAFT_BENCH_RUNS=N). Failed repeats
-    * are skipped; if every repeat fails, fall back to the classic
-    * in-process single run so the driver artifact never goes
-    * missing. */
-  private def runMinOfN(runs: Int, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    import java.nio.charset.StandardCharsets
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val jvmArgs = ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val tmp = Files.createTempDirectory("graft_bench_minruns")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-    val raw = (0 until runs).flatMap { i =>
-      val outDir = tmp.resolve(s"run$i")
-      val pb = new ProcessBuilder(((javaBin +: jvmArgs) ++
-        Seq("-cp", sys.props("java.class.path"), "graft.Bench")): _*)
-      pb.environment().remove("GRAFT_BENCH_RUNS")
-      pb.environment().put("SPARK_GRAFT_BENCH_OUT", outDir.toString)
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(tmp.resolve(s"run$i.log").toFile)
-      val rc = pb.start().waitFor()
-      val artifact = outDir.resolve(
-        if (only.isDefined) "latest_partial.json" else "latest.json")
-      if (rc == 0 && Files.exists(artifact))
-        Some(parseQueries(Files.readString(artifact)))
-      else {
-        System.err.println(s"[bench] min-run $i failed (rc=$rc); " +
-          s"log: ${tmp.resolve(s"run$i.log")}")
-        None
-      }
-    }
-    if (raw.isEmpty) {
-      System.err.println("[bench] every min-run failed; falling back " +
-        "to one in-process run")
-      val pb = new ProcessBuilder(((javaBin +: jvmArgs) ++
-        Seq("-cp", sys.props("java.class.path"), "graft.Bench")): _*)
-      pb.environment().remove("GRAFT_BENCH_RUNS")
-      pb.environment().put("SPARK_GRAFT_SHARD_CHILD", "1")
-      pb.environment().put("SPARK_GRAFT_EMIT_BENCH_JSON", "1")
-      pb.inheritIO()
-      sys.exit(pb.start().waitFor())
-    }
-    val mins = raw.flatMap(_.keys).distinct.sorted
-      .map(n => n -> raw.flatMap(_.get(n)).min)
-    val qs = mins.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val rawJson = raw.map(m => m.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}"))
-      .mkString("[", ",", "]")
-    val compact = s"""{"metric":"total","value":${mins.map(_._2).sum},""" +
-      s""""unit":"sec","queries":$qs,"sf":"$sfDir","runs":${raw.size},""" +
-      s""""basis":"min"}"""
-    val line = compact.dropRight(1) + s""","runs_raw":$rawJson}"""
-    println(line)
-    writeArtifact(line,
-      if (only.isDefined) "latest_partial.json" else "latest.json")
-    printBenchJson(compact)
-  }
-
-  /** Fork one child JVM per shard (sequentially — parallel children
-    * would contend for the same local[cpus] cores and measure
-    * contention, not queries), each with the parent's exact JVM args
-    * and classpath plus a round-robin SPARK_GRAFT_ONLY subset; merge
-    * the per-shard query maps into the single driver-contract JSON
-    * line. Any child failure falls back to the classic single-process
-    * run so the driver artifact never goes missing. */
-  private def runSharded(shards: Int, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    import java.nio.charset.StandardCharsets
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
+    val runs = sys.env.getOrElse("GRAFT_BENCH_RUNS", "1").toInt
     val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
     // Shard assignment is a STABLE HASH of the gate name, not the
     // round-robin index: index-based assignment recomposed every shard
     // when r15 added 29 gates, and context-sensitive ~1 s gates (t116,
     // t324) swung 3-4x on the new neighbors alone. Name-hashed
     // assignment keeps every existing gate in its shard when gates are
     // added, so cross-round per-gate numbers compare like for like.
-    val groups = (0 until shards).map(k => names.filter(n =>
-      math.floorMod(scala.util.hashing.MurmurHash3.stringHash(n), shards) == k))
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val jvmArgs = ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val tmp = Files.createTempDirectory("graft_bench_shards")
-    val perQuery = scala.collection.mutable.Map[String, Double]()
-    val ok = groups.zipWithIndex.forall { case (group, k) =>
-      val outDir = tmp.resolve(s"shard$k")
-      val cmd = (javaBin +: jvmArgs) ++
-        Seq("-cp", sys.props("java.class.path"), "graft.Bench")
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_SHARD_CHILD", "1")
-      pb.environment().put("SPARK_GRAFT_ONLY", group.mkString(","))
-      pb.environment().put("SPARK_GRAFT_BENCH_OUT", outDir.toString)
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(tmp.resolve(s"shard$k.log").toFile)
-      val rc = pb.start().waitFor()
-      val artifact = outDir.resolve("latest_partial.json")
-      if (rc != 0 || !Files.exists(artifact)) {
-        System.err.println(s"[bench] shard $k failed (rc=$rc); " +
-          s"log: ${tmp.resolve(s"shard$k.log")}")
-        false
-      } else {
-        parseQueries(Files.readString(artifact))
-          .foreach { case (n, v) => perQuery(n) = v }
-        true
+    val groups =
+      if (shards <= 1 || only.isDefined) Seq(names)
+      else (0 until shards).map(k => names.filter(n =>
+        math.floorMod(scala.util.hashing.MurmurHash3.stringHash(n), shards) == k))
+    if (runs <= 1 && groups.size == 1) {
+      emit(inProcess(names, sfDir), sfDir)
+      return
+    }
+    // Repeats and their shards run SEQUENTIALLY — parallel children
+    // would contend for the same local[cpus] cores and measure
+    // contention, not queries. A repeat counts only if every shard
+    // returns its gates.
+    val tmp = Files.createTempDirectory("graft_bench")
+    val reps = (0 until runs.max(1)).flatMap { i =>
+      val parts = groups.indices.iterator
+        .map(k => fork(groups(k), tmp, s"run${i}_shard$k"))
+        .takeWhile(_.isDefined).flatten.toSeq
+      val merged = Run(parts.flatMap(_.queries).toMap,
+        parts.flatMap(_.failed).toSet)
+      if (merged.queries.size == names.size) Some(merged)
+      else {
+        System.err.println(s"[bench] run $i incomplete " +
+          s"(${merged.queries.size}/${names.size})")
+        None
       }
     }
-    if (!ok || perQuery.size != names.size) {
-      System.err.println(s"[bench] sharded run incomplete " +
-        s"(${perQuery.size}/${names.size}); falling back to one process")
-      val pb = new ProcessBuilder(((javaBin +: jvmArgs) ++
-        Seq("-cp", sys.props("java.class.path"), "graft.Bench")): _*)
-      pb.environment().put("SPARK_GRAFT_SHARD_CHILD", "1")
-      pb.environment().put("SPARK_GRAFT_EMIT_BENCH_JSON", "1")
-      pb.environment().remove("SPARK_GRAFT_ONLY")
-      pb.inheritIO()
-      sys.exit(pb.start().waitFor())
+    if (reps.isEmpty) {
+      // the run still leaves its artifact
+      System.err.println("[bench] every forked run failed; falling back " +
+        "to one in-process run")
+      emit(inProcess(names, sfDir), sfDir)
+    } else if (runs <= 1) emit(reps.head, sfDir, Seq("shards" -> groups.size))
+    else emit(Run(names.map(n => n -> reps.map(_.queries(n)).min).toMap,
+      reps.flatMap(_.failed).toSet), sfDir, raw = reps)
+  }
+
+  /** Untimed session warm-up: parquet reader, codegen, shuffle/window/
+    * join machinery and the Spark ML KMeans path, so the first timed
+    * gates measure steady state (what a long-running job sees), not
+    * one-time JIT/session costs. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .selectExpr("sum(l_quantity)").collect()
+    val w = spark.range(100000).select(col("id"), (col("id") % 97).as("k"))
+    w.withColumn("c", count(lit(1)).over(Window.partitionBy("k")))
+      .join(w.select(col("k"), col("id").as("id2")), "k")
+      .select(explode(array(col("id"), col("id2"))).as("x"))
+      .groupBy().max("x").collect()
+    // every ANN/clustering gate pays ~3s of one-time ML initialization
+    // (class loading + codegen for vector ops) otherwise, which is
+    // session cost, not query cost (a long-running serve job fits
+    // models once)
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    val tiny = spark.range(256)
+      .select(array_to_vector(array((0 until 8).map(j =>
+        ((col("id") * (j + 3)) % 17).cast("double")): _*)).as("features"))
+    new KMeans().setK(4).setSeed(1).setMaxIter(2).setInitMode("random")
+      .fit(tiny)
+  }
+
+  /** Build gate `name` and run its timed action, `count()`. The clock
+    * covers construction too: maintenance gates stage writes and
+    * iterative gates converge before returning their final frame — that
+    * work IS the operator. Returns the seconds (to the failure, if the
+    * gate throws) and the frame or the error. */
+  private[graft] def timeGate(spark: SparkSession, name: String, sfDir: String)
+      : (Double, Either[Throwable, DataFrame]) = {
+    val t0 = System.nanoTime()
+    val result =
+      try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.count()
+        Right(df)
+      } catch { case e: Throwable => Left(e) }
+    ((System.nanoTime() - t0) / 1e9, result)
+  }
+
+  /** Time `names` in this JVM after the warm-up. */
+  private def inProcess(names: Seq[String], sfDir: String): Run = {
+    val spark = GraftSession.local()
+    warmUp(spark, sfDir)
+    val failed = Set.newBuilder[String]
+    val secs = names.map { name =>
+      val (sec, result) = timeGate(spark, name, sfDir)
+      result.swap.foreach { e =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+      }
+      name -> sec
+    }.toMap
+    spark.stop()
+    Run(secs, failed.result())
+  }
+
+  /** Run `gates` as a subset bench in a fresh JVM with this JVM's args
+    * and classpath, writing its artifact and log under `tmp`; the
+    * child's result, or `None` if it fails. */
+  private def fork(gates: Seq[String], tmp: Path, tag: String): Option[Run] = {
+    val out = tmp.resolve(tag)
+    val log = tmp.resolve(s"$tag.log")
+    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
+    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+    val pb = new ProcessBuilder(((javaBin +: jvmArgs.toSeq) ++
+      Seq("-cp", sys.props("java.class.path"), "graft.Bench")): _*)
+    pb.environment().remove("GRAFT_BENCH_RUNS")
+    pb.environment().put("SPARK_GRAFT_ONLY", gates.mkString(","))
+    pb.environment().put("SPARK_GRAFT_BENCH_OUT", out.toString)
+    pb.redirectErrorStream(true).redirectOutput(log.toFile)
+    val rc = pb.start().waitFor()
+    val artifact = out.resolve("latest_partial.json")
+    if (rc == 0 && Files.exists(artifact)) {
+      val node = Json.readTree(artifact.toFile)
+      val failed = node.path("failed").elements().asScala.map(_.asText).toSet
+      failed.foreach(g => System.err.println(s"[bench] $g failed: see $log"))
+      Some(Run(node.get("queries").properties().asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap, failed))
+    } else {
+      System.err.println(s"[bench] $tag failed (rc=$rc); log: $log")
+      None
     }
-    val qs = perQuery.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${perQuery.values.sum},""" +
-      s""""unit":"sec","queries":$qs,"sf":"$sfDir","shards":$shards}"""
+  }
+
+  /** The headline artifact of a run: total, per-gate map, sf, `extra`,
+    * and the failed gates when any threw. */
+  private def artifact(run: Run, sfDir: String, extra: (String, Any)*)
+      : ListMap[String, Any] =
+    ListMap[String, Any]("metric" -> "total", "value" -> run.total,
+      "unit" -> "sec", "queries" -> TreeMap(run.queries.toSeq: _*),
+      "sf" -> sfDir) ++ extra ++
+      (if (run.failed.isEmpty) Nil else Seq("failed" -> run.failed.toSeq.sorted))
+
+  /** Final-line contract: the full artifact line can run tens of
+    * kilobytes (386 queries; MIN-of-N carries every raw run), and the
+    * harness running the bench reconstructs its summary from a TRUNCATED
+    * captured log tail
+    * of a few thousand chars — even the `BENCH_JSON:` compact line
+    * (full query map, no `runs_raw`) is ~15 KB and never survives that
+    * window, and r14/r15 both ended `parsed: null` because no COMPLETE
+    * bare JSON line sat inside the tail (the prefixed `BENCH_SUMMARY:`
+    * line does not `json.loads`). So every exit path prints, as the very
+    * LAST stdout line, this BARE one-line digest (total, gate count,
+    * basis, sf), short enough to fit the tail window whole, also kept in
+    * `bench_out/summary.json`. `queries` is present but empty by design —
+    * the full map lives at the `artifact` path. */
+  private[graft] def digest(run: Run, sfDir: String, basis: String,
+      runs: Int): String =
+    Json.writeValueAsString(ListMap[String, Any](
+      "metric" -> "total", "value" -> run.total, "unit" -> "sec",
+      "queries" -> Map.empty, "gates" -> run.queries.size, "basis" -> basis,
+      "runs" -> runs, "cpus" -> GraftSession.cpus, "sf" -> sfDir,
+      "artifact" -> s"bench_out/latest_c${GraftSession.cpus}.json"))
+
+  /** Print and store a finished run: the artifact line on stdout and in
+    * `<out>/latest.json` (`latest_partial.json` for a subset run, so it
+    * never clobbers the full artifact of record) plus a
+    * `$SPARK_GRAFT_CPUS`-keyed copy of a full one (`latest_c<cpus>.json`,
+    * so runs at different core counts never overwrite each other's map);
+    * then the `BENCH_JSON:` line, the `BENCH_SUMMARY:` digest and the
+    * bare digest as the last line. A MIN-of-N run passes its repeats as
+    * `raw`: the artifact gains `runs`, `basis` and (off the `BENCH_JSON:`
+    * line) `runs_raw`. */
+  private def emit(run: Run, sfDir: String,
+      extra: Seq[(String, Any)] = Nil, raw: Seq[Run] = Nil): Unit = {
+    val (basis, runs) = if (raw.isEmpty) ("single", 1) else ("min", raw.size)
+    val head = artifact(run, sfDir, extra ++
+      (if (raw.isEmpty) Nil else Seq("runs" -> runs, "basis" -> basis)): _*)
+    val compact = Json.writeValueAsString(head)
+    val line = if (raw.isEmpty) compact else Json.writeValueAsString(
+      head + ("runs_raw" -> raw.map(r => TreeMap(r.queries.toSeq: _*))))
     println(line)
-    writeArtifact(line, "latest.json")
-    printBenchJson(line)
+    write(if (only.isDefined) "latest_partial.json" else "latest.json", line)
+    if (only.isEmpty) write(s"latest_c${GraftSession.cpus}.json", line)
+    println("BENCH_JSON: " + compact)
+    val d = digest(run, sfDir, basis, runs)
+    println("BENCH_SUMMARY: " + d)
+    write("summary.json", d)
+    println(d) // the bare final line IS the output contract
+  }
+
+  private def write(name: String, line: String): Unit = {
+    Files.createDirectories(outDir)
+    Files.write(outDir.resolve(name),
+      (line + "\n").getBytes(StandardCharsets.UTF_8))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import org.apache.spark.sql.graft.{CosineSimilarity, DotProduct, ForeignBucketHash, MinHashBands, MinHashSignature, ShingleHashes, SimHash64, TokenCount}
+import org.apache.spark.sql.graft.NativeFunctions
 
 /** Session extensions: inject the native expressions as SQL functions —
   * the registration pattern of the reference's `OdpsExtensions`
@@ -12,48 +12,13 @@ import org.apache.spark.sql.graft.{CosineSimilarity, DotProduct, ForeignBucketHa
   * the write-rule machinery Spark's file sources already cover.
   *
   * Use: `.config("spark.sql.extensions", "graft.GraftExtensions")`, or call
-  * [[graft.functions.NativeFunctions.register]] on a live session.
+  * [[org.apache.spark.sql.graft.NativeFunctions.register]] on a live
+  * session; both install [[org.apache.spark.sql.graft.NativeFunctions.sqlFunctions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      exprs => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      exprs => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      exprs => SimHash64(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("token_count"),
-      new ExpressionInfo(classOf[TokenCount].getName, "token_count"),
-      exprs => TokenCount(exprs.head)))
-    def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
-      e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => sys.error(s"expected integer literal, got $other")
-      }
-    e.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      exprs => ShingleHashes(exprs(0), intLit(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      exprs => MinHashSignature(exprs(0), intLit(exprs(1)), intLit(exprs(2)))))
-    e.injectFunction((
-      FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"),
-      exprs => MinHashBands(exprs(0), intLit(exprs(1)), intLit(exprs(2)),
-        intLit(exprs(3)))))
-    e.injectFunction((
-      FunctionIdentifier("foreign_bucket_hash"),
-      new ExpressionInfo(classOf[ForeignBucketHash].getName,
-        "foreign_bucket_hash"),
-      exprs => ForeignBucketHash(exprs)))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    NativeFunctions.sqlFunctions.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(NativeFunctions.getClass.getName, name), build))
+    }
 }

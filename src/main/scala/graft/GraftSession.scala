@@ -14,6 +14,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Cores for the harness mains and the test suite: `SPARK_GRAFT_CPUS`,
+    * else every core of this machine. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+
   def builder(cores: Int = Runtime.getRuntime.availableProcessors(),
       warehouseRoot: Option[String] = None): SparkSession.Builder = {
     var b = SparkSession.builder()
@@ -35,7 +40,7 @@ object GraftSession {
   }
 
   /** Local session for tests/benchmarks on this machine. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+  def local(cores: Int = cpus,
       warehouseRoot: Option[String] = None): SparkSession = {
     val s = builder(cores, warehouseRoot)
       .master(s"local[$cores]")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round instrumentation: dump `.explain("formatted")` for
@@ -9,46 +8,36 @@ import java.nio.file.{Files, Paths}
   *   runMain graft.PlanDump <sfDir> <outDir> <name1,name2,...>
   *
   * `GRAFT_PLAN_RUNS=N` additionally times N executions of each gate's
-  * Bench action (`df.count()` — the same timed action the bench uses)
-  * after the plan dump, printing per-run seconds; run 1 includes the
-  * gate's side effects (streaming ingests, writes), so for effectful
-  * gates only run 1 is representative and later runs time the declared
-  * read-back only. Plans are captured BEFORE execution (the initial
-  * AQE plan, same as what `explain` shows a user). */
+  * Bench action ([[Bench.timeGate]], after Bench's warm-up) following
+  * the plan dump, printing per-run seconds; run 1 includes the gate's
+  * side effects (streaming ingests, writes), so for effectful gates only
+  * run 1 is representative and later runs time the declared read-back
+  * only. Plans are captured BEFORE execution (the initial AQE plan, same
+  * as what `explain` shows a user).
+  *
+  * Spark confs for a diagnosis run come in as JVM system properties,
+  * e.g. an event log:
+  *
+  *   sbt 'set javaOptions += "-Dspark.eventLog.enabled=true"' "runMain graft.PlanDump ..."
+  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("GRAFT_PLAN_RUNS", "0").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    // ad-hoc diagnosis confs, e.g. event logging:
-    //   GRAFT_EXTRA_CONFS="spark.eventLog.enabled=true,spark.eventLog.dir=/tmp/evt"
-    sys.env.get("GRAFT_EXTRA_CONFS").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
-    // same warmup as Bench so timings are comparable
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .selectExpr("sum(l_quantity)").collect()
+    Bench.warmUp(spark, sfDir)
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
-      val fn = SparkEntry.queries(n)
       spark.sparkContext.setJobDescription(s"plandump: $n")
-      val df = fn(spark, sfDir)
+      val df = SparkEntry.queries(n)(spark, sfDir)
       Files.writeString(Paths.get(s"$outDir/$n.txt"),
         df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       println(s"[plandump] $n plan -> $outDir/$n.txt")
       (1 to runs).foreach { i =>
-        // fn(...) inside the timed region, exactly like Bench.main —
-        // effectful gates (streaming ingests) do their work in fn
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        println(f"[plandump] $n run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        val (sec, result) = Bench.timeGate(spark, n, sfDir)
+        result.toTry.get
+        println(f"[plandump] $n run $i: $sec%.3f s")
       }
     }
     spark.stop()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
 import org.apache.spark.sql.functions._
 
 /** sf0.1 → sf1.0 scale smoke for the heavy operator family: builds a 10x
@@ -319,29 +320,16 @@ object ScaleSmoke {
 
   private def runOne(spark: SparkSession, name: String, dir: String)
       : (Double, Int, Int) = {
-    // the clock covers query CONSTRUCTION too: maintenance gates (q87/q89)
-    // stage writes and d63 iterates to convergence before returning their
-    // final DataFrame — that work IS the operator
-    val t0 = System.nanoTime()
-    val df = SparkEntry.queries(name)(spark, dir)
-    df.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    val plan = df.queryExecution.executedPlan.toString
-    val exchanges = "(?m)^.*Exchange".r.findAllIn(plan).size
-    val broadcasts = "BroadcastExchange".r.findAllIn(plan).size
-    (sec, exchanges, broadcasts)
+    val (sec, result) = Bench.timeGate(spark, name, dir)
+    val nodes = graft.plans.PlanNodes(result.toTry.get.queryExecution.executedPlan)
+    (sec, nodes.count(_.isInstanceOf[Exchange]),
+      nodes.count(_.isInstanceOf[BroadcastExchangeExec]))
   }
 
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft_sf1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$outDir/documents.parquet"))) {
@@ -349,16 +337,12 @@ object ScaleSmoke {
       buildScaled(spark, baseDir, outDir)
     } else copyDims(spark, baseDir, outDir) // top-up newly-needed dims
 
-    // warmup (same rationale as Bench)
-    spark.read.parquet(s"$baseDir/lineitem.parquet")
-      .selectExpr("sum(l_quantity)").collect()
+    Bench.warmUp(spark, baseDir)
 
     // Optional subset for iteration (same contract as Bench); a subset run
     // writes to sf1_smoke_partial.json so the full artifact is never
     // clobbered by a partial one.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = Heavy.filter(n => only.forall(_.contains(n)))
+    val selected = Heavy.filter(n => Bench.only.forall(_.contains(n)))
 
     val rows = selected.map { name =>
       // two runs per (query, scale), keep the min: the first base run of a
@@ -375,7 +359,7 @@ object ScaleSmoke {
     val dir = java.nio.file.Paths.get("scale_out")
     java.nio.file.Files.createDirectories(dir)
     val fileName =
-      if (only.isDefined) "sf1_smoke_partial.json" else "sf1_smoke.json"
+      if (Bench.only.isDefined) "sf1_smoke_partial.json" else "sf1_smoke.json"
     java.nio.file.Files.write(dir.resolve(fileName),
       (out + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()

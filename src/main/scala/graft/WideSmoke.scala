@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Wide-regime exercise for the declared keyed-checkpoint layout
   * (`CheckpointOps.keyed`, used by the iterative
@@ -23,7 +28,8 @@ import org.apache.spark.sql.functions._
   *     the DuckDB oracle pins at sf0.01/sf0.1). The two result sets
   *     must be EXACTLY equal.
   *  2. **Exchange accounting**: a QueryExecutionListener sums
-  *     `ShuffleExchange` occurrences over every query execution in
+  *     hash-partitioned shuffle exchanges ([[graft.plans.PlanNodes]],
+  *     query stages included) over every query execution in
   *     each run; the declared-layout run must plan strictly fewer
   *     edge-keyed exchanges (the per-iteration edge re-shuffle is the
   *     thing the declared layout removes).
@@ -34,37 +40,36 @@ import org.apache.spark.sql.functions._
   */
 object WideSmoke {
 
-  private final class ExchangeCounter
-      extends org.apache.spark.sql.util.QueryExecutionListener {
+  /** The hash partitionings of the shuffle exchanges anywhere in `plan`. */
+  private[graft] def hashExchanges(plan: SparkPlan): Seq[HashPartitioning] =
+    graft.plans.PlanNodes(plan)
+      .collect { case s: ShuffleExchangeExec => s.outputPartitioning }
+      .collect { case h: HashPartitioning => h }
+
+  /** Whether `h` hashes on column `name` first. */
+  private[graft] def keyedOn(h: HashPartitioning, name: String): Boolean =
+    h.expressions.headOption.collect { case a: Attribute => a.name }
+      .contains(name)
+
+  private final class ExchangeCounter extends QueryExecutionListener {
     val exchanges = new java.util.concurrent.atomic.AtomicLong(0)
     val executions = new java.util.concurrent.atomic.AtomicLong(0)
-    private def count(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
-      val s = try qe.executedPlan.toString catch { case _: Throwable => "" }
-      exchanges.addAndGet(
-        "(?m)^\\s*[+:]?-? ?(?:\\*\\(\\d+\\) )?Exchange hashpartitioning".r
-          .findAllIn(s).size.toLong)
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit = {
+      exchanges.addAndGet(hashExchanges(qe.executedPlan).size.toLong)
       executions.incrementAndGet()
       ()
     }
-    override def onSuccess(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution,
-        durationNs: Long): Unit = count(qe)
-    override def onFailure(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution,
+    override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit = ()
   }
 
-  private def session(name: String, defaultParallelism: Int): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName(name)
-      .master(s"local[$cpus]")
+  private def session(defaultParallelism: Int): SparkSession = {
+    val spark = GraftSession.builder(GraftSession.cpus)
+      .master(s"local[${GraftSession.cpus}]")
       // the knob under test: the wide gate compares the data-derived
       // layout width against min(defaultParallelism, shuffle.partitions)
       .config("spark.default.parallelism", defaultParallelism)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -96,7 +101,7 @@ object WideSmoke {
 
     def runMode(mode: String, defaultParallelism: Int)
         : (Seq[Array[org.apache.spark.sql.Row]], Long, Long, Int, Double) = {
-      val spark = session(s"wide-smoke-$mode", defaultParallelism)
+      val spark = session(defaultParallelism)
       val counter = new ExchangeCounter
       spark.listenerManager.register(counter)
       // the width the gate will see, logged for the artifact
@@ -124,7 +129,7 @@ object WideSmoke {
     // HashPartitioning(src), and a keyed join over it must plan with no
     // exchange between that scan and the join.
     val probe = {
-      val spark = session("wide-smoke-probe", 2)
+      val spark = session(2)
       val e = edges(spark, dir)
       val ck = org.apache.spark.sql.graft.CheckpointOps
         .keyed(e, Seq("src"), None)
@@ -136,12 +141,11 @@ object WideSmoke {
       val small = spark.range(100).select(col("id").as("src"))
       val joined = ck.join(small, Seq("src"))
       joined.count()
-      val plan = joined.queryExecution.executedPlan.toString
       // exchanges anywhere in the final plan that hash on src: the
       // checkpointed side must contribute none (the small side
       // broadcasts)
-      val srcExchanges =
-        "Exchange hashpartitioning\\(src".r.findAllIn(plan).size
+      val srcExchanges = hashExchanges(joined.queryExecution.executedPlan)
+        .count(keyedOn(_, "src"))
       spark.stop()
       org.apache.spark.sql.SparkSession.clearActiveSession()
       org.apache.spark.sql.SparkSession.clearDefaultSession()

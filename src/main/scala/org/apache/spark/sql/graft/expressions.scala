@@ -1613,51 +1613,49 @@ object NativeFunctions {
     ExpressionUtils.column(CmsEstimate(
       ExpressionUtils.expression(sketch), ExpressionUtils.expression(item)))
 
+  private def intLit(e: Expression): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
+    case other => sys.error(s"expected integer literal, got $other")
+  }
+
+  private def fn(name: String)(build: Seq[Expression] => Expression) =
+    name -> build
+
+  /** The SQL function table: every native expression's SQL name and
+    * builder. `graft.GraftExtensions` injects it into sessions built with
+    * the extension; [[register]] installs it on a live session. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    fn("cosine_sim")(e => CosineSimilarity(e(0), e(1))),
+    fn("dot_product")(e => DotProduct(e(0), e(1))),
+    fn("simhash64")(e => SimHash64(e.head)),
+    fn("token_count")(e => TokenCount(e.head)),
+    fn("shingle_hashes")(e => ShingleHashes(e(0), intLit(e(1)))),
+    fn("minhash_signature")(e =>
+      MinHashSignature(e(0), intLit(e(1)), intLit(e(2)))),
+    fn("minhash_bands")(e =>
+      MinHashBands(e(0), intLit(e(1)), intLit(e(2)), intLit(e(3)))),
+    fn("subword_count")(e => SubwordCount(e.head)),
+    fn("token_fingerprint")(e => TokenFingerprint(e.head)),
+    fn("compression_ratio")(e =>
+      CompressionRatio(e(0), if (e.length > 1) intLit(e(1)) else 6)),
+    fn("unicode_normalize")(e => UnicodeNormalize(e(0), e.lift(1).map {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v, StringType) =>
+        v.toString
+      case other => sys.error(s"expected string literal form, got $other")
+    }.getOrElse("NFC"))),
+    fn("redact_card_numbers")(e => RedactCardNumbers(e.head)),
+    fn("shingle_distinct_count")(e =>
+      ShingleDistinctCount(e(0), intLit(e(1)))),
+    fn("interleave_bits")(e => InterleaveBits(e(0), intLit(e(1)))),
+    fn("foreign_bucket_hash")(e => ForeignBucketHash(e)),
+    fn("script_counts")(e => ScriptCounts(e.head)))
+
   /** Register the native expressions for SQL use in an existing session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def intLit(e: Expression): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-      case other => sys.error(s"expected integer literal, got $other")
+    sqlFunctions.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
     }
-    reg.createOrReplaceTempFunction("cosine_sim",
-      exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("token_count",
-      exprs => TokenCount(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      exprs => ShingleHashes(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      exprs => MinHashSignature(exprs(0), intLit(exprs(1)), intLit(exprs(2))), "built-in")
-    reg.createOrReplaceTempFunction("minhash_bands",
-      exprs => MinHashBands(exprs(0), intLit(exprs(1)), intLit(exprs(2)),
-        intLit(exprs(3))), "built-in")
-    reg.createOrReplaceTempFunction("subword_count",
-      exprs => SubwordCount(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("token_fingerprint",
-      exprs => TokenFingerprint(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("compression_ratio",
-      exprs => CompressionRatio(exprs(0),
-        if (exprs.length > 1) intLit(exprs(1)) else 6), "built-in")
-    reg.createOrReplaceTempFunction("unicode_normalize",
-      exprs => UnicodeNormalize(exprs(0), exprs.lift(1).map {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, StringType) =>
-          v.toString
-        case other => sys.error(s"expected string literal form, got $other")
-      }.getOrElse("NFC")), "built-in")
-    reg.createOrReplaceTempFunction("redact_card_numbers",
-      exprs => RedactCardNumbers(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("shingle_distinct_count",
-      exprs => ShingleDistinctCount(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("interleave_bits",
-      exprs => InterleaveBits(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("foreign_bucket_hash",
-      exprs => ForeignBucketHash(exprs), "built-in")
-    reg.createOrReplaceTempFunction("script_counts",
-      exprs => ScriptCounts(exprs.head), "built-in")
   }
 }
 

@@ -50,20 +50,13 @@ class CurationOpsSpec extends SparkTestBase {
 
   test("spanDedup: raw span text only shuffles for the candidate sliver " +
       "and the reassembly") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import graft.plans.PlanNodes
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
-      case q: QueryStageExec => q +: flatten(q.plan)
-      case r: ReusedExchangeExec => r +: flatten(r.child)
-      case other => other +: other.children.flatMap(flatten)
-    }
     val docs = Tables.documents(spark, sf)
     val out = Dedup.spanDedup(docs, "doc_id", "text", 8)
     out.count()
-    val shuffles = flatten(out.queryExecution.executedPlan)
+    val shuffles = PlanNodes(out.queryExecution.executedPlan)
       .collect { case s: ShuffleExchangeExec => s }
     assert(shuffles.nonEmpty)
     // a shuffle carrying the raw span column must be the candidate-sliver
@@ -71,7 +64,7 @@ class CurationOpsSpec extends SparkTestBase {
     // set); the corpus-wide repeated-span detection shuffles only
     // (xxhash64, partial count)
     shuffles.filter(_.output.exists(_.name == "span")).foreach { s =>
-      assert(flatten(s.child).exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      assert(PlanNodes(s.child).exists(_.isInstanceOf[BroadcastHashJoinExec]),
         s"span-width shuffle not under the candidate join:\n$s")
     }
   }

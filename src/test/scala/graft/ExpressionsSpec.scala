@@ -69,6 +69,28 @@ class ExpressionsSpec extends SparkTestBase {
     assert(h.getInt(5) > 0 && h.getInt(7) == h.getInt(2))
   }
 
+  test("a GraftSession session resolves the whole SQL function table " +
+      "without register, and integer arguments reject a DATE literal") {
+    // a fresh session: extension-injected functions only, no temp
+    // functions from `register` calls elsewhere in the suite
+    val s = spark.newSession()
+    NativeFunctions.sqlFunctions.foreach { case (name, _) =>
+      assert(s.catalog.functionExists(name), name)
+      assert(s.sql(s"DESCRIBE FUNCTION $name").collect().nonEmpty, name)
+    }
+    assert(s.sql("SELECT size(minhash_signature('a b c d e f', 4, 64))")
+      .head().getInt(0) === 64)
+    val dateAsCount =
+      "SELECT minhash_signature('a b c d e f', DATE'1970-01-05', 64)"
+    def literalError(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage)
+          .contains("expected integer literal"))
+    assert(literalError(intercept[Exception](s.sql(dateAsCount).collect())))
+    NativeFunctions.register(s)
+    assert(literalError(intercept[Exception](s.sql(dateAsCount).collect())))
+  }
+
   test("fused text-signal kernels match their HOF specs (incl. edge cases)") {
     import graft.operators.TextAnalysis
     val edge = Seq("", "x", "the", "the the the", "a  b", " leading",

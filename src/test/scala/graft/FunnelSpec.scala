@@ -89,20 +89,13 @@ class FunnelSpec extends SparkTestBase {
   }
 
   test("plan: one hash exchange on the entity, reused by windows and agg") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
-      case q: QueryStageExec => q +: flatten(q.plan)
-      case r: ReusedExchangeExec => r +: flatten(r.child)
-      case other => other +: other.children.flatMap(flatten)
-    }
+    import graft.plans.PlanNodes
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val ev = Tables.events(spark, sf)
       .select(col("user_id").as("u"), col("event_type").as("et"), col("ts"))
     val out = Funnel.reach(ev, "u", "ts", steps)
     out.count()
-    val shuffles = flatten(out.queryExecution.executedPlan)
+    val shuffles = PlanNodes(out.queryExecution.executedPlan)
       .collect { case s: ShuffleExchangeExec => s }
     assert(shuffles.size === 1,
       s"funnel depth must not add exchanges, got ${shuffles.size}:\n" +

@@ -545,8 +545,8 @@ class GraphSpec extends SparkTestBase {
     def srcExchanges(ck: DataFrame): Int = {
       val joined = ck.join(ranks, ck("src") === ranks("id"))
       assert(joined.count() === 5000L)
-      "Exchange hashpartitioning\\(src".r
-        .findAllIn(joined.queryExecution.executedPlan.toString).size
+      WideSmoke.hashExchanges(joined.queryExecution.executedPlan)
+        .count(WideSmoke.keyedOn(_, "src"))
     }
     withConf("spark.sql.shuffle.partitions" -> "1",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {

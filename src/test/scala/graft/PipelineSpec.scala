@@ -39,24 +39,16 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("exact-dedup subplan: text never shuffles on the corpus spine") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import graft.plans.PlanNodes
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    // AQE hides finalized stages behind leaf QueryStageExec nodes
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
-      case q: QueryStageExec => q +: flatten(q.plan)
-      case r: ReusedExchangeExec => r +: flatten(r.child)
-      case other => other +: other.children.flatMap(flatten)
-    }
     val docs = Tables.documents(spark, sf)
     val planted = docs.unionByName( // ensure real dup candidates flow
       docs.filter($"doc_id" < 20).withColumn("doc_id", $"doc_id" + 700000L))
     val out = TrainingDataPipeline.dropExactDups(
       TrainingDataPipeline.annotate(planted))
     out.count() // let AQE finalize the executed plan
-    val nodes = flatten(out.queryExecution.executedPlan)
+    val nodes = PlanNodes(out.queryExecution.executedPlan)
     val shuffles = nodes.collect { case s: ShuffleExchangeExec => s }
     assert(shuffles.nonEmpty)
     // text may cross the wire only inside candidate resolution (downstream
@@ -64,7 +56,7 @@ class PipelineSpec extends SparkTestBase {
     // never for the full corpus: the hash-count shuffle carries
     // (hash, count) and the loser anti-join broadcasts
     shuffles.filter(_.output.exists(_.name == "text")).foreach { s =>
-      assert(flatten(s.child)
+      assert(PlanNodes(s.child)
         .exists(_.isInstanceOf[BroadcastHashJoinExec]),
         s"corpus-width shuffle not under candidate join:\n$s")
     }

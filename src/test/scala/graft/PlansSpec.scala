@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** Physical-plan quality gates — the ".explain and iterate" discipline from
@@ -149,9 +150,8 @@ class PlansSpec extends SparkTestBase {
       graft.operators.Dedup.minhashNearDups(docs, "doc_id", "text"),
       graft.operators.Dedup.ngramJaccardNearDups(docs, "doc_id", "text")
     ).foreach { df =>
-      val p = plan(df)
-      val n = "Exchange hashpartitioning".r.findAllIn(p).size
-      assert(n <= 3, s"plan grew to $n wide exchanges:\n" + p.take(1500))
+      val n = WideSmoke.hashExchanges(df.queryExecution.executedPlan).size
+      assert(n <= 3, s"plan grew to $n wide exchanges:\n" + plan(df).take(1500))
     }
   }
 
@@ -406,5 +406,28 @@ class PlansSpec extends SparkTestBase {
     assert(ex > 0, p.take(4000))
     assert(p.substring(0, ex).contains("partial_count") ||
       p.substring(ex).contains("partial_count"), p.take(4000))
+  }
+
+  test("the plan walker counts every hash exchange, also under a " +
+      "non-last child") {
+    import spark.implicits._
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      // sort-merge join of two aggregates, then a regroup: one exchange
+      // per aggregate (the left one sits under the join's first child,
+      // a `:`-prefixed line in the plan string) plus the regroup's
+      val a = spark.range(1000).select(($"id" % 50).as("k"), $"id".as("v"))
+        .groupBy("k").agg(sum("v").as("sa"))
+      val b = spark.range(1000).select(($"id" % 70).as("k"), $"id".as("w"))
+        .groupBy("k").agg(max("w").as("mb"))
+      val q = a.join(b, "k").groupBy(($"k" % 7).as("g")).agg(sum("sa"))
+      assert(WideSmoke.hashExchanges(q.queryExecution.executedPlan).size === 3)
+      assert(q.collect().length === 7)
+      // after execution: the final AQE plan, exchanges inside query stages
+      val executed = q.queryExecution.executedPlan
+      val shuffles = graft.plans.PlanNodes(executed)
+        .collect { case s: ShuffleExchangeExec => s }
+      assert(shuffles.size === 3, executed)
+      assert(WideSmoke.hashExchanges(executed).size === 3, executed)
+    }
   }
 }
