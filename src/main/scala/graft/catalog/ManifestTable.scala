@@ -2,7 +2,7 @@ package graft.catalog
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -25,9 +25,11 @@ import graft.sources.{Fs, ManifestCommit}
   * class adds over the library calls:
   *
   *   - `SELECT ... FROM cat.ns.t` reads the LATEST pointer — the scan's
-  *     file list comes from the pointer map, never from directory
-  *     listing, so uncommitted/retired generations are invisible
-  *     (the catalog-first resolution the reference gives every table,
+  *     file list is the pointer's file lines, never a directory
+  *     listing, so uncommitted/retired generations and stray files in a
+  *     cited leaf are invisible, a cited file that is gone fails the
+  *     read, and planning starts no Spark job (the catalog-first
+  *     resolution the reference gives every table,
   *     `spark-connector/.../OdpsTableCatalog.scala:80-110`);
   *   - `SELECT ... FROM cat.ns.t VERSION AS OF p` time-travels to
   *     retained pointer `p` ([[GraftCatalog.loadTable(ident,version)]]);
@@ -48,7 +50,13 @@ import graft.sources.{Fs, ManifestCommit}
   * as [[GraftTable]] ([[org.apache.spark.sql.graft.GraftScanBuilder]]):
   * the pointer map becomes an explicit `PartitionSpec` (one
   * `PartitionPath` per live (partition, generation) pair), so Catalyst
-  * partition-prunes version-pinned reads exactly like current ones. */
+  * partition-prunes version-pinned reads exactly like current ones. The
+  * `InMemoryFileIndex` over those leaves is fed by a [[PointerFileCache]]
+  * holding each pair's recorded files, so every leaf is a cache hit and
+  * nothing is listed; sizes (and so scan statistics) are the recorded
+  * lengths. The file statuses carry no block locations — the
+  * object-store stance, where locality does not exist. A v1 pair (no
+  * file lines) misses the cache and the index lists that leaf itself. */
 class GraftManifestTable(ident: Identifier, dir: HPath, meta: TableMeta,
     spark: SparkSession, pointerId: Option[Long] = None,
     asOfTimestampMicros: Option[Long] = None)
@@ -80,48 +88,54 @@ class GraftManifestTable(ident: Identifier, dir: HPath, meta: TableMeta,
         TableCapability.OVERWRITE_DYNAMIC).asJava
   }
 
-  private def resolvedPointer: (Long, Map[String, Seq[Long]]) = {
+  private def resolvedPointer: ManifestCommit.Pointer = {
     val path = dir.toString
     (pointerId, asOfTimestampMicros) match {
       case (Some(p), _) =>
-        val map = ManifestCommit.pointerAt(path, p).getOrElse(
+        ManifestCommit.snapshot(path, p).getOrElse(
           throw new IllegalStateException(
             s"${ident} has no retained pointer p$p — never committed, " +
               "or vacuumed past the retention window"))
-        (p, map)
       case (None, Some(micros)) =>
         val p = ManifestCommit.pointerAsOfTime(path, micros / 1000L)
           .getOrElse(throw new IllegalStateException(
             s"$ident has no pointer committed at or before " +
               s"timestamp ${micros / 1000L} ms"))
-        (p, ManifestCommit.pointerAt(path, p).get)
+        ManifestCommit.snapshot(path, p).get
       case (None, None) =>
-        ManifestCommit.latestPointer(path).getOrElse(
-          (-1L, Map.empty[String, Seq[Long]]))
+        ManifestCommit.latestSnapshot(path).getOrElse(
+          ManifestCommit.Pointer(-1L, Map.empty, Map.empty))
     }
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val (resolvedId, map) = resolvedPointer
+    val pointer = resolvedPointer
     val partSchema = meta.partitionSchema
     val zone = spark.sessionState.conf.sessionLocalTimeZone
-    val leaves: Seq[PartitionPath] = map.toSeq.sortBy(_._1).flatMap {
+    val fs = Fs.of(dir)
+    def leaf(rel: String, g: Long) =
+      fs.makeQualified(new HPath(s"$dir/_gen/g=$g/$rel"))
+    val leaves: Seq[PartitionPath] = pointer.partitions.toSeq.sortBy(_._1).flatMap {
       case (rel, gens) =>
         val row = partitionRow(rel, partSchema, zone)
         gens.map { g =>
-          val leaf = new HPath(s"$dir/_gen/g=$g/$rel")
           // a time-travel read across a vacuumed horizon must fail, not
           // silently return the partitions that survived
           if (pointerId.isDefined || asOfTimestampMicros.isDefined)
-            require(Fs.exists(leaf),
-              s"pointer p$resolvedId of $ident cites vacuumed generation " +
+            require(fs.exists(leaf(rel, g)),
+              s"pointer p${pointer.id} of $ident cites vacuumed generation " +
                 s"g=$g — raise vacuum keepPointers for deeper time travel")
-          PartitionPath(row, Fs.of(leaf).makeQualified(leaf))
+          PartitionPath(row, leaf(rel, g))
         }
+    }
+    val recorded = pointer.files.map { case ((rel, g), files) =>
+      val dirPath = leaf(rel, g)
+      dirPath -> files.map(f => new FileStatus(f.length, false, 0, 0L,
+        f.modificationTime, new HPath(dirPath, f.name))).toArray
     }
     val fileIndex = new InMemoryFileIndex(spark,
       leaves.map(_.path), Map.empty[String, String], Some(meta.dataSchema),
-      FileStatusCache.getOrCreate(spark),
+      new PointerFileCache(recorded),
       userSpecifiedPartitionSpec = Some(PartitionSpec(partSchema, leaves)))
     new org.apache.spark.sql.graft.GraftScanBuilder(
       spark, fileIndex, meta.schema, meta.dataSchema,
@@ -190,6 +204,18 @@ object GraftManifestTable {
   /** Table property selecting the manifest-pointer commit protocol
     * (`'graft.commit.mode' = 'manifest'` at CREATE TABLE). */
   val CommitModeKey = "graft.commit.mode"
+
+  /** The recorded files of one pointer, by qualified leaf path, as the
+    * file index's listing cache. The entries are immutable facts of that
+    * pointer, so nothing is ever stored or invalidated: a leaf missing
+    * here (a v1 pair) is listed by the index on every plan, as before. */
+  private final class PointerFileCache(leaves: Map[HPath, Array[FileStatus]])
+    extends FileStatusCache {
+    override def getLeafFiles(path: HPath): Option[Array[FileStatus]] =
+      leaves.get(path)
+    override def putLeafFiles(path: HPath, files: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = ()
+  }
 
   /** `col=value/...` rel path → typed partition-values row, the same
     * unescape + cast Spark's own partition discovery applies. */

@@ -20,10 +20,26 @@ import org.apache.spark.sql.functions._
   *  - `_gen/g=<n>/<col=value dirs>/part-*.parquet` — immutable data
   *    generations (Spark writes into a FRESH `g=<n>` dir, so its own
   *    task-commit renames never touch published data);
-  *  - `_pointer/p<n>.txt` — the commit points: header line, then one
-  *    `partitionRelPath TAB gen TAB gen...` line per live partition
-  *    (tabs cannot appear in partition dirs — Spark's path escaping
-  *    percent-encodes control characters). Highest `n` wins.
+  *  - `_pointer/p<n>.txt` — the commit points, highest `n` wins. The
+  *    header line `graft-pointer v2`, then per live partition (sorted):
+  *    one partition line `partitionRelPath TAB gen TAB gen...`, followed
+  *    by one file line `TAB gen TAB name TAB length TAB mtime` per data
+  *    file of each of its (partition, generation) pairs — the files
+  *    Spark's own listing of `_gen/g=<gen>/<partitionRelPath>` returned
+  *    when that generation was committed (name relative to the leaf
+  *    dir, bytes, modification millis). A partition line never starts
+  *    with a tab, a file line always does; tabs cannot appear in
+  *    partition dirs (Spark's path escaping percent-encodes control
+  *    characters) nor in Spark's part-file names.
+  *
+  * The file lines make the pointer the file manifest: a catalog scan
+  * ([[graft.catalog.GraftManifestTable]]) plans from them with no
+  * listing. Every commit carries the file lines of unchanged pairs
+  * forward verbatim. A `graft-pointer v1` body has partition lines only;
+  * its pairs, and a v1 pair carried forward into a v2 pointer, have no
+  * file lines, and readers list those leaves themselves — an old table
+  * reads as before, and each commit records files for the pairs it
+  * writes.
   *
   * Semantics vs [[PartitionedWrite.writePartitioned]]: identical
   * dynamic-partition behavior (overwrite replaces a partition's
@@ -53,7 +69,20 @@ import org.apache.spark.sql.functions._
 object ManifestCommit {
 
   private val PointerRe = "p(\\d+)\\.txt".r
-  private val Header = "graft-pointer v1"
+  private val Header = "graft-pointer v2"
+  private val HeaderV1 = "graft-pointer v1"
+
+  /** One data file of a (partition, generation) pair as its commit
+    * listed it: `name` relative to the partition leaf dir. */
+  final case class DataFile(name: String, length: Long,
+      modificationTime: Long)
+
+  /** One committed pointer: its partition → generation map, and the data
+    * files recorded per (partition, generation) pair. A pair absent from
+    * `files` is a v1 line (see the layout above); its leaf must be
+    * listed. */
+  final case class Pointer(id: Long, partitions: Map[String, Seq[Long]],
+      files: Map[(String, Long), Seq[DataFile]])
 
   private def genDir(path: String, gen: Long) = s"$path/_gen/g=$gen"
 
@@ -110,19 +139,24 @@ object ManifestCommit {
   /** The CAS pointer commit: resolve the latest pointer, verify no
     * concurrent commit since `base` touched a partition this write
     * `touches`, apply `update` to the latest map, and claim the next
-    * pointer id with one create-no-overwrite. A lost claim (another
-    * writer committed first) re-resolves and retries up to
-    * `maxRetries` times — non-overlapping writers each get a clean
-    * re-based commit; overlapping ones fail loudly instead of
-    * clobbering. Returns the committed pointer id. */
+    * pointer id with one create-no-overwrite. The new pointer records
+    * the `staged` leaves' files for the fresh generation `gen` and
+    * carries every other pair's file lines forward from the latest
+    * pointer. A lost claim (another writer committed first)
+    * re-resolves and retries up to `maxRetries` times — non-overlapping
+    * writers each get a clean re-based commit; overlapping ones fail
+    * loudly instead of clobbering. Returns the committed pointer id. */
   private def casCommit(path: String, base: Map[String, Seq[Long]],
+      gen: Long, staged: Seq[(String, Seq[DataFile])],
       touches: String => Boolean,
       update: Map[String, Seq[Long]] => Map[String, Seq[Long]],
       maxRetries: Int): Long = {
+    val fresh = staged.map { case (rel, files) => (rel, gen) -> files }
     var attempt = 0
     while (true) {
-      val latest = latestPointer(path)
-      val latestMap = latest.map(_._2).getOrElse(Map.empty[String, Seq[Long]])
+      val latest = latestSnapshot(path)
+      val latestMap = latest.map(_.partitions)
+        .getOrElse(Map.empty[String, Seq[Long]])
       if (latestMap != base) {
         val changed = (latestMap.keySet ++ base.keySet)
           .filter(rel => latestMap.get(rel) != base.get(rel))
@@ -133,9 +167,10 @@ object ManifestCommit {
             "since this write planned against pointer state — refusing " +
             "to clobber; re-run against the current table state")
       }
-      val id = latest.map(_._1 + 1L).getOrElse(0L)
+      val id = latest.map(_.id + 1L).getOrElse(0L)
+      val files = latest.map(_.files).getOrElse(Map.empty) ++ fresh
       try {
-        writePointer(path, id, update(latestMap))
+        writePointer(path, id, update(latestMap), files)
         return id
       } catch {
         case lost: PointerClaimLost =>
@@ -158,23 +193,49 @@ object ManifestCommit {
       .collect { case PointerRe(id) => id.toLong }.sorted
   }
 
-  private def parsePointer(path: String, id: Long)
-      : Map[String, Seq[Long]] = {
-    val lines = Fs.readString(new HPath(s"$path/_pointer", s"p$id.txt"))
+  /** The one pointer parser: both header versions, the layout's line
+    * grammar, and loud failure on anything else. */
+  private def parsePointer(path: String, id: Long): Pointer = {
+    val file = s"$path/_pointer/p$id.txt"
+    val lines = Fs.readString(new HPath(file))
       .split('\n').toSeq.filter(_.nonEmpty)
-    require(lines.headOption.contains(Header),
-      s"malformed pointer $path/_pointer/p$id.txt")
-    lines.tail.map { ln =>
-      val parts = ln.split('\t').toSeq
-      parts.head -> parts.tail.map(_.toLong)
-    }.toMap
+    val v2 = lines.headOption.contains(Header)
+    require(v2 || lines.headOption.contains(HeaderV1),
+      s"malformed pointer $file")
+    val partitions = Seq.newBuilder[(String, Seq[Long])]
+    val files = scala.collection.mutable.Map.empty[(String, Long), Seq[DataFile]]
+    var rel: Option[String] = None
+    lines.tail.foreach { ln =>
+      val f = ln.split('\t')
+      if (f.head.nonEmpty) {
+        rel = Some(f.head)
+        partitions += f.head -> f.toSeq.tail.map(_.toLong)
+      } else {
+        require(v2 && rel.nonEmpty && f.length == 5,
+          s"malformed pointer $file: file line '$ln'")
+        val key = (rel.get, f(1).toLong)
+        files(key) = files.getOrElse(key, Vector.empty) :+
+          DataFile(f(2), f(3).toLong, f(4).toLong)
+      }
+    }
+    Pointer(id, partitions.result().toMap, files.toMap)
   }
+
+  /** Pointer `id` with its file entries; None if that pointer never
+    * existed or was vacuumed. */
+  def snapshot(path: String, id: Long): Option[Pointer] =
+    if (pointerIds(path).contains(id)) Some(parsePointer(path, id))
+    else None
+
+  /** The latest committed pointer with its file entries; None before
+    * the first commit. */
+  def latestSnapshot(path: String): Option[Pointer] =
+    pointerIds(path).maxOption.map(parsePointer(path, _))
 
   /** The committed (partitionRel → generation list) map of pointer
     * `id`; None if that pointer never existed or was vacuumed. */
   def pointerAt(path: String, id: Long): Option[Map[String, Seq[Long]]] =
-    if (pointerIds(path).contains(id)) Some(parsePointer(path, id))
-    else None
+    snapshot(path, id).map(_.partitions)
 
   /** `TIMESTAMP AS OF`: the newest retained pointer whose pointer-file
     * modification time is at or before `millis` — pointer files are
@@ -197,17 +258,20 @@ object ManifestCommit {
 
   /** Latest committed (gen, partitionRel → generation list) under
     * `path`; None before the first commit. */
-  def latestPointer(path: String): Option[(Long, Map[String, Seq[Long]])] = {
-    val ids = pointerIds(path)
-    if (ids.isEmpty) None
-    else Some(ids.max -> parsePointer(path, ids.max))
-  }
+  def latestPointer(path: String): Option[(Long, Map[String, Seq[Long]])] =
+    latestSnapshot(path).map(p => p.id -> p.partitions)
 
+  /** Write pointer `id` for `map`, with the file lines `files` holds
+    * for its pairs (a pair `files` lacks stays a v1 line). */
   private def writePointer(path: String, id: Long,
-      map: Map[String, Seq[Long]]): Unit = {
+      map: Map[String, Seq[Long]],
+      files: Map[(String, Long), Seq[DataFile]]): Unit = {
     Fs.mkdirs(new HPath(s"$path/_pointer"))
-    val body = (Header +: map.toSeq.sortBy(_._1).map { case (rel, gens) =>
-      (rel +: gens.map(_.toString)).mkString("\t")
+    val body = (Header +: map.toSeq.sortBy(_._1).flatMap { case (rel, gens) =>
+      (rel +: gens.map(_.toString)).mkString("\t") +: gens.flatMap { g =>
+        files.getOrElse((rel, g), Nil).map(f =>
+          s"\t$g\t${f.name}\t${f.length}\t${f.modificationTime}")
+      }
     }).mkString("\n")
     // no-overwrite CREATE = the atomic claim on pointer id `id` (the
     // OffsetMarks generation-mark discipline; maps onto a conditional
@@ -224,16 +288,36 @@ object ManifestCommit {
     finally out.close()
   }
 
-  /** Relative partition leaf paths of an (unpublished) generation dir —
-    * its own listing, which is not a reader protocol. */
-  private def stagedRels(dest: String, depth: Int): Seq[String] = {
+  /** The data files in one partition leaf dir, as Spark's own file
+    * index would list them (hidden `_`/`.` files skipped); empty when
+    * the dir does not exist. */
+  private def listLeaf(dir: HPath): Seq[DataFile] = {
+    val listed = try Fs.of(dir).listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    listed.filter(s => s.isFile &&
+        org.apache.spark.sql.graft.Catalogs.listedByFileIndex(s.getPath.getName))
+      .map { s =>
+        val name = s.getPath.getName
+        require(!name.exists(c => c == '\t' || c == '\n'),
+          s"data file name '$name' cannot be recorded in a pointer")
+        DataFile(name, s.getLen, s.getModificationTime)
+      }.sortBy(_.name)
+  }
+
+  /** The partition leaves of an (unpublished) generation dir with their
+    * data files — the commit's own listing of its output, one
+    * `listStatus` per leaf, which is not a reader protocol. */
+  private def stagedLeaves(dest: String, depth: Int)
+      : Seq[(String, Seq[DataFile])] = {
     def leaves(p: HPath, d: Int): Seq[HPath] =
       if (d == depth) Seq(p)
       else Fs.listDirs(p).filter(_.getName.contains("="))
         .flatMap(leaves(_, d + 1))
     val destQ = Fs.of(new HPath(dest)).makeQualified(new HPath(dest))
-    leaves(destQ, 0)
-      .map(_.toString.stripPrefix(destQ.toString).stripPrefix("/"))
+    leaves(destQ, 0).map { leaf =>
+      leaf.toString.stripPrefix(destQ.toString).stripPrefix("/") ->
+        listLeaf(leaf)
+    }
   }
 
   /** [[PartitionedWrite.writePartitioned]] with the manifest-pointer
@@ -259,7 +343,8 @@ object ManifestCommit {
       .write.mode("append")
       .partitionBy(partitionCols: _*)
       .parquet(dest)
-    val staged = stagedRels(dest, partitionCols.length)
+    val leaves = stagedLeaves(dest, partitionCols.length)
+    val staged = leaves.map(_._1)
     require(staged.size <= limit,
       s"dynamic partition count ${staged.size} exceeds limit $limit " +
         s"(cols=${partitionCols.mkString(",")})")
@@ -280,7 +365,7 @@ object ManifestCommit {
       }
     }
     val stagedSet = staged.toSet
-    casCommit(path, base,
+    casCommit(path, base, gen, leaves,
       rel => stagedSet.contains(rel) || inTruncateScope(rel),
       applyTo, maxCommitRetries)
     staged
@@ -340,7 +425,7 @@ object ManifestCommit {
     val ids = pointerIds(path)
     val latest = if (ids.isEmpty) -1L else ids.max
     ids.map { id =>
-      val map = parsePointer(path, id)
+      val map = parsePointer(path, id).partitions
       (id, map.size.toLong,
         map.values.flatten.toSeq.distinct.size.toLong, id == latest)
     }.toDF("pointer_id", "partitions", "generations", "is_latest")
@@ -353,11 +438,11 @@ object ManifestCommit {
     * horizon fails instead of publishing dangling references).
     * Returns the new pointer id. */
   def rollback(path: String, toPointerId: Long): Long = {
-    val map = pointerAt(path, toPointerId).getOrElse(
+    val target = snapshot(path, toPointerId).getOrElse(
       throw new IllegalStateException(
         s"cannot roll back to pointer p$toPointerId under $path — " +
         "never committed, or vacuumed past the retention window"))
-    val missing = map.values.flatten.toSeq.distinct.sorted
+    val missing = target.partitions.values.flatten.toSeq.distinct.sorted
       .filterNot(g => Fs.exists(new HPath(genDir(path, g))))
     require(missing.isEmpty,
       s"rollback target p$toPointerId cites vacuumed generation(s) " +
@@ -366,7 +451,7 @@ object ManifestCommit {
     // deliberately NOT CAS-retried: a rollback that raced another commit
     // would silently erase it — the operator must re-decide against the
     // new latest state
-    try writePointer(path, next, map)
+    try writePointer(path, next, target.partitions, target.files)
     catch {
       case lost: PointerClaimLost => throw new IllegalStateException(
         s"rollback lost a commit race under $path (pointer p$next " +
@@ -388,7 +473,7 @@ object ManifestCommit {
     import spark.implicits._
     val ids = pointerIds(path)
     val pointers = ids.map { id =>
-      val parsed = scala.util.Try(parsePointer(path, id))
+      val parsed = scala.util.Try(parsePointer(path, id).partitions)
       (id, parsed)
     }
     val pointerRows = pointers.map { case (id, parsed) =>
@@ -447,41 +532,46 @@ object ManifestCommit {
     val dest = genDir(path, gen)
     data.repartition(partitionCols.map(col): _*)
       .write.mode("append").partitionBy(partitionCols: _*).parquet(dest)
-    val rels = stagedRels(dest, partitionCols.length)
+    val leaves = stagedLeaves(dest, partitionCols.length)
     onCommitStep("generation-written")
-    casCommit(path, base, _ => true,
-      _ => rels.map(_ -> Seq(gen)).toMap, maxRetries = 0)
+    casCommit(path, base, gen, leaves, _ => true,
+      _ => leaves.map(_._1 -> Seq(gen)).toMap, maxRetries = 0)
     gen
   }
 
-  private def relFiles(path: String, rel: String, gens: Seq[Long]) =
-    gens.flatMap { g =>
-      val dir = new HPath(s"${genDir(path, g)}/$rel")
-      if (!Fs.exists(dir)) Seq.empty
-      else Fs.of(dir).listStatus(dir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    }
+  /** Data files of partition `rel` across every generation `p` cites
+    * for it: the pointer's file lines, or for a v1 pair a listing of
+    * its leaf. */
+  private def partitionFiles(path: String, p: Pointer, rel: String)
+      : Seq[DataFile] =
+    p.partitions(rel).flatMap(g => p.files.getOrElse((rel, g),
+      listLeaf(new HPath(s"${genDir(path, g)}/$rel"))))
 
   /** Fragmented live partitions of the latest pointer — the manifest
     * sibling of [[Maintenance.compactionCandidates]]: a partition whose
     * file count (across every generation it cites) exceeds what one
-    * well-sized write would produce. Pointer resolution + per-partition
-    * listings, no data read, no Spark job. */
+    * well-sized write would produce. From the pointer's file lines
+    * alone (a v1 pair lists its leaf): no data read, no Spark job. */
   def compactionCandidates(path: String, targetFileBytes: Long)
       : Seq[Maintenance.CompactionPlan] = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val map = latestPointer(path).map(_._2).getOrElse(
-      return Seq.empty)
-    map.toSeq.sortBy(_._1).flatMap { case (rel, gens) =>
-      val fs = relFiles(path, rel, gens)
-      val bytes = fs.map(_.getLen).sum
-      val target = math.max(1L,
-        (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+    latestSnapshot(path).map(candidates(path, _, targetFileBytes))
+      .getOrElse(Seq.empty)
+  }
+
+  private def candidates(path: String, p: Pointer, targetFileBytes: Long)
+      : Seq[Maintenance.CompactionPlan] =
+    p.partitions.keys.toSeq.sorted.flatMap { rel =>
+      val fs = partitionFiles(path, p, rel)
+      val bytes = fs.map(_.length).sum
+      val target = targetFiles(bytes, targetFileBytes)
       if (fs.size > target)
         Some(Maintenance.CompactionPlan(rel, fs.size, bytes, target))
       else None
     }
-  }
+
+  private def targetFiles(bytes: Long, targetFileBytes: Long): Int =
+    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
 
   /** Rewrite ONLY the fragmented partitions of a manifest-pointer table
     * into one fresh generation and flip the pointer — the
@@ -497,12 +587,14 @@ object ManifestCommit {
       partitionCols: Seq[String],
       targetFileBytes: Long = 128L * 1024 * 1024,
       maxCommitRetries: Int = 5): Seq[String] = {
+    require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(partitionCols.nonEmpty,
       "manifest tables always have partition columns")
-    val base = latestPointer(path).map(_._2).getOrElse(
+    val latest = latestSnapshot(path).getOrElse(
       throw new IllegalStateException(
         s"no committed manifest-pointer state under $path"))
-    val plans = compactionCandidates(path, targetFileBytes)
+    val base = latest.partitions
+    val plans = candidates(path, latest, targetFileBytes)
     if (plans.isEmpty) return Seq.empty
     val gen = claimGeneration(path, nextGenStart(path))
     val dest = genDir(path, gen)
@@ -528,10 +620,11 @@ object ManifestCommit {
       .repartition((partitionCols :+ "__graft_bucket").map(col): _*)
       .drop("__graft_bucket")
       .write.mode("append").partitionBy(partitionCols: _*).parquet(dest)
-    val staged = stagedRels(dest, partitionCols.length)
+    val leaves = stagedLeaves(dest, partitionCols.length)
+    val staged = leaves.map(_._1)
     onCommitStep("generation-written")
     val stagedSet = staged.toSet
-    casCommit(path, base, stagedSet.contains,
+    casCommit(path, base, gen, leaves, stagedSet.contains,
       m => staged.foldLeft(m)((mm, rel) => mm.updated(rel, Seq(gen))),
       maxCommitRetries)
     staged
@@ -551,13 +644,13 @@ object ManifestCommit {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(partitionCols.nonEmpty,
       "manifest tables always have partition columns")
-    val base = latestPointer(path).map(_._2).getOrElse(
+    val latest = latestSnapshot(path).getOrElse(
       throw new IllegalStateException(
         s"no committed manifest-pointer state under $path"))
-    val totalTarget = base.toSeq.map { case (rel, gens) =>
-      val bytes = relFiles(path, rel, gens).map(_.getLen).sum
-      math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    }.sum
+    val base = latest.partitions
+    val totalTarget = base.keys.toSeq.map(rel => targetFiles(
+      partitionFiles(path, latest, rel).map(_.length).sum,
+      targetFileBytes)).sum
     val df = readMap(spark, path, base)
     val zk = graft.operators.ZOrder.key(
       graft.operators.ZOrder.fitBoundaries(df, zorderCols, bits),
@@ -572,11 +665,11 @@ object ManifestCommit {
       .sortWithinPartitions(orderCols: _*)
       .drop("__graft_zkey")
       .write.mode("append").partitionBy(partitionCols: _*).parquet(dest)
-    val staged = stagedRels(dest, partitionCols.length)
+    val leaves = stagedLeaves(dest, partitionCols.length)
     onCommitStep("generation-written")
-    casCommit(path, base, _ => true,
-      _ => staged.map(_ -> Seq(gen)).toMap, maxRetries = 0)
-    staged
+    casCommit(path, base, gen, leaves, _ => true,
+      _ => leaves.map(_._1 -> Seq(gen)).toMap, maxRetries = 0)
+    leaves.map(_._1)
   }
 
   /** Reclaim everything the retained pointers do not reference: the
@@ -594,17 +687,11 @@ object ManifestCommit {
   def vacuum(path: String, keepPointers: Int = 1,
       minUnreferencedAgeMs: Long = 0L): Seq[String] = {
     require(keepPointers >= 1, s"keepPointers must be >= 1, got $keepPointers")
-    val pDir = new HPath(s"$path/_pointer")
-    if (!Fs.exists(pDir)) return Seq.empty
-    val ids = Fs.of(pDir).listStatus(pDir).toSeq.map(_.getPath.getName)
-      .collect { case PointerRe(id) => id.toLong }.sorted
+    val ids = pointerIds(path)
     if (ids.isEmpty) return Seq.empty
     val keep = ids.takeRight(keepPointers).toSet
-    val live = keep.toSeq.flatMap { id =>
-      Fs.readString(new HPath(pDir, s"p$id.txt")).split('\n').toSeq
-        .filter(_.nonEmpty).drop(1)
-        .flatMap(_.split('\t').toSeq.tail.map(_.toLong))
-    }.toSet
+    val live = keep.toSeq
+      .flatMap(id => parsePointer(path, id).partitions.values.flatten).toSet
     val genRoot = new HPath(s"$path/_gen")
     val cutoff = System.currentTimeMillis() - minUnreferencedAgeMs
     val deleted = if (!Fs.exists(genRoot)) Seq.empty else {
@@ -615,7 +702,7 @@ object ManifestCommit {
         .map { s => Fs.deleteRetried(s.getPath); s.getPath.toString }
     }
     ids.filterNot(keep.contains).foreach(id =>
-      Fs.deleteRetried(new HPath(pDir, s"p$id.txt")))
+      Fs.deleteRetried(new HPath(s"$path/_pointer/p$id.txt")))
     deleted
   }
 }

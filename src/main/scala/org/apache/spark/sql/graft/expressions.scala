@@ -1206,8 +1206,16 @@ case class InterleaveBits(child: Expression, bits: Int)
 }
 
 /** Bridge to the session's package-private state (catalog manager,
-  * `Dataset.ofRows`) for catalog-aware helpers like max_pt. */
+  * `Dataset.ofRows`) for catalog-aware helpers like max_pt, and to
+  * Spark's package-private listing filter. */
 object Catalogs {
+  /** True for a file name Spark's own file index lists (it skips
+    * `_`/`.`-prefixed names other than parquet summaries, and in-flight
+    * `._COPYING_` copies) — so a recorded file manifest holds exactly
+    * what a listing would have returned. */
+  def listedByFileIndex(name: String): Boolean =
+    !org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** The one cast to the classic session that exposes `sessionState`. */
   def classic(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.classic.SparkSession =

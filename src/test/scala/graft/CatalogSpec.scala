@@ -559,6 +559,7 @@ class CatalogSpec extends SparkTestBase {
   test("manifest-commit table: inserts commit pointers; VERSION AS OF, " +
       "TIMESTAMP AS OF and .history resolve through the catalog") {
     import org.apache.hadoop.fs.{Path => HPath}
+    import graft.sources.Fs
     sql("CREATE NAMESPACE IF NOT EXISTS graft.mft")
     sql("CREATE TABLE graft.mft.t (v BIGINT, pt STRING) " +
       "PARTITIONED BY (pt) TBLPROPERTIES ('graft.commit.mode'='manifest')")
@@ -581,11 +582,19 @@ class CatalogSpec extends SparkTestBase {
     val hist = sql("SELECT pointer_id, is_latest FROM graft.mft.t.history " +
       "ORDER BY pointer_id").collect().map(r => (r.getLong(0), r.getBoolean(1)))
     assert(hist.toSeq == Seq((0L, false), (1L, false), (2L, true)))
-    // readers never list: planted crash debris outside the pointer is
-    // invisible to the catalog read
+    // readers never list: planted crash debris outside the pointer, and
+    // a stray parquet file inside a cited leaf, are both invisible to the
+    // catalog read
     val loc = s"$warehouse/mft/t"
     spark.range(5).selectExpr("id AS v", "'zz' AS pt")
       .write.parquet(s"$loc/_gen/g=99")
+    val stray = Files.createTempDirectory("graft_stray").toString + "/s"
+    spark.range(7).selectExpr("id AS v").coalesce(1).write.parquet(stray)
+    val strayFile = Fs.of(new HPath(stray)).listStatus(new HPath(stray))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+    val citedLeaf = new HPath(s"$loc/_gen/g=2/pt=a")
+    assert(Fs.exists(citedLeaf), "p2 cites g=2 for pt=a")
+    Fs.rename(strayFile, new HPath(citedLeaf, "part-99999-stray.parquet"))
     assert(sql("SELECT count(*) FROM graft.mft.t").head().getLong(0) == 1)
     // a vacuumed pointer fails loudly, not partially
     graft.sources.ManifestCommit.vacuum(loc, keepPointers = 1)
@@ -656,5 +665,136 @@ class CatalogSpec extends SparkTestBase {
       sql("INSERT INTO graft.mft3.e VALUES (1, 'x')"))
     assert(e.getMessage.toLowerCase.contains("does not support") ||
       e.getMessage.contains("external"), e.getMessage)
+  }
+
+  /** Job descriptions of every Spark job started while `f` runs. The
+    * listener bus delivers in order, so once a marker job's start has
+    * arrived, every earlier job start has too. */
+  private def jobsDuring[A](f: => A): (A, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def drain(marker: String): Unit = {
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(marker), s"listener never saw $marker")
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain("jobsDuring-before")
+      seen.clear()
+      val out = f
+      drain("jobsDuring-after")
+      (out, seen.asScala.toSeq.filterNot(_ == "jobsDuring-after"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def manifestTable(ns: String): String = {
+    sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
+    sql(s"CREATE TABLE graft.$ns.t (v BIGINT, pt STRING) " +
+      "PARTITIONED BY (pt) TBLPROPERTIES ('graft.commit.mode'='manifest')")
+    s"$warehouse/$ns/t"
+  }
+
+  test("manifest table: a cited data file that is gone fails the catalog " +
+      "read with an error naming it") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import graft.sources.{Fs, ManifestCommit}
+    val loc = manifestTable("mft4")
+    sql("INSERT INTO graft.mft4.t SELECT id AS v, " +
+      "IF(id % 2 = 0, 'a', 'b') AS pt FROM range(100)")
+    assert(sql("SELECT count(*) FROM graft.mft4.t").head().getLong(0) == 100)
+    val p = ManifestCommit.latestSnapshot(loc).get
+    val g = p.partitions("pt=a").head
+    val victim = p.files(("pt=a", g)).head.name
+    assert(Fs.delete(new HPath(s"$loc/_gen/g=$g/pt=a/$victim")))
+    val e = intercept[Exception](
+      sql("SELECT count(*) FROM graft.mft4.t").collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      .mkString("\n")
+    assert(messages.contains(victim), messages)
+  }
+
+  test("manifest table: planning a partition-pruned read over 40 " +
+      "partitions starts no Spark job and scans exactly the pointer's " +
+      "files for that partition") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import graft.sources.ManifestCommit
+    val loc = manifestTable("mft5")
+    sql("INSERT INTO graft.mft5.t SELECT id AS v, " +
+      "format_string('d%02d', id % 40) AS pt FROM range(400)")
+    val p = ManifestCommit.latestSnapshot(loc).get
+    assert(p.partitions.size == 40)
+    val q = sql("SELECT sum(v) FROM graft.mft5.t WHERE pt = 'd17'")
+    val (scanned, jobs) = jobsDuring {
+      graft.plans.PlanNodes(q.queryExecution.executedPlan)
+        .collect { case b: BatchScanExec => b.inputPartitions }.flatten
+        .flatMap { case fp: FilePartition => fp.files.map(_.toPath) }
+    }
+    assert(jobs.isEmpty, s"planning started jobs: $jobs")
+    val expected = p.partitions("pt=d17").flatMap(g =>
+      p.files(("pt=d17", g)).map(f => s"$loc/_gen/g=$g/pt=d17/${f.name}"))
+    assert(expected.nonEmpty)
+    assert(scanned.map(_.toUri.getPath).sorted ==
+      expected.map(new HPath(_).toUri.getPath).sorted)
+    assert(q.head().getLong(0) == (0L until 400L).filter(_ % 40 == 17).sum)
+  }
+
+  test("manifest table: a hand-written v1 pointer reads like its v2 twin; " +
+      "an INSERT onto it records files for the touched partition only") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import graft.sources.{Fs, Maintenance, ManifestCommit}
+    val loc = manifestTable("mft6")
+    sql("INSERT INTO graft.mft6.t VALUES (1,'a'), (2,'b'), (3,'c')")
+    sql("INSERT INTO graft.mft6.t VALUES (4,'a')")
+    def rows(): Seq[(String, Long)] =
+      sql("SELECT pt, v FROM graft.mft6.t").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    val v2Rows = rows()
+    assert(v2Rows == Seq(("a", 1L), ("a", 4L), ("b", 2L), ("c", 3L)))
+    val v2 = ManifestCommit.latestSnapshot(loc).get
+    assert(v2.files.keySet == v2.partitions.toSeq.flatMap { case (rel, gens) =>
+      gens.map(rel -> _) }.toSet, "every v2 pair carries its files")
+    // the same state as a v1 pointer: partition lines only
+    val v1Body = ("graft-pointer v1" +: v2.partitions.toSeq.sortBy(_._1).map {
+      case (rel, gens) => (rel +: gens.map(_.toString)).mkString("\t")
+    }).mkString("\n")
+    Fs.writeString(new HPath(s"$loc/_pointer/p${v2.id + 1}.txt"), v1Body)
+    val v1 = ManifestCommit.latestSnapshot(loc).get
+    assert(v1.id == v2.id + 1 && v1.partitions == v2.partitions &&
+      v1.files.isEmpty)
+    assert(rows() == v2Rows)
+    // maintenance planning falls back to listing v1 leaves
+    assert(ManifestCommit.compactionCandidates(loc, 1L << 30)
+      .map(c => c.rel -> c.files) == Seq("pt=a" -> 2))
+    // an append onto the v1 pointer: only the fresh (pt=b, g) pair gets
+    // file lines; the v1 pairs are carried forward as v1 lines
+    sql("INSERT INTO graft.mft6.t VALUES (5,'b')")
+    val v3 = ManifestCommit.latestSnapshot(loc).get
+    val freshGen = v3.partitions("pt=b").last
+    assert(v3.partitions == v2.partitions.updated("pt=b",
+      v2.partitions("pt=b") :+ freshGen))
+    assert(v3.files.keySet == Set(("pt=b", freshGen)))
+    assert(rows() == (v2Rows :+ ("b", 5L)).sorted)
+    // compaction records files for what it rewrites; the rest stay v1
+    assert(Maintenance.compactPartitions(spark, loc, Seq("pt"), 1L << 30)
+      == Seq("pt=a", "pt=b"))
+    val v4 = ManifestCommit.latestSnapshot(loc).get
+    assert(v4.files.keySet.map(_._1) == Set("pt=a", "pt=b"))
+    assert(!v4.files.keySet.exists(_._1 == "pt=c"))
+    assert(rows() == (v2Rows :+ ("b", 5L)).sorted)
   }
 }

@@ -408,6 +408,44 @@ class MaintenanceSpec extends SparkTestBase {
       map2.values.flatten.toSet.size === 1, "one generation, one flip")
   }
 
+  test("manifest vacuum after v2 commits and a compaction deletes " +
+      "exactly the generations no kept pointer cites") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft_mfvac").toString + "/t"
+    def state() = ManifestCommit.read(spark, root)
+      .select("k", "v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    ManifestCommit.writePartitioned(                               // g=0
+      Seq(("a", 1L), ("b", 2L)).toDF("k", "v").coalesce(1), root, Seq("k"))
+    ManifestCommit.writePartitioned(                               // g=1
+      Seq(("a", 3L)).toDF("k", "v").coalesce(1), root, Seq("k"),
+      overwrite = false)
+    ManifestCommit.writePartitioned(                               // g=2
+      Seq(("a", 4L)).toDF("k", "v").coalesce(1), root, Seq("k"),
+      overwrite = false)
+    // g=3 folds k=a only; k=b keeps citing g=0
+    assert(Maintenance.compactPartitions(spark, root, Seq("k"), 1L << 30)
+      === Seq("k=a"))
+    ManifestCommit.writePartitioned(                               // g=4
+      Seq(("b", 20L)).toDF("k", "v").coalesce(1), root, Seq("k"))
+    val before = state()
+    assert(before === Seq(("a", 1L), ("a", 3L), ("a", 4L), ("b", 20L)))
+    val ids = ManifestCommit.pointerIds(root)
+    assert(ids === (0L to 4L))
+    ids.foreach(id => assert(Fs.readString(new HPath(s"$root/_pointer/p$id.txt"))
+      .startsWith("graft-pointer v2\n"), s"p$id is a v2 pointer"))
+    val kept = ids.takeRight(2)
+    val cited = kept.flatMap(ManifestCommit.pointerAt(root, _).get.values.flatten)
+    assert(cited.toSet === Set(0L, 3L, 4L))
+    val deleted = ManifestCommit.vacuum(root, keepPointers = 2)
+    assert(deleted.map(d => new HPath(d).getName).toSet === Set("g=1", "g=2"))
+    assert(ManifestCommit.pointerIds(root) === kept)
+    assert(Fs.listDirs(new HPath(s"$root/_gen")).map(_.getName).toSet ===
+      Set("g=0", "g=3", "g=4"))
+    assert(state() === before)
+    assert(ManifestCommit.readAt(spark, root, kept.head).count() === 4L)
+  }
+
   test("manifest maintenance crash window: a failure between the " +
       "generation write and the pointer flip leaves the old pointer " +
       "serving; fsck flags the orphan; the re-run succeeds") {
