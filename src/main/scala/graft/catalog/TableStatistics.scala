@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
-import graft.sources.Fs
+import graft.sources.{Fs, GenerationLog}
 
 /** Per-partition row/byte statistics persisted next to the table data
   * (`_graft_stats.json`) and refreshed at every write commit — the
@@ -24,30 +24,16 @@ object TableStatistics {
       parts: Map[String, PartStat])
 
   /** LOGICAL stats identity (cache/invalidation key, legacy file). The
-    * committed content lives in generation files `_graft_stats.g{N}.json`
-    * beside it — the same rename-NO-overwrite CAS protocol as
-    * [[graft.sources.OffsetMarks.saveCas]], because a plain
+    * committed content is the [[graft.sources.GenerationLog]] of
+    * `_graft_stats.g{N}.json` files beside it, because a plain
     * read-merge-overwrite loses one commit's partition entries whenever
     * two jobs insert into DISJOINT partitions concurrently (both read the
     * same base, last rename wins, the loser's partitions revert to stale
     * counts until the next rewrite). */
   def statsFile(dir: HPath): HPath = new HPath(dir, "_graft_stats.json")
 
-  private val GenRe = "_graft_stats\\.g(\\d+)\\.json".r
-  private def genFile(home: HPath, gen: Long): HPath =
-    new HPath(home, s"_graft_stats.g$gen.json")
-  private def listGens(home: HPath): Seq[(Long, HPath)] =
-    if (!Fs.isDir(home)) Seq.empty
-    else Fs.of(home).listStatus(home).toSeq.flatMap { s =>
-      s.getPath.getName match {
-        case GenRe(n) => Some(n.toLong -> s.getPath)
-        case _ => None
-      }
-    }
-
-  /** Serializes same-JVM CAS commits; cross-JVM the rename-NONE is the
-    * arbiter (atomic on HDFS, checked on the local FS). */
-  private val casLock = new Object
+  private def log(home: HPath) =
+    new GenerationLog(home, "_graft_stats.g", ".json", first = 1L)
 
   /** Cached read ([[MetaCache.stats]], TTL'd): scan planning consults the
     * stats per query, and the uncached form is a LIST+GET per table per
@@ -57,24 +43,16 @@ object TableStatistics {
   def read(dir: HPath): Option[TableStats] =
     MetaCache.stats.get(statsFile(dir).toString)(readUncached(dir)._1)
 
-  /** Latest committed (stats, generation); (None, 0) before any commit.
-    * Retries if generation pruning removed the listed file underneath the
-    * read; a still-vanished file degrades to None (planner falls back to
-    * size estimates), never to a failed query. */
-  private def readUncached(dir: HPath): (Option[TableStats], Long) = {
-    var attempt = 0
-    while (attempt < 3) {
-      val latest = listGens(dir).sortBy(-_._1).headOption
-      val (f, gen) = latest.map { case (g, p) => (p, g) }
-        .getOrElse((statsFile(dir), 0L))
-      if (!Fs.exists(f)) return (None, gen)
-      scala.util.Try(Fs.readString(f)).toOption match {
-        case Some(json) => return (parse(json), gen)
-        case None => attempt += 1 // pruned underneath the read; re-list
-      }
+  /** Latest committed (stats, generation); before any commit, the
+    * legacy un-versioned file as generation 0, else (None, 0). A log
+    * that stays unreadable reads as empty: the planner falls back to
+    * size estimates, never to a failed query. */
+  private def readUncached(dir: HPath): (Option[TableStats], Long) =
+    scala.util.Try(log(dir).read()).getOrElse(None) match {
+      case Some((gen, json)) => (parse(json), gen)
+      case None =>
+        (scala.util.Try(Fs.readString(statsFile(dir))).toOption.flatMap(parse), 0L)
     }
-    (None, 0L)
-  }
 
   private def parse(json: String): Option[TableStats] = {
     val entry =
@@ -102,31 +80,18 @@ object TableStatistics {
   }
 
   /** Commit `ts` as generation `expectedGen + 1` iff `expectedGen` is
-    * still the latest — a racing commit's rename wins the name and this
-    * one returns false so the caller re-reads and re-merges. Generations
-    * below `expectedGen` are pruned on success (the previous one stays
+    * still the latest — a racing commit wins the id and this one returns
+    * false so the caller re-reads and re-merges. Generations below
+    * `expectedGen` are pruned on success (the previous one stays
     * readable for in-flight readers); the legacy un-versioned file is
-    * retired on the first CAS commit. */
+    * retired on the first commit. */
   private def casCommit(home: HPath, expectedGen: Long,
       ts: TableStats): Boolean = {
-    val tmp = new HPath(home,
-      s"._graft_stats.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    Fs.writeString(tmp, render(ts))
-    val next = genFile(home, expectedGen + 1)
-    val won = casLock.synchronized {
-      listGens(home).map(_._1).maxOption.getOrElse(0L) == expectedGen && {
-        try {
-          org.apache.hadoop.fs.FileContext.getFileContext(tmp.toUri, Fs.conf())
-            .rename(tmp, next, org.apache.hadoop.fs.Options.Rename.NONE)
-          true
-        } catch { case _: java.io.IOException => false }
-      }
-    }
-    if (!won) Fs.delete(tmp)
-    else {
-      listGens(home).filter(_._1 < expectedGen).foreach(g => Fs.delete(g._2))
-      if (expectedGen == 0L && Fs.exists(statsFile(home)))
-        Fs.delete(statsFile(home)) // retire the pre-CAS un-versioned file
+    val l = log(home)
+    val won = l.commit(expectedGen, render(ts))
+    if (won) {
+      l.prune(expectedGen)
+      if (expectedGen == 0L) Fs.delete(statsFile(home))
       MetaCache.stats.invalidate(statsFile(home).toString)
     }
     won

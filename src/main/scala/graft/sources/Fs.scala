@@ -110,16 +110,4 @@ object Fs {
   /** [[delete]] with transient-error retries, for commit paths. Delete is
     * idempotent: a retry finding the path already gone is success. */
   def deleteRetried(p: Path): Boolean = withRetries(s"delete $p")(of(p).delete(p, true))
-
-  /** Rename that replaces an existing destination (`FileSystem.rename`
-    * refuses an existing target on most stores). Atomic on HDFS; on the
-    * local FS and object stores the OVERWRITE path degrades to
-    * delete-then-rename, so a concurrent reader may briefly see the file
-    * MISSING (never torn). Use only where a missing-file read degrades
-    * gracefully (e.g. the stats file → estimate fallback); durable
-    * last-value state uses the backup-chain protocol in `OffsetMarks`. */
-  def renameOverwrite(src: Path, dst: Path): Unit = {
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(src.toUri, conf())
-    fc.rename(src, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
 }

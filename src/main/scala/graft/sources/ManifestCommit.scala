@@ -52,23 +52,25 @@ import org.apache.spark.sql.functions._
   * `OdpsBatchWrite.scala:42-95`, strengthened from per-partition to
   * whole-write atomicity.
   *
-  * Concurrency contract: optimistic, CAS-style. A writer (1) CLAIMS an
-  * exclusive generation id with one create-no-overwrite of
-  * `_gen/g=<n>/_claim` — two racers can never write into the same
-  * generation dir; (2) lands its data there; (3) commits by
-  * create-no-overwrite of the next pointer file. A lost pointer race
-  * re-resolves the latest pointer and, when the concurrent commit
-  * touched NONE of this writer's partitions, REBASES its
-  * partition→generation updates onto it and retries (bounded);
-  * overlapping writes fail loudly — last-write-wins clobbering is
-  * never silent. Readers are lock-free and always see a complete
-  * pointer. [[vacuum]] keeps the single-maintenance-owner rule as
-  * `Maintenance` (an unreferenced generation may be a live writer's
-  * in-flight claim — `minUnreferencedAgeMs` is the grace knob).
+  * Concurrency contract: optimistic, CAS-style. Both `_gen` and
+  * `_pointer` are [[GenerationLog]]s, so every claim is a hidden tmp
+  * write plus one no-overwrite rename onto the id above the latest. A
+  * writer (1) CLAIMS an exclusive generation `_gen/g=<n>/_claim` — two
+  * racers can never write into the same generation dir; (2) lands its
+  * data there; (3) commits by claiming the pointer id above the one it
+  * resolved. A lost pointer claim (a newer pointer exists, even one
+  * whose predecessor [[vacuum]] already deleted) re-resolves the latest
+  * pointer and, when the concurrent commit touched NONE of this
+  * writer's partitions, REBASES its partition→generation updates onto
+  * it and retries (bounded); overlapping writes fail loudly —
+  * last-write-wins clobbering is never silent. Readers are lock-free
+  * and always see a complete pointer. [[vacuum]] keeps the
+  * single-maintenance-owner rule as `Maintenance` (an unreferenced
+  * generation may be a live writer's in-flight claim —
+  * `minUnreferencedAgeMs` is the grace knob).
   */
 object ManifestCommit {
 
-  private val PointerRe = "p(\\d+)\\.txt".r
   private val Header = "graft-pointer v2"
   private val HeaderV1 = "graft-pointer v1"
 
@@ -86,6 +88,12 @@ object ManifestCommit {
 
   private def genDir(path: String, gen: Long) = s"$path/_gen/g=$gen"
 
+  private def generations(path: String) =
+    new GenerationLog(new HPath(s"$path/_gen"), "g=", "/_claim")
+
+  private def pointers(path: String) =
+    new GenerationLog(new HPath(s"$path/_pointer"), "p", ".txt")
+
   /** Test seam: invoked at commit-protocol step boundaries
     * ("generation-written" after data lands, before the pointer CAS)
     * so crash-injection and concurrent-writer tests can interleave.
@@ -97,41 +105,17 @@ object ManifestCommit {
     * through the pointer commit instead of rename swaps. */
   def isManifestTable(path: String): Boolean = pointerIds(path).nonEmpty
 
-  private final class PointerClaimLost(val id: Long, cause: Throwable)
-    extends Exception(s"pointer p$id.txt already committed", cause)
-
-  /** First candidate id for a fresh generation claim: one `_gen`
-    * listing, max on-disk id + 1 — crash debris and live concurrent
-    * claims are never reused, only skipped past. */
-  private def nextGenStart(path: String): Long = {
-    val genRoot = new HPath(s"$path/_gen")
-    val onDisk = if (!Fs.exists(genRoot)) Seq.empty[Long]
-      else Fs.listDirs(genRoot).map(_.getName).filter(_.startsWith("g="))
-        .map(_.stripPrefix("g=").toLong)
-    (onDisk :+ -1L).max + 1
-  }
-
-  /** Atomically claim an exclusive generation id: the FIRST id ≥ `from`
-    * whose dir does not exist and whose `_claim` file this writer
-    * creates (create-no-overwrite = the atomic arbiter; maps onto a
-    * conditional PUT on object stores). The claimed dir is OURS — no
+  /** Claim an exclusive generation id: the one above the latest on
+    * disk, through the generation log. The claimed dir is OURS — no
     * concurrent writer can land data in it, so the
     * append-into-stale-debris double-row hazard of id reuse cannot
     * occur. Crash after a claim leaves an unreferenced generation;
     * [[vacuum]] reclaims it. */
-  private[graft] def claimGeneration(path: String, from: Long): Long = {
-    var g = math.max(from, 0L)
+  private[graft] def claimGeneration(path: String): Long = {
+    val log = generations(path)
     while (true) {
-      val dir = new HPath(genDir(path, g))
-      if (!Fs.exists(dir)) {
-        Fs.mkdirs(dir)
-        val claim = new HPath(dir, "_claim")
-        try {
-          Fs.of(claim).create(claim, false).close()
-          return g
-        } catch { case _: java.io.IOException => /* lost the race */ }
-      }
-      g += 1
+      val last = log.latest
+      if (log.commit(last, "")) return last + 1
     }
     -1L // unreachable
   }
@@ -139,10 +123,9 @@ object ManifestCommit {
   /** The CAS pointer commit: resolve the latest pointer, verify no
     * concurrent commit since `base` touched a partition this write
     * `touches`, apply `update` to the latest map, and claim the next
-    * pointer id with one create-no-overwrite. The new pointer records
-    * the `staged` leaves' files for the fresh generation `gen` and
-    * carries every other pair's file lines forward from the latest
-    * pointer. A lost claim (another writer committed first)
+    * pointer id. The new pointer records the `staged` leaves' files for
+    * the fresh generation `gen` and carries every other pair's file
+    * lines forward from the latest pointer. A lost claim (another writer committed first)
     * re-resolves and retries up to `maxRetries` times — non-overlapping
     * writers each get a clean re-based commit; overlapping ones fail
     * loudly instead of clobbering. Returns the committed pointer id. */
@@ -169,36 +152,25 @@ object ManifestCommit {
       }
       val id = latest.map(_.id + 1L).getOrElse(0L)
       val files = latest.map(_.files).getOrElse(Map.empty) ++ fresh
-      try {
-        writePointer(path, id, update(latestMap), files)
-        return id
-      } catch {
-        case lost: PointerClaimLost =>
-          attempt += 1
-          if (attempt > maxRetries) throw new IllegalStateException(
-            s"pointer commit under $path lost $attempt CAS races " +
-              s"(maxRetries=$maxRetries) — contention too high for " +
-              "optimistic commit; coordinate writers externally", lost)
-      }
+      if (writePointer(path, id, update(latestMap), files)) return id
+      attempt += 1
+      if (attempt > maxRetries) throw new IllegalStateException(
+        s"pointer commit under $path lost $attempt CAS races " +
+          s"(maxRetries=$maxRetries) — contention too high for " +
+          "optimistic commit; coordinate writers externally")
     }
     -1L // unreachable
   }
 
   /** All committed pointer ids under `path`, ascending (vacuumed ones
     * are gone — retention bounds how far back time travel reaches). */
-  def pointerIds(path: String): Seq[Long] = {
-    val pDir = new HPath(s"$path/_pointer")
-    if (!Fs.exists(pDir)) return Seq.empty
-    Fs.of(pDir).listStatus(pDir).toSeq.map(_.getPath.getName)
-      .collect { case PointerRe(id) => id.toLong }.sorted
-  }
+  def pointerIds(path: String): Seq[Long] = pointers(path).ids
 
   /** The one pointer parser: both header versions, the layout's line
     * grammar, and loud failure on anything else. */
-  private def parsePointer(path: String, id: Long): Pointer = {
-    val file = s"$path/_pointer/p$id.txt"
-    val lines = Fs.readString(new HPath(file))
-      .split('\n').toSeq.filter(_.nonEmpty)
+  private def parsePointer(path: String, id: Long, body: String): Pointer = {
+    val file = pointers(path).path(id)
+    val lines = body.split('\n').toSeq.filter(_.nonEmpty)
     val v2 = lines.headOption.contains(Header)
     require(v2 || lines.headOption.contains(HeaderV1),
       s"malformed pointer $file")
@@ -224,13 +196,16 @@ object ManifestCommit {
   /** Pointer `id` with its file entries; None if that pointer never
     * existed or was vacuumed. */
   def snapshot(path: String, id: Long): Option[Pointer] =
-    if (pointerIds(path).contains(id)) Some(parsePointer(path, id))
-    else None
+    try Some(readPointer(path, id))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  private def readPointer(path: String, id: Long): Pointer =
+    parsePointer(path, id, Fs.readString(pointers(path).path(id)))
 
   /** The latest committed pointer with its file entries; None before
     * the first commit. */
   def latestSnapshot(path: String): Option[Pointer] =
-    pointerIds(path).maxOption.map(parsePointer(path, _))
+    pointers(path).read().map { case (id, body) => parsePointer(path, id, body) }
 
   /** The committed (partitionRel → generation list) map of pointer
     * `id`; None if that pointer never existed or was vacuumed. */
@@ -243,49 +218,30 @@ object ManifestCommit {
     * when every retained pointer postdates `millis` (the earlier
     * pointers may also have been vacuumed; either way the snapshot the
     * caller asked for is not retained). */
-  def pointerAsOfTime(path: String, millis: Long): Option[Long] = {
-    val pDir = new HPath(s"$path/_pointer")
-    if (!Fs.exists(pDir)) return None
-    Fs.of(pDir).listStatus(pDir).toSeq
-      .flatMap { st =>
-        st.getPath.getName match {
-          case PointerRe(id) if st.getModificationTime <= millis =>
-            Some(id.toLong)
-          case _ => None
-        }
-      }.maxOption
-  }
+  def pointerAsOfTime(path: String, millis: Long): Option[Long] =
+    pointers(path).entries.collect {
+      case (id, st) if st.getModificationTime <= millis => id
+    }.maxOption
 
   /** Latest committed (gen, partitionRel → generation list) under
     * `path`; None before the first commit. */
   def latestPointer(path: String): Option[(Long, Map[String, Seq[Long]])] =
     latestSnapshot(path).map(p => p.id -> p.partitions)
 
-  /** Write pointer `id` for `map`, with the file lines `files` holds
-    * for its pairs (a pair `files` lacks stays a v1 line). */
+  /** Claim pointer `id` for `map`, with the file lines `files` holds
+    * for its pairs (a pair `files` lacks stays a v1 line). False when
+    * `id - 1` is no longer the latest pointer: another writer committed
+    * first, and nothing was written. */
   private def writePointer(path: String, id: Long,
       map: Map[String, Seq[Long]],
-      files: Map[(String, Long), Seq[DataFile]]): Unit = {
-    Fs.mkdirs(new HPath(s"$path/_pointer"))
+      files: Map[(String, Long), Seq[DataFile]]): Boolean = {
     val body = (Header +: map.toSeq.sortBy(_._1).flatMap { case (rel, gens) =>
       (rel +: gens.map(_.toString)).mkString("\t") +: gens.flatMap { g =>
         files.getOrElse((rel, g), Nil).map(f =>
           s"\t$g\t${f.name}\t${f.length}\t${f.modificationTime}")
       }
     }).mkString("\n")
-    // no-overwrite CREATE = the atomic claim on pointer id `id` (the
-    // OffsetMarks generation-mark discipline; maps onto a conditional
-    // PUT on object stores): two writers racing the same table NEVER
-    // silently clobber — the loser gets [[PointerClaimLost]], which
-    // [[casCommit]] turns into a re-based retry or a loud refusal
-    val p = new HPath(s"$path/_pointer/p$id.txt")
-    val out =
-      try Fs.of(p).create(p, false)
-      catch {
-        case e: java.io.IOException => throw new PointerClaimLost(id, e)
-      }
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    pointers(path).commit(id - 1, body)
   }
 
   /** The data files in one partition leaf dir, as Spark's own file
@@ -336,7 +292,7 @@ object ManifestCommit {
     require(partitionCols.nonEmpty,
       "manifest commit needs at least one partition column")
     val base = latestPointer(path).map(_._2).getOrElse(Map.empty[String, Seq[Long]])
-    val gen = claimGeneration(path, nextGenStart(path))
+    val gen = claimGeneration(path)
     val dest = genDir(path, gen)
     (if (preClustered) df
      else PartitionedWrite.clusterForWrite(df, partitionCols, sortCols))
@@ -425,7 +381,7 @@ object ManifestCommit {
     val ids = pointerIds(path)
     val latest = if (ids.isEmpty) -1L else ids.max
     ids.map { id =>
-      val map = parsePointer(path, id).partitions
+      val map = readPointer(path, id).partitions
       (id, map.size.toLong,
         map.values.flatten.toSeq.distinct.size.toLong, id == latest)
     }.toDF("pointer_id", "partitions", "generations", "is_latest")
@@ -451,13 +407,11 @@ object ManifestCommit {
     // deliberately NOT CAS-retried: a rollback that raced another commit
     // would silently erase it — the operator must re-decide against the
     // new latest state
-    try writePointer(path, next, target.partitions, target.files)
-    catch {
-      case lost: PointerClaimLost => throw new IllegalStateException(
+    if (!writePointer(path, next, target.partitions, target.files))
+      throw new IllegalStateException(
         s"rollback lost a commit race under $path (pointer p$next " +
           "appeared) — re-examine the new latest state before rolling " +
-          "back", lost)
-    }
+          "back")
     next
   }
 
@@ -473,7 +427,7 @@ object ManifestCommit {
     import spark.implicits._
     val ids = pointerIds(path)
     val pointers = ids.map { id =>
-      val parsed = scala.util.Try(parsePointer(path, id).partitions)
+      val parsed = scala.util.Try(readPointer(path, id).partitions)
       (id, parsed)
     }
     val pointerRows = pointers.map { case (id, parsed) =>
@@ -488,11 +442,7 @@ object ManifestCommit {
       ("generation", s"g=$g", ok,
         if (ok) "cited, present" else "DANGLING: cited but missing")
     }
-    val genRoot = new HPath(s"$path/_gen")
-    val onDisk = if (!Fs.exists(genRoot)) Seq.empty[Long]
-      else Fs.listDirs(genRoot).map(_.getName)
-        .filter(_.startsWith("g=")).map(_.stripPrefix("g=").toLong).sorted
-    val orphanRows = onDisk.filterNot(cited.contains).map { g =>
+    val orphanRows = generations(path).ids.filterNot(cited.contains).map { g =>
       ("orphan_generation", s"g=$g", true,
         "unreferenced by any retained pointer (vacuum reclaims)")
     }
@@ -528,7 +478,7 @@ object ManifestCommit {
       throw new IllegalStateException(
         s"no committed manifest-pointer state under $path"))
     val data = readMap(spark, path, base)
-    val gen = claimGeneration(path, nextGenStart(path))
+    val gen = claimGeneration(path)
     val dest = genDir(path, gen)
     data.repartition(partitionCols.map(col): _*)
       .write.mode("append").partitionBy(partitionCols: _*).parquet(dest)
@@ -596,7 +546,7 @@ object ManifestCommit {
     val base = latest.partitions
     val plans = candidates(path, latest, targetFileBytes)
     if (plans.isEmpty) return Seq.empty
-    val gen = claimGeneration(path, nextGenStart(path))
+    val gen = claimGeneration(path)
     val dest = genDir(path, gen)
     // one read branch per DISTINCT target file count (few in practice),
     // each bucketing rows with a constant modulus — the rename-mode
@@ -655,7 +605,7 @@ object ManifestCommit {
     val zk = graft.operators.ZOrder.key(
       graft.operators.ZOrder.fitBoundaries(df, zorderCols, bits),
       zorderCols, bits)
-    val gen = claimGeneration(path, nextGenStart(path))
+    val gen = claimGeneration(path)
     val dest = genDir(path, gen)
     // one range exchange on (partition cols, curve key) — the rename
     // writer's layout, landing in the fresh generation
@@ -691,18 +641,13 @@ object ManifestCommit {
     if (ids.isEmpty) return Seq.empty
     val keep = ids.takeRight(keepPointers).toSet
     val live = keep.toSeq
-      .flatMap(id => parsePointer(path, id).partitions.values.flatten).toSet
-    val genRoot = new HPath(s"$path/_gen")
+      .flatMap(id => readPointer(path, id).partitions.values.flatten).toSet
     val cutoff = System.currentTimeMillis() - minUnreferencedAgeMs
-    val deleted = if (!Fs.exists(genRoot)) Seq.empty else {
-      Fs.of(genRoot).listStatus(genRoot).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("g=") &&
-          !live.contains(s.getPath.getName.stripPrefix("g=").toLong) &&
-          s.getModificationTime <= cutoff)
-        .map { s => Fs.deleteRetried(s.getPath); s.getPath.toString }
-    }
-    ids.filterNot(keep.contains).foreach(id =>
-      Fs.deleteRetried(new HPath(s"$path/_pointer/p$id.txt")))
+    val deleted = generations(path).entries
+      .filter { case (g, s) => s.isDirectory && !live.contains(g) &&
+        s.getModificationTime <= cutoff }
+      .map { case (_, s) => Fs.deleteRetried(s.getPath); s.getPath.toString }
+    pointers(path).prune(keep.min)
     deleted
   }
 }

@@ -204,37 +204,37 @@ object MicroBatch {
     // the batch plan is consumed FOUR times below (emptiness probe,
     // touched-partition collect, anti-join key side, union side) — in
     // foreachBatch each consumption re-runs the micro-batch's stateful
-    // aggregation read; persist so it runs once per trigger
-    val batch = batch0.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val touched = batch.select(col(partitionCol)).distinct()
-        .collect().map(_.get(0)) // O(partitions per batch) scalars
-      val snapPath = new org.apache.hadoop.fs.Path(dir)
-      val exists = snapPath
-        .getFileSystem(spark.sessionState.newHadoopConf()).exists(snapPath)
-      val prior =
-        if (!exists) // first batch: no snapshot yet
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-        else spark.read.schema(batch.schema).parquet(dir)
-          .filter(col(partitionCol).isin(touched: _*)) // partition-pruned
-          // batch rows REPLACE prior rows with the same key
-          .join(batch.select((partitionCol +: keyCols).map(col): _*),
-            partitionCol +: keyCols, "left_anti")
-      // cluster by the partition value before the partitioned write: without
-      // this every one of the N write tasks opens a file in every touched
-      // dir (N×dirs small files per upsert — the death-by-files pattern);
-      // with it each dir gets one file per upsert. The shuffle only moves
-      // the touched slice, which update-mode keeps bounded.
-      batch.unionByName(prior)
-        .repartition(col(partitionCol))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(dir)
-    } finally batch.unpersist()
+    // aggregation read; an eager checkpoint runs it once per trigger
+    // (a persisted frame is looked up in the cache by plan, and that
+    // lookup failed on an unaliased aggregate: `key not found: hr#…`)
+    val batch = CheckpointOps(batch0, eager = true)
+    if (batch.isEmpty) return
+    val spark = batch.sparkSession
+    val touched = batch.select(col(partitionCol)).distinct()
+      .collect().map(_.get(0)) // O(partitions per batch) scalars
+    val snapPath = new org.apache.hadoop.fs.Path(dir)
+    val exists = snapPath
+      .getFileSystem(spark.sessionState.newHadoopConf()).exists(snapPath)
+    val prior =
+      if (!exists) // first batch: no snapshot yet
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+      else spark.read.schema(batch.schema).parquet(dir)
+        .filter(col(partitionCol).isin(touched: _*)) // partition-pruned
+        // batch rows REPLACE prior rows with the same key
+        .join(batch.select((partitionCol +: keyCols).map(col): _*),
+          partitionCol +: keyCols, "left_anti")
+    // cluster by the partition value before the partitioned write: without
+    // this every one of the N write tasks opens a file in every touched
+    // dir (N×dirs small files per upsert — the death-by-files pattern);
+    // with it each dir gets one file per upsert. The shuffle only moves
+    // the touched slice, which update-mode keeps bounded.
+    batch.unionByName(prior)
+      .repartition(col(partitionCol))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol)
+      .parquet(dir)
   }
 
   /** Streaming wiring for [[upsertSnapshot]]: an update-mode
@@ -273,32 +273,30 @@ object MicroBatch {
     require(!keyCols.contains(partitionCol),
       "partitionCol is implicitly part of the key; keyCols must not repeat it")
     // consumed four times (emptiness probe, touched collect, anti-join
-    // key side, union side) — persist so the micro-batch's stateful
-    // aggregation read runs once per trigger, not once per consumer
-    val batch = batch0.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val touched = batch.select(col(partitionCol)).distinct()
-        .collect().map(_.get(0)) // O(partitions per batch) scalars
-      val prior = graft.sources.ManifestCommit.latestPointer(dir) match {
-        case None => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-        case Some(_) =>
-          // pin the batch's own types (partition discovery re-infers the
-          // partition column from dir names)
-          val cols = batch.schema.fields
-            .map(f => col(f.name).cast(f.dataType).as(f.name))
-          graft.sources.ManifestCommit.read(spark, dir)
-            .select(cols.toSeq: _*)
-            .filter(col(partitionCol).isin(touched: _*)) // pointer-pruned
-            .join(batch.select((partitionCol +: keyCols).map(col): _*),
-              partitionCol +: keyCols, "left_anti")
-      }
-      graft.sources.ManifestCommit.writePartitioned(
-        batch.unionByName(prior), dir, Seq(partitionCol))
-      ()
-    } finally batch.unpersist()
+    // key side, union side) — an eager checkpoint runs the micro-batch's
+    // stateful aggregation read once per trigger, as in [[upsertSnapshot]]
+    val batch = CheckpointOps(batch0, eager = true)
+    if (batch.isEmpty) return
+    val spark = batch.sparkSession
+    val touched = batch.select(col(partitionCol)).distinct()
+      .collect().map(_.get(0)) // O(partitions per batch) scalars
+    val prior = graft.sources.ManifestCommit.latestPointer(dir) match {
+      case None => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+      case Some(_) =>
+        // pin the batch's own types (partition discovery re-infers the
+        // partition column from dir names)
+        val cols = batch.schema.fields
+          .map(f => col(f.name).cast(f.dataType).as(f.name))
+        graft.sources.ManifestCommit.read(spark, dir)
+          .select(cols.toSeq: _*)
+          .filter(col(partitionCol).isin(touched: _*)) // pointer-pruned
+          .join(batch.select((partitionCol +: keyCols).map(col): _*),
+            partitionCol +: keyCols, "left_anti")
+    }
+    graft.sources.ManifestCommit.writePartitioned(
+      batch.unionByName(prior), dir, Seq(partitionCol))
+    ()
   }
 
   /** Streaming wiring for [[upsertSnapshotManifest]] — [[streamUpsert]]

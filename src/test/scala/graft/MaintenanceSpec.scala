@@ -666,4 +666,53 @@ class MaintenanceSpec extends SparkTestBase {
       CatalogFunctions.compactTable(spark, "graft_m", Array("db"), "tb"))
     assert(err.getMessage.contains("clustered"))
   }
+
+  test("generation claim race: 4 threads released together never claim " +
+      "the same id") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft_genrace").toString + "/t"
+    val threads = 4
+    val barrier = new java.util.concurrent.CyclicBarrier(threads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val claimed = try {
+      val tasks = (0 until threads).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Seq[Long]] {
+          def call(): Seq[Long] = (1 to 50).map { _ =>
+            barrier.await()
+            ManifestCommit.claimGeneration(root)
+          }
+        }))
+      tasks.flatMap(_.get())
+    } finally pool.shutdown()
+    assert(claimed.size == 200)
+    assert(claimed.distinct.size == claimed.size,
+      s"ids claimed twice: ${claimed.diff(claimed.distinct).distinct.sorted.take(10)}")
+  }
+
+  test("manifest writer race: 4 threads committing disjoint partitions " +
+      "leave a parseable, gap-free pointer chain citing every last value") {
+    import graft.sources.ManifestCommit
+    val root = Files.createTempDirectory("graft_mfrace").toString + "/t"
+    val threads = 4
+    val commits = 5
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val tasks = (0 until threads).map(t => pool.submit(new Runnable {
+        def run(): Unit = (1 to commits).foreach(i =>
+          ManifestCommit.writePartitioned(
+            Seq((s"w$t", i.toLong)).toDF("k", "v").coalesce(1), root,
+            Seq("k"), maxCommitRetries = 100))
+      }))
+      tasks.foreach(_.get())
+    } finally pool.shutdown()
+    ManifestCommit.pointerIds(root).foreach(id =>
+      assert(ManifestCommit.snapshot(root, id).nonEmpty, s"p$id parses"))
+    val latest = ManifestCommit.latestSnapshot(root).get
+    assert(latest.partitions.keySet == (0 until threads).map(t => s"k=w$t").toSet)
+    assert(ManifestCommit.pointerIds(root) == (0L until threads * commits),
+      "one pointer per commit, ids without gaps")
+    val got = ManifestCommit.read(spark, root).select("k", "v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    assert(got == (0 until threads).map(t => (s"w$t", commits.toLong)))
+  }
 }

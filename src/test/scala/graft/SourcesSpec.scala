@@ -128,24 +128,17 @@ class SourcesSpec extends SparkTestBase {
   test("checkpoints work over file:// URIs and survive a crash mid-save") {
     val dir = "file://" + Files.createTempDirectory("graft_ckpt_fs").toString
     val ck = new graft.sources.OffsetMarks(dir)
-    ck.save("job", "100")
+    ck.advance("job", "0")(_ => "100")
     assert(ck.load("job").contains("100"))
-    // simulate a crash after the tmp write but before the rename: a stale
-    // tmp file must not corrupt the committed checkpoint…
+    // simulate a crash after a commit's tmp write but before its claim
+    // rename: the hidden tmp must not shadow the committed mark…
     graft.sources.Fs.writeString(
-      new org.apache.hadoop.fs.Path(dir, ".job.ckpt.tmp"), "torn")
+      new org.apache.hadoop.fs.Path(dir, ".job.ckpt.g0c4f1a2e.tmp"), "torn")
     assert(ck.load("job").contains("100"))
-    // …and the next save replaces both atomically
-    ck.save("job", "200")
+    // …and the next cycle runs from that mark and commits cleanly
+    assert(ck.advance("job", "0")(last => (last.toLong + 100).toString) == "200")
     assert(ck.load("job").contains("200"))
-    // crash between the backup and commit renames (ckpt missing, bak
-    // present): load falls back to the previous committed value
-    graft.sources.Fs.rename(
-      new org.apache.hadoop.fs.Path(dir, "job.ckpt"),
-      new org.apache.hadoop.fs.Path(dir, ".job.ckpt.bak"))
-    assert(ck.load("job").contains("200"))
-    ck.save("job", "300") // recovery: next save commits cleanly
-    assert(ck.load("job").contains("300"))
+    assert(ck.loadCas("job")._2 == 2L)
   }
 
   // ---- file formats (Sqoop text/csv/json surface) ----
@@ -464,9 +457,9 @@ class SourcesSpec extends SparkTestBase {
       "a commit against a superseded generation must FAIL, not overwrite")
     assert(ck.loadCas("job") == (Some("10"), 1L))
 
-    // advanceCas re-runs its cycle from the winner's mark after losing
+    // advance re-runs its cycle from the winner's mark after losing
     var calls = 0
-    val out = ck.advanceCas("job", "0") { last =>
+    val out = ck.advance("job", "0") { last =>
       calls += 1
       if (calls == 1) assert(ck.saveCas("job", 1L, "11")) // interloper wins
       (last.toLong + 1).toString
@@ -480,13 +473,57 @@ class SourcesSpec extends SparkTestBase {
     try {
       val tasks = (1 to 4).map(_ => pool.submit(new Runnable {
         def run(): Unit = (1 to 5).foreach(_ =>
-          ck.advanceCas("ctr", "0", maxAttempts = 200)(l =>
+          ck.advance("ctr", "0", maxAttempts = 200)(l =>
             (l.toLong + 1).toString))
       }))
       tasks.foreach(_.get())
     } finally pool.shutdown()
     assert(ck.loadCas("ctr")._1.contains("20"),
       "every concurrent increment must be reflected exactly once")
+  }
+
+  test("generation log race: a polling reader sees no record or the whole " +
+      "1 MB body; stale and pruned-below claims are refused") {
+    import org.apache.hadoop.fs.Path
+    import graft.sources.{Fs, GenerationLog}
+    val log = new GenerationLog(
+      new Path(Files.createTempDirectory("graft_genlog").toString), "r", ".txt")
+    val rounds = 5
+    val bodies = (0 until rounds).map(i => (('a' + i).toChar.toString) * (1 << 20))
+    val torn = new java.util.concurrent.atomic.AtomicInteger()
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    bodies.zipWithIndex.foreach { case (body, id) =>
+      val target = log.path(id)
+      val reader = new Thread(() => {
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        var whole = false
+        while (!whole && System.nanoTime() < deadline) {
+          try {
+            if (Fs.readString(target) == body) whole = true
+            else torn.incrementAndGet()
+          } catch {
+            case _: java.io.FileNotFoundException => // not committed yet
+            case _: java.io.IOException => torn.incrementAndGet()
+          }
+        }
+        if (whole) seen.incrementAndGet()
+      })
+      reader.start()
+      assert(log.commit(id - 1L, body), s"uncontended commit of id $id")
+      reader.join(60000)
+      assert(!reader.isAlive, "reader never saw the committed body")
+    }
+    assert(torn.get() == 0, s"${torn.get()} partial reads of a committed record")
+    assert(seen.get() == rounds)
+    assert(log.ids == (0L until rounds) && log.latest == rounds - 1L)
+    assert(log.read().map(_._1).contains(rounds - 1L))
+    // a stale claim is refused; so is one whose expected id was pruned
+    assert(!log.commit(rounds - 2L, "stale"))
+    log.prune(rounds - 1L)
+    assert(log.ids == Seq(rounds - 1L))
+    assert(!log.commit(0L, "below the latest"))
+    assert(log.ids == Seq(rounds - 1L), "a lost claim leaves no record")
+    assert(log.commit(rounds - 1L, "next") && log.read().contains(rounds.toLong -> "next"))
   }
 
   // ---- transient-error retry policy ----

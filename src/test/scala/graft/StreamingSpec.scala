@@ -625,6 +625,51 @@ class StreamingSpec extends SparkTestBase {
       ("2024-01-01 00:00", "view", 1L), ("2024-01-01 01:00", "view", 1L)))
   }
 
+  /** Two micro-batches of (hr, k, event_type) rows that both touch hour
+    * h0, aggregated as `max(event_type)` per (hr, k) with no alias — the
+    * shape whose persisted foreachBatch frame failed its cache lookup. */
+  private def maxPerHourStream(root: java.nio.file.Path)
+      : org.apache.spark.sql.DataFrame = {
+    val srcDir = s"$root/src"
+    Seq(("h0", "a", "click"), ("h0", "b", "view"))
+      .toDF("hr", "k", "event_type").repartition(1).write.parquet(srcDir)
+    Seq(("h0", "a", "view"), ("h1", "c", "click"))
+      .toDF("hr", "k", "event_type").repartition(1).write.mode("append")
+      .parquet(srcDir)
+    spark.readStream.schema(spark.read.parquet(srcDir).schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+      .groupBy(col("hr"), col("k")).agg(max(col("event_type")))
+  }
+
+  private val maxPerHourWant = Set(("h0", "a", "view"), ("h0", "b", "view"),
+    ("h1", "c", "click"))
+
+  private def maxPerHourRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getAs[String]("hr"), r.getAs[String]("k"),
+      r.getAs[String]("max(event_type)"))).toSet
+
+  test("streamUpsert merges an unaliased max aggregate over two batches " +
+      "touching one partition") {
+    val root = Files.createTempDirectory("graft_strup_max")
+    val q = MicroBatch.streamUpsert(maxPerHourStream(root), s"$root/snap",
+        "hr", Seq("k"), MicroBatch.IngestConfig(checkpointDir = s"$root/ckpt"))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(maxPerHourRows(spark.read.parquet(s"$root/snap")) == maxPerHourWant)
+  }
+
+  test("streamUpsertManifest merges an unaliased max aggregate over two " +
+      "batches touching one partition") {
+    val root = Files.createTempDirectory("graft_strupm_max")
+    val q = MicroBatch.streamUpsertManifest(maxPerHourStream(root),
+        s"$root/snap", "hr", Seq("k"),
+        MicroBatch.IngestConfig(checkpointDir = s"$root/ckpt"))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(maxPerHourRows(graft.sources.ManifestCommit.read(spark,
+      s"$root/snap")) == maxPerHourWant)
+  }
+
   test("streamRollup: versioned snapshots reach the recompute state; " +
       "restart with no new input is a no-op") {
     import org.apache.spark.sql.functions._
