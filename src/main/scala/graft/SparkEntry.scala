@@ -1797,19 +1797,18 @@ object SparkEntry {
     // (untouched partitions from gen 0, the overwritten partition
     // replaced, the appended slice added) in plain SQL.
     "q333_manifest_commit" -> ((s, d) => {
-      import graft.sources.{ManifestCommit, PartitionedWrite}
+      import graft.sources.ManifestCommit
       val root = tmpDir("graft_q333").toString + "/t"
       val o = t(s, d, "orders").select(col("o_orderstatus").as("st"),
         col("o_orderkey").as("ok"),
         floor(col("o_totalprice") * 100 + 0.5).cast(LongType).as("cents"))
-      PartitionedWrite.writePartitioned(o, root, Seq("st"),
-        commitMode = "manifest")
-      PartitionedWrite.writePartitioned(
+      ManifestCommit.writePartitioned(o, root, Seq("st"))
+      ManifestCommit.writePartitioned(
         o.filter(col("st") === "F" && col("ok") % 2 === 0), root,
-        Seq("st"), commitMode = "manifest")
-      PartitionedWrite.writePartitioned(
+        Seq("st"))
+      ManifestCommit.writePartitioned(
         o.filter(col("st") === "O" && col("ok") % 5 === 0), root,
-        Seq("st"), overwrite = false, commitMode = "manifest")
+        Seq("st"), overwrite = false)
       ManifestCommit.compact(s, root, Seq("st"))
       ManifestCommit.vacuum(root)
       ManifestCommit.read(s, root)

@@ -690,30 +690,37 @@ object CatalogFunctions {
   /** `max_pt(table)` — the latest partition value of a partitioned catalog
     * table, resolved from the PARTITION LISTING (no data scan), exactly the
     * reference's MaxPtUDF
-    * (`spark-connector/common/src/main/java/org/apache/spark/sql/odps/udf/MaxPtUDF.java:30-41`). */
+    * (`spark-connector/common/src/main/java/org/apache/spark/sql/odps/udf/MaxPtUDF.java:30-41`).
+    * A manifest-pointer table's partitions come from its latest pointer. */
   def maxPt(spark: SparkSession, catalogName: String, namespace: Array[String],
       table: String): Option[String] = {
     val cat = org.apache.spark.sql.graft.Catalogs.plugin(spark, catalogName)
       .asInstanceOf[TableCatalog]
     cat.loadTable(Identifier.of(namespace, table)) match {
+      case m: GraftManifestTable =>
+        maxFirstColumn(table, m.partitionSchema, m.pointerPartitions)
       case pm: SupportsPartitionManagement =>
-        val ps = pm.partitionSchema()
-        require(ps.nonEmpty, s"$table is not partitioned")
-        val dt = ps(0).dataType
-        val raw = pm.listPartitionIdentifiers(Array.empty, InternalRow.empty)
-          .map(_.get(0, dt))
-        // compare in the PARTITION COLUMN'S type — a string max over
-        // numeric partitions returns "9" > "10" and serves stale data
-        if (raw.isEmpty) None
-        else Some((dt match {
-          case ByteType | ShortType | IntegerType | LongType | DateType =>
-            raw.maxBy(_.asInstanceOf[Number].longValue())
-          case FloatType | DoubleType =>
-            raw.maxBy(_.asInstanceOf[Number].doubleValue())
-          case _ => raw.maxBy(_.toString)
-        }).toString)
+        maxFirstColumn(table, pm.partitionSchema(),
+          pm.listPartitionIdentifiers(Array.empty, InternalRow.empty).toSeq)
       case _ => sys.error(s"$table does not support partition management")
     }
+  }
+
+  private def maxFirstColumn(table: String, ps: StructType,
+      partitions: Seq[InternalRow]): Option[String] = {
+    require(ps.nonEmpty, s"$table is not partitioned")
+    val dt = ps(0).dataType
+    val raw = partitions.map(_.get(0, dt))
+    // compare in the PARTITION COLUMN'S type — a string max over
+    // numeric partitions returns "9" > "10" and serves stale data
+    if (raw.isEmpty) None
+    else Some((dt match {
+      case ByteType | ShortType | IntegerType | LongType | DateType =>
+        raw.maxBy(_.asInstanceOf[Number].longValue())
+      case FloatType | DoubleType =>
+        raw.maxBy(_.asInstanceOf[Number].doubleValue())
+      case _ => raw.maxBy(_.toString)
+    }).toString)
   }
 }
 

@@ -108,6 +108,18 @@ class GraftManifestTable(ident: Identifier, dir: HPath, meta: TableMeta,
     }
   }
 
+  /** The declared partition columns, in order. */
+  def partitionSchema: StructType = meta.partitionSchema
+
+  /** One typed partition-values row per partition of the resolved
+    * pointer — a partition listing read from the pointer, with no
+    * directory listed. */
+  def pointerPartitions: Seq[InternalRow] = {
+    val zone = spark.sessionState.conf.sessionLocalTimeZone
+    resolvedPointer.partitions.keys.toSeq
+      .map(partitionRow(_, meta.partitionSchema, zone))
+  }
+
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val pointer = resolvedPointer
     val partSchema = meta.partitionSchema

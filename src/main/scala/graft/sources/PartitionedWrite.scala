@@ -94,29 +94,14 @@ object PartitionedWrite {
     * guard). Skipped partitions are absent from the returned rel-paths,
     * so a touched-scope stats refresh never sees them.
     *
-    * `commitMode = "manifest"` switches the COMMIT protocol to the
-    * object-store-atomic manifest pointer ([[ManifestCommit]]): data
-    * lands once at an immutable generation path and one small-object
-    * PUT publishes every touched partition simultaneously — no rename
-    * anywhere, whole-write (not merely per-partition) atomicity. Read
-    * such tables with [[ManifestCommit.read]]. `swapGuard` is a
-    * rename-swap concept and is rejected in manifest mode. */
+    * [[ManifestCommit.writePartitioned]] is the same write with the
+    * object-store-atomic manifest-pointer commit instead of renames. */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
       sortCols: Seq[String] = Nil, overwrite: Boolean = true,
       limit: Int = DefaultDynamicPartitionLimit,
       truncateSpec: Option[Seq[(String, String)]] = None,
       preClustered: Boolean = false,
-      swapGuard: Option[String => Boolean] = None,
-      commitMode: String = "rename"): Seq[String] = {
-    require(commitMode == "rename" || commitMode == "manifest",
-      s"commitMode must be rename|manifest, got $commitMode")
-    if (commitMode == "manifest") {
-      require(swapGuard.isEmpty,
-        "swapGuard applies to the rename swap; manifest commits are " +
-          "atomic per write and need no per-partition guard")
-      return ManifestCommit.writePartitioned(df, path, partitionCols,
-        sortCols, overwrite, limit, truncateSpec, preClustered)
-    }
+      swapGuard: Option[String => Boolean] = None): Seq[String] = {
     val fs = Fs.of(new HPath(path))
     val target = fs.makeQualified(new HPath(path))
     val staging = fs.makeQualified(

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -43,6 +43,33 @@ object MicroBatch {
     def trigger: Trigger =
       if (triggerMillis <= 0) Trigger.AvailableNow()
       else Trigger.ProcessingTime(triggerMillis)
+    private[MicroBatch] def checkpoint: Option[String] =
+      Some(checkpointDir).filter(_.nonEmpty)
+  }
+
+  /** The one foreachBatch wiring of every sink here: `writeStream`, the
+    * output mode and trigger when given, `body` per micro-batch, and the
+    * checkpoint location when given. */
+  private def batchSink(stream: DataFrame, trigger: Option[Trigger],
+      checkpointDir: Option[String], outputMode: Option[String] = None)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    val w0 = stream.writeStream
+    val w1 = outputMode.fold(w0)(m => w0.outputMode(m))
+    val w2 = trigger.fold(w1)(t => w1.trigger(t))
+    val w3 = checkpointDir.fold(w2)(d => w2.option("checkpointLocation", d))
+    w3.foreachBatch(body)
+  }
+
+  /** Run `f` over `xs` as concurrent Spark jobs from driver threads:
+    * independent small jobs (per-part counts, segment writes) leave most
+    * cores idle when submitted one after another, so a sink's per-batch
+    * wall is bound by job count, not data. */
+  private def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    import scala.concurrent.{Await, Future, ExecutionContext}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    if (xs.lengthCompare(1) <= 0) xs.map(f)
+    else Await.result(Future.sequence(xs.map(x => Future(f(x)))), Duration.Inf)
   }
 
   /** File-source stream over a directory of parquet (schema pinned from the
@@ -75,26 +102,23 @@ object MicroBatch {
   def withDeadLetter(
       stream: DataFrame, isGood: Column,
       goodSink: DataFrame => Unit, dlqSink: DataFrame => Unit,
-      cfg: IngestConfig = IngestConfig()): DataStreamWriter[org.apache.spark.sql.Row] = {
+      cfg: IngestConfig = IngestConfig()): DataStreamWriter[Row] = {
     val flag = "__graft_dlq_good"
     require(!stream.columns.contains(flag),
       s"stream already carries a $flag column")
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // NULL-valued predicates are DIRTY, not lost: a bare filter(p) /
-        // filter(!p) pair drops NULL rows from BOTH sinks (ternary logic)
-        // — and a predicate over a corrupt row evaluating to NULL is the
-        // dead-letter queue's core case
-        val marked = batch
-          .withColumn(flag, coalesce(isGood, lit(false))).persist()
-        try {
-          goodSink(marked.filter(col(flag)).drop(flag))
-          dlqSink(marked.filter(!col(flag)).drop(flag))
-        } finally marked.unpersist()
-        ()
-      }
-    if (cfg.checkpointDir.nonEmpty) w.option("checkpointLocation", cfg.checkpointDir) else w
+    batchSink(stream, Some(cfg.trigger), cfg.checkpoint) { (batch, _) =>
+      // NULL-valued predicates are DIRTY, not lost: a bare filter(p) /
+      // filter(!p) pair drops NULL rows from BOTH sinks (ternary logic)
+      // — and a predicate over a corrupt row evaluating to NULL is the
+      // dead-letter queue's core case. Both sinks read the one
+      // checkpoint, so the micro-batch is computed once.
+      val marked = CheckpointOps(
+        batch.withColumn(flag, coalesce(isGood, lit(false))), eager = false)
+      try {
+        goodSink(marked.filter(col(flag)).drop(flag))
+        dlqSink(marked.filter(!col(flag)).drop(flag))
+      } finally CheckpointOps.release(marked)
+    }
   }
 
   /** Stream-to-table lookup join with per-micro-batch dimension refresh —
@@ -108,26 +132,22 @@ object MicroBatch {
   def lookupJoin(
       stream: DataFrame, loadDim: () => DataFrame, joinKeys: Seq[String],
       sink: DataFrame => Unit,
-      cfg: IngestConfig = IngestConfig()): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Materialize INSIDE the retry: loadDim() alone returns a lazy
-        // plan (only schema resolution touches the source) — without the
-        // count, the actual dimension scan would run inside the join
-        // action, OUTSIDE the retry, and a transient source failure there
-        // would kill the stream despite the backoff.
-        val dim = graft.sources.Retry.withBackoff("lookup dimension reload") {
-          val d = loadDim().persist()
-          try { d.count(); d }
-          catch { case e: Throwable => d.unpersist(); throw e }
-        }
-        try sink(batch.join(broadcast(dim), joinKeys, "left"))
-        finally dim.unpersist()
-        ()
+      cfg: IngestConfig = IngestConfig()): DataStreamWriter[Row] =
+    batchSink(stream, Some(cfg.trigger), cfg.checkpoint) { (batch, _) =>
+      // Materialize INSIDE the retry: loadDim() alone returns a lazy
+      // plan (only schema resolution touches the source) — without the
+      // eager checkpoint, the actual dimension scan would run inside the
+      // join action, OUTSIDE the retry, and a transient source failure
+      // there would kill the stream despite the backoff. Each attempt
+      // checkpoints a fresh plan: a Dataset keeps a failed optimization
+      // (a UDF folded over a local relation), so checkpointing the same
+      // frame again would rethrow it without reading the source.
+      val dim = graft.sources.Retry.withBackoff("lookup dimension reload") {
+        CheckpointOps(loadDim().select("*"), eager = true)
       }
-    if (cfg.checkpointDir.nonEmpty) w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      try sink(batch.join(broadcast(dim), joinKeys, "left"))
+      finally CheckpointOps.release(dim)
+    }
 
   /** Ordered per-key delivery before a stateful op: hash-repartition on the
     * key columns so all ops for one key land in one partition — the
@@ -197,44 +217,55 @@ object MicroBatch {
     * round-trip partition-value encoding cleanly; format timestamps with
     * `date_format` first). */
   def upsertSnapshot(batch0: DataFrame, dir: String, partitionCol: String,
-      keyCols: Seq[String]): Unit = {
-    require(keyCols.nonEmpty, "upsertSnapshot needs at least one key column")
+      keyCols: Seq[String]): Unit =
+    keyedMerge(batch0, partitionCol, keyCols, "upsertSnapshot") { batch =>
+      val snapPath = new org.apache.hadoop.fs.Path(dir)
+      val exists = snapPath.getFileSystem(
+        batch.sparkSession.sessionState.newHadoopConf()).exists(snapPath)
+      if (!exists) None // first batch: no snapshot yet
+      else Some(batch.sparkSession.read.schema(batch.schema).parquet(dir))
+    } { merged =>
+      // cluster by the partition value before the partitioned write:
+      // without this every one of the N write tasks opens a file in
+      // every touched dir (N×dirs small files per upsert — the
+      // death-by-files pattern); with it each dir gets one file per
+      // upsert. The shuffle only moves the touched slice, which
+      // update-mode keeps bounded.
+      merged.repartition(col(partitionCol))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionCol)
+        .parquet(dir)
+    }
+
+  /** The keyed merge both upsert sinks share. The batch is checkpointed
+    * eagerly: it is consumed four times (emptiness probe, touched
+    * collect, anti-join key side, union side), and in foreachBatch each
+    * consumption would re-run the micro-batch's stateful aggregation
+    * read (a persisted frame is looked up in the cache by plan, and that
+    * lookup failed on an unaliased aggregate: `key not found: hr#…`).
+    * `prior` reads the standing snapshot typed as the batch (None before
+    * the first commit); its rows in the touched partitions survive
+    * unless the batch carries their key. `commit` writes batch ∪
+    * survivors. */
+  private def keyedMerge(batch0: DataFrame, partitionCol: String,
+      keyCols: Seq[String], what: String)(
+      prior: DataFrame => Option[DataFrame])(
+      commit: DataFrame => Unit): Unit = {
+    require(keyCols.nonEmpty, s"$what needs at least one key column")
     require(!keyCols.contains(partitionCol),
       "partitionCol is implicitly part of the key; keyCols must not repeat it")
-    // the batch plan is consumed FOUR times below (emptiness probe,
-    // touched-partition collect, anti-join key side, union side) — in
-    // foreachBatch each consumption re-runs the micro-batch's stateful
-    // aggregation read; an eager checkpoint runs it once per trigger
-    // (a persisted frame is looked up in the cache by plan, and that
-    // lookup failed on an unaliased aggregate: `key not found: hr#…`)
     val batch = CheckpointOps(batch0, eager = true)
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val touched = batch.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)) // O(partitions per batch) scalars
-    val snapPath = new org.apache.hadoop.fs.Path(dir)
-    val exists = snapPath
-      .getFileSystem(spark.sessionState.newHadoopConf()).exists(snapPath)
-    val prior =
-      if (!exists) // first batch: no snapshot yet
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-      else spark.read.schema(batch.schema).parquet(dir)
-        .filter(col(partitionCol).isin(touched: _*)) // partition-pruned
-        // batch rows REPLACE prior rows with the same key
-        .join(batch.select((partitionCol +: keyCols).map(col): _*),
-          partitionCol +: keyCols, "left_anti")
-    // cluster by the partition value before the partitioned write: without
-    // this every one of the N write tasks opens a file in every touched
-    // dir (N×dirs small files per upsert — the death-by-files pattern);
-    // with it each dir gets one file per upsert. The shuffle only moves
-    // the touched slice, which update-mode keeps bounded.
-    batch.unionByName(prior)
-      .repartition(col(partitionCol))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(dir)
+    try if (!batch.isEmpty) {
+      val touched = batch.select(col(partitionCol)).distinct()
+        .collect().map(_.get(0)) // O(partitions per batch) scalars
+      val keys = partitionCol +: keyCols
+      val survivors = prior(batch).map(
+        _.filter(col(partitionCol).isin(touched: _*)) // partition-pruned
+          // batch rows REPLACE prior rows with the same key
+          .join(batch.select(keys.map(col): _*), keys, "left_anti"))
+      commit(survivors.fold(batch)(batch.unionByName(_)))
+    } finally CheckpointOps.release(batch)
   }
 
   /** Streaming wiring for [[upsertSnapshot]]: an update-mode
@@ -245,15 +276,10 @@ object MicroBatch {
     * stay bounded while old partitions remain readable forever. */
   def streamUpsert(agg: DataFrame, dir: String, partitionCol: String,
       keyCols: Seq[String],
-      cfg: IngestConfig = IngestConfig()): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = agg.writeStream
-      .outputMode("update")
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertSnapshot(batch, dir, partitionCol, keyCols)
-      }
-    if (cfg.checkpointDir.nonEmpty) w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      cfg: IngestConfig = IngestConfig()): DataStreamWriter[Row] =
+    batchSink(agg, Some(cfg.trigger), cfg.checkpoint, Some("update")) {
+      (batch, _) => upsertSnapshot(batch, dir, partitionCol, keyCols)
+    }
 
   /** [[upsertSnapshot]] with the manifest-pointer commit
     * ([[graft.sources.ManifestCommit]]) — the object-store-atomic form
@@ -268,36 +294,21 @@ object MicroBatch {
     * attempt's generation is unreferenced and vacuumed. Read the
     * snapshot with [[graft.sources.ManifestCommit.read]]. */
   def upsertSnapshotManifest(batch0: DataFrame, dir: String,
-      partitionCol: String, keyCols: Seq[String]): Unit = {
-    require(keyCols.nonEmpty, "upsertSnapshotManifest needs at least one key column")
-    require(!keyCols.contains(partitionCol),
-      "partitionCol is implicitly part of the key; keyCols must not repeat it")
-    // consumed four times (emptiness probe, touched collect, anti-join
-    // key side, union side) — an eager checkpoint runs the micro-batch's
-    // stateful aggregation read once per trigger, as in [[upsertSnapshot]]
-    val batch = CheckpointOps(batch0, eager = true)
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val touched = batch.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)) // O(partitions per batch) scalars
-    val prior = graft.sources.ManifestCommit.latestPointer(dir) match {
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-      case Some(_) =>
-        // pin the batch's own types (partition discovery re-infers the
-        // partition column from dir names)
-        val cols = batch.schema.fields
-          .map(f => col(f.name).cast(f.dataType).as(f.name))
-        graft.sources.ManifestCommit.read(spark, dir)
-          .select(cols.toSeq: _*)
-          .filter(col(partitionCol).isin(touched: _*)) // pointer-pruned
-          .join(batch.select((partitionCol +: keyCols).map(col): _*),
-            partitionCol +: keyCols, "left_anti")
+      partitionCol: String, keyCols: Seq[String]): Unit =
+    keyedMerge(batch0, partitionCol, keyCols, "upsertSnapshotManifest") {
+      batch =>
+        graft.sources.ManifestCommit.latestPointer(dir).map { _ =>
+          // pin the batch's own types (partition discovery re-infers the
+          // partition column from dir names)
+          graft.sources.ManifestCommit.read(batch.sparkSession, dir)
+            .select(batch.schema.fields.toSeq
+              .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+        }
+    } { merged =>
+      graft.sources.ManifestCommit.writePartitioned(merged, dir,
+        Seq(partitionCol))
+      ()
     }
-    graft.sources.ManifestCommit.writePartitioned(
-      batch.unionByName(prior), dir, Seq(partitionCol))
-    ()
-  }
 
   /** Streaming wiring for [[upsertSnapshotManifest]] — [[streamUpsert]]
     * with the one-PUT pointer commit; every `compactEvery` batches the
@@ -308,22 +319,16 @@ object MicroBatch {
   def streamUpsertManifest(agg: DataFrame, dir: String,
       partitionCol: String, keyCols: Seq[String],
       cfg: IngestConfig = IngestConfig(), compactEvery: Int = 16)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = agg.writeStream
-      .outputMode("update")
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      : DataStreamWriter[Row] =
+    batchSink(agg, Some(cfg.trigger), cfg.checkpoint, Some("update")) {
+      (batch, batchId) =>
         upsertSnapshotManifest(batch, dir, partitionCol, keyCols)
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
           graft.sources.ManifestCommit.compact(batch.sparkSession, dir,
             Seq(partitionCol))
           graft.sources.ManifestCommit.vacuum(dir)
-          ()
         }
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+    }
 
   /** Streaming incremental-rollup maintenance — the ingest-time form of
     * [[graft.operators.Cdc.incrementalAgg]]: a stream of IMAGED CDC ops
@@ -349,16 +354,11 @@ object MicroBatch {
     * time. */
   def streamRollup(opsStream: DataFrame, dir: String, groupCol: String,
       valueCol: String, cfg: IngestConfig = IngestConfig(),
-      compactEvery: Int = 8): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = opsStream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = graft.operators.Cdc.aggDelta(batch, groupCol, valueCol)
-        foldSegments(Seq(SegPart("", Seq(groupCol), RollupSums) -> delta),
-          batchId, dir, compactEvery, maxStateRows = None)
-      }
-    if (cfg.checkpointDir.nonEmpty) w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      compactEvery: Int = 8): DataStreamWriter[Row] =
+    segmentSink(opsStream, dir, cfg, compactEvery) { batch =>
+      Seq(SegPart("", Seq(groupCol), RollupSums) ->
+        graft.operators.Cdc.aggDelta(batch, groupCol, valueCol))
+    }
 
   /** Streaming connected-components maintenance: each micro-batch of
     * (src, dst) edges folds into the persisted label table via
@@ -380,16 +380,13 @@ object MicroBatch {
     * the current one (~2× live state). */
   def streamComponents(edgeStream: DataFrame, dir: String,
       srcCol: String, dstCol: String,
-      cfg: IngestConfig = IngestConfig())
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = edgeStream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
+      cfg: IngestConfig = IngestConfig()): DataStreamWriter[Row] =
+    batchSink(edgeStream, Some(cfg.trigger), cfg.checkpoint) {
+      (batch, batchId) =>
         val prior = latestSegManifest(dir, beforeExclusive = Some(batchId))
         val next = prior
           .map { case (_, segs) =>
-            spark.read.parquet(s"$dir/seg=${segs.head}") }
+            batch.sparkSession.read.parquet(s"$dir/seg=${segs.head}") }
           .filter(!_.isEmpty) match {
           case Some(labels) => graft.operators.Graph
             .connectedComponentsIncrement(labels, batch, srcCol, dstCol)
@@ -401,10 +398,7 @@ object MicroBatch {
         gcSegments(dir,
           keepManifests = prior.map(_._1).toSet + batchId,
           keepSegs = prior.map(_._2).getOrElse(Seq.empty).toSet + batchId)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+    }
 
   /** Streaming market-basket co-occurrence maintenance: each
     * micro-batch of (basket, item) postings folds into persisted pair
@@ -429,42 +423,36 @@ object MicroBatch {
   def streamCoOccurrence(postings: DataFrame, dir: String,
       basketCol: String, itemCol: String, maxBasketSize: Int = 256,
       cfg: IngestConfig = IngestConfig(), compactEvery: Int = 8)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = postings.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the same one-aggregate basket kernel as the batch operator
-        // (graft.operators.Affinity): per-basket sorted distinct item
-        // sets, pairs generated map-side — no distinct / size-count /
-        // semi-join / self-join of the batch against itself
-        val kept = graft.operators.Affinity.basketItemSets(
-          batch, basketCol, itemCol, maxBasketSize)
-        val pairsDelta = graft.operators.Affinity.basketPairs(kept)
-          .groupBy(col("__x").as("item_a"), col("__y").as("item_b"))
-          .agg(count(lit(1)).as("n_baskets"))
-        val freqDelta = kept.select(explode(col("__items")).as("item"))
-          .groupBy(col("item"))
-          .agg(count(lit(1)).as("ni"))
-        // an empty batch's global count row is n=0 — filtered so an
-        // all-empty delta skips the fold (state already current);
-        // kept is one row per basket, so the count needs no distinct
-        val totDelta = kept
-          .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        foldSegments(Seq(
-            SegPart("pairs", Seq("item_a", "item_b"),
-              Seq("n_baskets" -> "bigint")) -> pairsDelta,
-            SegPart("freq", Seq("item"), Seq("ni" -> "bigint")) -> freqDelta,
-            SegPart("total", Seq.empty, Seq("n" -> "bigint")) -> totDelta),
-          batchId, dir, compactEvery, maxStateRows = None)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      : DataStreamWriter[Row] =
+    segmentSink(postings, dir, cfg, compactEvery) { batch =>
+      // the same one-aggregate basket kernel as the batch operator
+      // (graft.operators.Affinity): per-basket sorted distinct item
+      // sets, pairs generated map-side — no distinct / size-count /
+      // semi-join / self-join of the batch against itself
+      val kept = graft.operators.Affinity.basketItemSets(
+        batch, basketCol, itemCol, maxBasketSize)
+      val pairsDelta = graft.operators.Affinity.basketPairs(kept)
+        .groupBy(col("__x").as("item_a"), col("__y").as("item_b"))
+        .agg(count(lit(1)).as("n_baskets"))
+      val freqDelta = kept.select(explode(col("__items")).as("item"))
+        .groupBy(col("item"))
+        .agg(count(lit(1)).as("ni"))
+      // an empty batch's global count row is n=0 — filtered so an
+      // all-empty delta skips the fold (state already current);
+      // kept is one row per basket, so the count needs no distinct
+      val totDelta = kept
+        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
+      Seq(
+        SegPart("pairs", Seq("item_a", "item_b"),
+          Seq("n_baskets" -> "bigint")) -> pairsDelta,
+        SegPart("freq", Seq("item"), Seq("ni" -> "bigint")) -> freqDelta,
+        SegPart("total", Seq.empty, Seq("n" -> "bigint")) -> totDelta)
+    }
 
   /** Streaming functional-dependency monitor state: micro-batches fold
     * ADDITIVELY into persisted counts keyed by the (determinant,
     * dependent) VALUE pair through the manifest-committed LSM segment
-    * log ([[foldCountSegments]] — one delta segment + one manifest PUT
+    * log ([[foldSegments]] — one delta segment + one manifest PUT
     * per batch, replay-idempotent, compacted every `compactEvery`
     * batches), so "did this load break the 1:1 mapping?" is answerable
     * at any moment without rescanning history — and without the
@@ -479,17 +467,12 @@ object MicroBatch {
   def streamPairCounts(stream: DataFrame, dir: String, detCol: String,
       depCol: String, cfg: IngestConfig = IngestConfig(),
       compactEvery: Int = 8, maxStateRows: Option[Long] = None)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldCountSegments(batch
-            .select(col(detCol).as("__det"), col(depCol).as("__dep")),
-          batchId, dir, Seq("__det", "__dep"), compactEvery, maxStateRows)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      : DataStreamWriter[Row] =
+    segmentSink(stream, dir, cfg, compactEvery, maxStateRows) { batch =>
+      Seq(countPart(batch
+        .select(col(detCol).as("__det"), col(depCol).as("__dep")),
+        Seq("__det", "__dep")))
+    }
 
   /** The current functional-dependency audit of a [[streamPairCounts]]
     * directory, shaped exactly like
@@ -533,33 +516,28 @@ object MicroBatch {
   def streamMoments(stream: DataFrame, dir: String, xCol: String,
       yCol: String, cfg: IngestConfig = IngestConfig(),
       compactEvery: Int = 8)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     val dIn = "decimal(18,6)"
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batch
-          .select(col(xCol).cast("double").as("__x"),
-            col(yCol).cast("double").as("__y"))
-          .filter(col("__x").isNotNull && !isnan(col("__x")) &&
-            col("__y").isNotNull && !isnan(col("__y")))
-          .agg(count(lit(1)).as("__n"),
-            sum(col("__x").cast(dIn)).cast("decimal(38,6)").as("__sx"),
-            sum(col("__y").cast(dIn)).cast("decimal(38,6)").as("__sy"),
-            sum((col("__x").cast(dIn) * col("__x").cast(dIn))
-              .cast("decimal(38,12)")).cast("decimal(38,12)").as("__sxx"),
-            sum((col("__y").cast(dIn) * col("__y").cast(dIn))
-              .cast("decimal(38,12)")).cast("decimal(38,12)").as("__syy"),
-            sum((col("__x").cast(dIn) * col("__y").cast(dIn))
-              .cast("decimal(38,12)")).cast("decimal(38,12)").as("__sxy"))
-          // an empty batch's global aggregate is an n=0 row — filtered
-          // so the fold's empty-delta short-circuit applies
-          .filter(col("__n") > 0)
-        foldSegments(Seq(SegPart("", Seq.empty, MomentSums) -> delta),
-          batchId, dir, compactEvery, maxStateRows = None)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
+    segmentSink(stream, dir, cfg, compactEvery) { batch =>
+      val delta = batch
+        .select(col(xCol).cast("double").as("__x"),
+          col(yCol).cast("double").as("__y"))
+        .filter(col("__x").isNotNull && !isnan(col("__x")) &&
+          col("__y").isNotNull && !isnan(col("__y")))
+        .agg(count(lit(1)).as("__n"),
+          sum(col("__x").cast(dIn)).cast("decimal(38,6)").as("__sx"),
+          sum(col("__y").cast(dIn)).cast("decimal(38,6)").as("__sy"),
+          sum((col("__x").cast(dIn) * col("__x").cast(dIn))
+            .cast("decimal(38,12)")).cast("decimal(38,12)").as("__sxx"),
+          sum((col("__y").cast(dIn) * col("__y").cast(dIn))
+            .cast("decimal(38,12)")).cast("decimal(38,12)").as("__syy"),
+          sum((col("__x").cast(dIn) * col("__y").cast(dIn))
+            .cast("decimal(38,12)")).cast("decimal(38,12)").as("__sxy"))
+        // an empty batch's global aggregate is an n=0 row — filtered
+        // so the fold's empty-delta short-circuit applies
+        .filter(col("__n") > 0)
+      Seq(SegPart("", Seq.empty, MomentSums) -> delta)
+    }
   }
 
   /** The current Shannon entropy of a [[streamValueCounts]] directory —
@@ -604,22 +582,15 @@ object MicroBatch {
   def streamKeySums(stream: DataFrame, dir: String, keyCol: String,
       valueCents: String, cfg: IngestConfig = IngestConfig(),
       compactEvery: Int = 8)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batch
-          .filter(col(keyCol).isNotNull && col(valueCents).isNotNull)
-          .groupBy(col(keyCol).as("__k"))
-          .agg(sum(col(valueCents).cast("decimal(19,0)"))
-            .cast("decimal(28,0)").as("__s"),
-            count(lit(1)).as("__n"))
-        foldSegments(Seq(SegPart("", Seq("__k"), KeySumSums) -> delta),
-          batchId, dir, compactEvery, maxStateRows = None)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      : DataStreamWriter[Row] =
+    segmentSink(stream, dir, cfg, compactEvery) { batch =>
+      Seq(SegPart("", Seq("__k"), KeySumSums) -> batch
+        .filter(col(keyCol).isNotNull && col(valueCents).isNotNull)
+        .groupBy(col(keyCol).as("__k"))
+        .agg(sum(col(valueCents).cast("decimal(19,0)"))
+          .cast("decimal(28,0)").as("__s"),
+          count(lit(1)).as("__n")))
+    }
 
   /** Streaming approximate-distinct maintenance — the SKETCH state the
     * `maxStateRows` guard routes unbounded domains to
@@ -638,29 +609,24 @@ object MicroBatch {
   def streamDistinctSketch(stream: DataFrame, dir: String,
       valueCol: String, groupCol: Option[String] = None, lgK: Int = 12,
       cfg: IngestConfig = IngestConfig(), compactEvery: Int = 8)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(lgK >= 4 && lgK <= 21, s"lgK must be in [4, 21], got $lgK")
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val keyed = groupCol match {
-          case Some(g) => batch
-            .select(col(g).cast("string").as("__g"),
-              col(valueCol).as("__v"))
-            .filter(col("__g").isNotNull)
-          case None => batch
-            .select(lit("").as("__g"), col(valueCol).as("__v"))
-        }
-        val delta = keyed.filter(col("__v").isNotNull)
-          .groupBy(col("__g"))
-          .agg(hll_sketch_agg(col("__v"), lit(lgK)).as("__sk"),
-            count(lit(1)).as("__n"))
-        foldSegments(Seq(SegPart("", Seq("__g"),
-            Seq("__sk" -> "hll", "__n" -> "bigint")) -> delta),
-          batchId, dir, compactEvery, maxStateRows = None)
+    segmentSink(stream, dir, cfg, compactEvery) { batch =>
+      val keyed = groupCol match {
+        case Some(g) => batch
+          .select(col(g).cast("string").as("__g"),
+            col(valueCol).as("__v"))
+          .filter(col("__g").isNotNull)
+        case None => batch
+          .select(lit("").as("__g"), col(valueCol).as("__v"))
       }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
+      val delta = keyed.filter(col("__v").isNotNull)
+        .groupBy(col("__g"))
+        .agg(hll_sketch_agg(col("__v"), lit(lgK)).as("__sk"),
+          count(lit(1)).as("__n"))
+      Seq(SegPart("", Seq("__g"),
+        Seq("__sk" -> "hll", "__n" -> "bigint")) -> delta)
+    }
   }
 
   /** The current per-group approximate distinct count of a
@@ -690,22 +656,15 @@ object MicroBatch {
   def streamFreshness(stream: DataFrame, dir: String, groupCol: String,
       tsCol: String, cfg: IngestConfig = IngestConfig(),
       compactEvery: Int = 8)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batch
-          .filter(col(groupCol).isNotNull)
-          .groupBy(col(groupCol).as("__g"))
-          .agg(max(unix_micros(col(tsCol))).as("__mx"),
-            count(lit(1)).as("__n"))
-        foldSegments(Seq(SegPart("", Seq("__g"),
-            Seq("__mx" -> "max bigint", "__n" -> "bigint")) -> delta),
-          batchId, dir, compactEvery, maxStateRows = None)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      : DataStreamWriter[Row] =
+    segmentSink(stream, dir, cfg, compactEvery) { batch =>
+      Seq(SegPart("", Seq("__g"),
+          Seq("__mx" -> "max bigint", "__n" -> "bigint")) -> batch
+        .filter(col(groupCol).isNotNull)
+        .groupBy(col(groupCol).as("__g"))
+        .agg(max(unix_micros(col(tsCol))).as("__mx"),
+          count(lit(1)).as("__n")))
+    }
 
   /** The current freshness report of a [[streamFreshness]] directory,
     * shaped exactly like [[graft.operators.Expectations.freshness]]:
@@ -751,24 +710,17 @@ object MicroBatch {
   def streamSprt(stream: DataFrame, dir: String, groupCol: String,
       successCol: String, cfg: IngestConfig = IngestConfig(),
       compactEvery: Int = 8)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batch
-          .filter(col(groupCol).isNotNull &&
-            col(successCol).isNotNull)
-          .groupBy(col(groupCol).cast("string").as("__g"))
-          .agg(sum(when(col(successCol).cast("boolean"), 1L)
-            .otherwise(0L)).as("__s"),
-            count(lit(1)).as("__t"))
-        foldSegments(Seq(SegPart("", Seq("__g"),
-            Seq("__s" -> "bigint", "__t" -> "bigint")) -> delta),
-          batchId, dir, compactEvery, maxStateRows = None)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      : DataStreamWriter[Row] =
+    segmentSink(stream, dir, cfg, compactEvery) { batch =>
+      Seq(SegPart("", Seq("__g"),
+          Seq("__s" -> "bigint", "__t" -> "bigint")) -> batch
+        .filter(col(groupCol).isNotNull &&
+          col(successCol).isNotNull)
+        .groupBy(col(groupCol).cast("string").as("__g"))
+        .agg(sum(when(col(successCol).cast("boolean"), 1L)
+          .otherwise(0L)).as("__s"),
+          count(lit(1)).as("__t")))
+    }
 
   /** The current Wald SPRT decision of a [[streamSprt]] directory —
     * H₀: rate = `p0` vs H₁: rate = `p1`, error levels `alpha` (false
@@ -818,24 +770,14 @@ object MicroBatch {
   def streamPreferences(stream: DataFrame, dir: String,
       winnerCol: String, loserCol: String,
       cfg: IngestConfig = IngestConfig(), compactEvery: Int = 8)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batch
-          .select(col(winnerCol).cast("string").as("__w"),
-            col(loserCol).cast("string").as("__l"))
-          .filter(col("__w").isNotNull && col("__l").isNotNull &&
-            col("__w") =!= col("__l"))
-          .groupBy(col("__w"), col("__l"))
-          .agg(count(lit(1)).as("__n"))
-        foldSegments(Seq(SegPart("", Seq("__w", "__l"),
-            Seq("__n" -> "bigint")) -> delta),
-          batchId, dir, compactEvery, maxStateRows = None)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      : DataStreamWriter[Row] =
+    segmentSink(stream, dir, cfg, compactEvery) { batch =>
+      Seq(countPart(batch
+        .select(col(winnerCol).cast("string").as("__w"),
+          col(loserCol).cast("string").as("__l"))
+        .filter(col("__w").isNotNull && col("__l").isNotNull &&
+          col("__w") =!= col("__l")), Seq("__w", "__l")))
+    }
 
   /** The current Bradley–Terry ranking of a [[streamPreferences]]
     * directory: the maintained (winner, loser, count) matrix loads
@@ -886,47 +828,41 @@ object MicroBatch {
   def streamGramFit(stream: DataFrame, dir: String, groupCol: String,
       target: Column, features: Seq[Column],
       cfg: IngestConfig = IngestConfig(), compactEvery: Int = 8)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(features.nonEmpty && features.size <= 32,
       s"streamGramFit needs 1..32 features, got ${features.size}")
     val d = features.size
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val finite = (c: Column) =>
-          c.isNotNull && !isnan(c) && abs(c) < lit(Double.PositiveInfinity)
-        val named = batch.select(
-          (col(groupCol).cast("string").as("__g") +:
-            target.cast("double").as("__ym") +:
-            features.zipWithIndex.map { case (c, j) =>
-              c.cast("double").as(s"__xm$j") }): _*)
-        val quant = named
-          .filter((0 until d).map(j => finite(col(s"__xm$j")))
-            .foldLeft(col("__g").isNotNull && finite(col("__ym")))(_ && _))
-          .select((col("__g") +:
-            floor(col("__ym") * 1000000.0 + 0.5).cast("long").as("__y") +:
-            (0 until d).map(j => floor(col(s"__xm$j") * 1000000.0 + 0.5)
-              .cast("long").as(s"__x$j"))): _*)
-        def d19(c: Column): Column = c.cast("decimal(19,0)")
-        def crossSum(a: Column, b: Column): Column =
-          sum((d19(a) * d19(b)).cast("decimal(38,0)")).cast("decimal(38,0)")
-        val sums: Seq[Column] =
-          Seq(count(lit(1)).as("__n")) ++
-          (0 until d).map(j => sum(d19(col(s"__x$j")))
-            .cast("decimal(38,0)").as(s"__sx$j")) ++
-          (for (j <- 0 until d; k <- j until d) yield
-            crossSum(col(s"__x$j"), col(s"__x$k")).as(s"__sxx_${j}_$k")) ++
-          Seq(sum(d19(col("__y"))).cast("decimal(38,0)").as("__sy")) ++
-          (0 until d).map(j =>
-            crossSum(col(s"__x$j"), col("__y")).as(s"__sxy$j")) ++
-          Seq(crossSum(col("__y"), col("__y")).as("__syy"))
-        val delta = quant.groupBy(col("__g"))
-          .agg(sums.head, sums.tail: _*)
-        foldSegments(Seq(SegPart("", Seq("__g"), gramSumsSpec(d)) -> delta),
-          batchId, dir, compactEvery, maxStateRows = None)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
+    segmentSink(stream, dir, cfg, compactEvery) { batch =>
+      val finite = (c: Column) =>
+        c.isNotNull && !isnan(c) && abs(c) < lit(Double.PositiveInfinity)
+      val named = batch.select(
+        (col(groupCol).cast("string").as("__g") +:
+          target.cast("double").as("__ym") +:
+          features.zipWithIndex.map { case (c, j) =>
+            c.cast("double").as(s"__xm$j") }): _*)
+      val quant = named
+        .filter((0 until d).map(j => finite(col(s"__xm$j")))
+          .foldLeft(col("__g").isNotNull && finite(col("__ym")))(_ && _))
+        .select((col("__g") +:
+          floor(col("__ym") * 1000000.0 + 0.5).cast("long").as("__y") +:
+          (0 until d).map(j => floor(col(s"__xm$j") * 1000000.0 + 0.5)
+            .cast("long").as(s"__x$j"))): _*)
+      def d19(c: Column): Column = c.cast("decimal(19,0)")
+      def crossSum(a: Column, b: Column): Column =
+        sum((d19(a) * d19(b)).cast("decimal(38,0)")).cast("decimal(38,0)")
+      val sums: Seq[Column] =
+        Seq(count(lit(1)).as("__n")) ++
+        (0 until d).map(j => sum(d19(col(s"__x$j")))
+          .cast("decimal(38,0)").as(s"__sx$j")) ++
+        (for (j <- 0 until d; k <- j until d) yield
+          crossSum(col(s"__x$j"), col(s"__x$k")).as(s"__sxx_${j}_$k")) ++
+        Seq(sum(d19(col("__y"))).cast("decimal(38,0)").as("__sy")) ++
+        (0 until d).map(j =>
+          crossSum(col(s"__x$j"), col("__y")).as(s"__sxy$j")) ++
+        Seq(crossSum(col("__y"), col("__y")).as("__syy"))
+      Seq(SegPart("", Seq("__g"), gramSumsSpec(d)) ->
+        quant.groupBy(col("__g")).agg(sums.head, sums.tail: _*))
+    }
   }
 
   /** The current per-group OLS fit of a [[streamGramFit]] directory:
@@ -1209,21 +1145,12 @@ object MicroBatch {
       s"compactEvery must be positive, got $compactEvery")
     require(parts.nonEmpty, "foldSegments needs at least one part")
     val spark = parts.head._2.sparkSession
-    val deltas = parts.map { case (p, df) => p -> df.persist() }
-    val persisted = scala.collection.mutable.ArrayBuffer[DataFrame](
-      deltas.map(_._2): _*)
-    // The per-part actions below (counts, segment writes) are
-    // independent micro-jobs over small state — run them concurrently
-    // from driver threads (guide §2.6 "overlap independent jobs"):
-    // sequential submission left most cores idle per job and the
-    // per-batch wall was job-count-bound, not data-bound.
-    def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      if (xs.lengthCompare(1) <= 0) xs.map(f)
-      else Await.result(Future.sequence(xs.map(x => Future(f(x)))), Duration.Inf)
-    }
+    // each delta is read by its row count and again by its segment
+    // write or compaction merge; the per-part counts and writes are
+    // independent micro-jobs over small state, so they run concurrently
+    val deltas = parts.map { case (p, df) =>
+      p -> CheckpointOps(df, eager = false) }
+    var merged: Option[Seq[DataFrame]] = None
     try {
       val deltaRows = inParallel(deltas)(_._2.count())
       if (deltaRows.sum == 0L) return // empty delta: state already current
@@ -1243,19 +1170,15 @@ object MicroBatch {
         if (!compact && priorFooterRows.sum + deltaRows.sum > bound)
           compact = true // upper bound crossed: get the exact count
       }
-      val merged: Option[Seq[DataFrame]] =
-        if (compact && priorSegs.nonEmpty)
-          Some(deltas.map { case (p, d) =>
-            val m = spark.read
-              .parquet(priorSegs.map(id => segPath(dir, id, p.sub)): _*)
-              .unionByName(d)
-              .groupBy(p.keys.map(col): _*)
-              .agg(sumExprs(p.sums).head, sumExprs(p.sums).tail: _*)
-              .persist()
-            persisted += m
-            m
-          })
-        else None
+      if (compact && priorSegs.nonEmpty)
+        merged = Some(deltas.map { case (p, d) =>
+          CheckpointOps(spark.read
+            .parquet(priorSegs.map(id => segPath(dir, id, p.sub)): _*)
+            .unionByName(d)
+            .groupBy(p.keys.map(col): _*)
+            .agg(sumExprs(p.sums).head, sumExprs(p.sums).tail: _*),
+            eager = false)
+        })
       val outRows: Seq[Long] = maxStateRows match {
         case Some(bound) =>
           val exact = merged.map(inParallel(_)(_.count())).getOrElse(deltaRows)
@@ -1287,18 +1210,28 @@ object MicroBatch {
       gcSegments(dir,
         keepManifests = prior.map(_._1).toSet + batchId,
         keepSegs = priorSegs.toSet ++ newSegs)
-    } finally persisted.foreach(_.unpersist())
+    } finally
+      CheckpointOps.release(deltas.map(_._2) ++ merged.getOrElse(Nil): _*)
   }
 
-  /** The value-count special case of [[foldSegments]]: aggregate the
-    * projected batch to (keys → count) and fold it as a single-part
-    * segment — the r13 layout, unchanged on disk. */
-  private def foldCountSegments(batch: DataFrame, batchId: Long,
-      dir: String, keys: Seq[String], compactEvery: Int,
-      maxStateRows: Option[Long]): Unit =
-    foldSegments(Seq(SegPart("", keys, Seq("__n" -> "bigint")) ->
-        batch.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))),
-      batchId, dir, compactEvery, maxStateRows)
+  /** A [[foldSegments]] sink: `parts` maps each micro-batch to its
+    * (part → delta) pairs, which fold into the segment log under
+    * `dir`. */
+  private def segmentSink(stream: DataFrame, dir: String,
+      cfg: IngestConfig, compactEvery: Int,
+      maxStateRows: Option[Long] = None)(
+      parts: DataFrame => Seq[(SegPart, DataFrame)]): DataStreamWriter[Row] =
+    batchSink(stream, Some(cfg.trigger), cfg.checkpoint) { (batch, batchId) =>
+      foldSegments(parts(batch), batchId, dir, compactEvery, maxStateRows)
+    }
+
+  /** The value-count part of a [[foldSegments]] fold: the projected
+    * batch aggregated to (keys → count) as a single-part segment — the
+    * r13 layout, unchanged on disk. */
+  private def countPart(batch: DataFrame,
+      keys: Seq[String]): (SegPart, DataFrame) =
+    SegPart("", keys, Seq("__n" -> "bigint")) ->
+      batch.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
 
   /** GC past the replay horizon: keep the prior manifest (a replay of
     * the current batch resolves it) and the one just committed; drop
@@ -1336,20 +1269,21 @@ object MicroBatch {
       beforeExclusive: Option[Long]): Option[(Long, Seq[Long])] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = graft.sources.Fs.of(root)
-    if (fs.exists(root) && fs.listStatus(root).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("bucket=")))
+    val children =
+      try fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => return None }
+    if (children.exists(_.startsWith("bucket=")))
       throw new IllegalStateException(
         s"$dir holds pre-r13 bucketed value-count state (bucket=*/" +
         "version=*); the segment-log layout cannot resume it — " +
         "recompute the state into a fresh directory")
-    if (fs.exists(root) && fs.listStatus(root).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("version=")))
+    if (children.exists(_.startsWith("version=")))
       throw new IllegalStateException(
         s"$dir holds pre-r14 versioned-snapshot streaming state " +
         "(version=*); the segment-log layout cannot resume it — " +
         "recompute the state into a fresh directory")
-    val mDir = new org.apache.hadoop.fs.Path(s"$dir/_manifests")
-    if (!fs.exists(mDir)) return None
+    if (!children.contains("_manifests")) return None
+    val mDir = new org.apache.hadoop.fs.Path(root, "_manifests")
     val ids = fs.listStatus(mDir).toSeq.map(_.getPath.getName).collect {
       case CountManifestRe(id) => id.toLong
     }.filter(id => beforeExclusive.forall(id < _))
@@ -1403,7 +1337,7 @@ object MicroBatch {
 
   /** Streaming distribution-drift maintenance: micro-batches of a
     * numeric column fold ADDITIVELY into persisted per-value counts
-    * (a manifest-committed segment log — see [[foldCountSegments]] —
+    * (a manifest-committed segment log — see [[foldSegments]] —
     * replay-idempotent, per-batch I/O O(delta), compacted every
     * `compactEvery` batches), so "has the live distribution drifted
     * from the reference?" is answerable at any moment WITHOUT
@@ -1414,23 +1348,16 @@ object MicroBatch {
     * batches exactly. Per-batch cost: one value-keyed count aggregate
     * + one delta-segment write + one manifest PUT; NULL/NaN excluded
     * (PSI/KS's convention). `maxStateRows` fail-fasts a
-    * continuous-domain misuse (see [[foldCountSegments]]). */
+    * continuous-domain misuse (see [[foldSegments]]). */
   def streamValueCounts(stream: DataFrame, dir: String,
       valueCol: String, cfg: IngestConfig = IngestConfig(),
       compactEvery: Int = 8, maxStateRows: Option[Long] = None)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batch
-          .select(col(valueCol).cast("double").as("__v"))
-          .filter(col("__v").isNotNull && !isnan(col("__v")))
-        foldCountSegments(delta, batchId, dir, Seq("__v"),
-          compactEvery, maxStateRows)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      : DataStreamWriter[Row] =
+    segmentSink(stream, dir, cfg, compactEvery, maxStateRows) { batch =>
+      Seq(countPart(batch
+        .select(col(valueCol).cast("double").as("__v"))
+        .filter(col("__v").isNotNull && !isnan(col("__v"))), Seq("__v")))
+    }
 
   /** Streaming fixed-bin histogram maintenance — the BOUNDED-domain
     * quantile state for continuous values (the route the
@@ -1451,28 +1378,23 @@ object MicroBatch {
   def streamHistogram(stream: DataFrame, dir: String, valueCol: String,
       lo: Double, hi: Double, bins: Int,
       cfg: IngestConfig = IngestConfig())
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(bins >= 1 && bins <= 100000,
       s"bins must be in [1, 100000], got $bins")
     require(hi > lo, s"need hi > lo, got [$lo, $hi]")
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val width = (hi - lo) / bins
-        val rawBin = floor((col("__raw") - lo) / width)
-        val delta = batch
-          .select(col(valueCol).cast("double").as("__raw"))
-          .filter(col("__raw").isNotNull && !isnan(col("__raw")))
-          .select(
-            least(greatest(rawBin, lit(0L)), lit(bins - 1L))
-              .cast("double").as("__v"),
-            when(rawBin < 0L, lit(-1)).when(rawBin > bins - 1L, lit(1))
-              .otherwise(lit(0)).as("__c"))
-        foldCountSegments(delta, batchId, dir, Seq("__v", "__c"),
-          compactEvery = 8, maxStateRows = Some(bins.toLong + 2L))
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
+    segmentSink(stream, dir, cfg, compactEvery = 8,
+        maxStateRows = Some(bins.toLong + 2L)) { batch =>
+      val width = (hi - lo) / bins
+      val rawBin = floor((col("__raw") - lo) / width)
+      Seq(countPart(batch
+        .select(col(valueCol).cast("double").as("__raw"))
+        .filter(col("__raw").isNotNull && !isnan(col("__raw")))
+        .select(
+          least(greatest(rawBin, lit(0L)), lit(bins - 1L))
+            .cast("double").as("__v"),
+          when(rawBin < 0L, lit(-1)).when(rawBin > bins - 1L, lit(1))
+            .otherwise(lit(0)).as("__c")), Seq("__v", "__c")))
+    }
   }
 
   /** Fit a [[streamHistogram]] [lo, hi) range from a SEED SAMPLE (one
@@ -1641,7 +1563,7 @@ object MicroBatch {
   /** Streaming GROUPED value-count maintenance — [[streamValueCounts]]
     * with a group key: micro-batches fold additively into persisted
     * (group, value, n) counts (a manifest-committed segment log — see
-    * [[foldCountSegments]] — replay-idempotent, per-batch I/O
+    * [[foldSegments]] — replay-idempotent, per-batch I/O
     * O(delta), compacted every `compactEvery` batches), which is
     * sufficient state for ANY exact order-statistic read — median,
     * quantiles, trimmed means — per group at any moment without
@@ -1651,25 +1573,18 @@ object MicroBatch {
     * + one delta-segment write + one manifest PUT; NULL/NaN values
     * excluded (the order-statistic convention). `maxStateRows`
     * fail-fasts a continuous-domain misuse (see
-    * [[foldCountSegments]]). */
+    * [[foldSegments]]). */
   def streamGroupedValueCounts(stream: DataFrame, dir: String,
       keyCol: String, valueCol: String, cfg: IngestConfig = IngestConfig(),
       compactEvery: Int = 8, maxStateRows: Option[Long] = None)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = stream.writeStream
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batch
-          .select(col(keyCol).cast("string").as("__g"),
-            col(valueCol).cast("double").as("__v"))
-          .filter(col("__g").isNotNull &&
-            col("__v").isNotNull && !isnan(col("__v")))
-        foldCountSegments(delta, batchId, dir, Seq("__g", "__v"),
-          compactEvery, maxStateRows)
-      }
-    if (cfg.checkpointDir.nonEmpty)
-      w.option("checkpointLocation", cfg.checkpointDir) else w
-  }
+      : DataStreamWriter[Row] =
+    segmentSink(stream, dir, cfg, compactEvery, maxStateRows) { batch =>
+      Seq(countPart(batch
+        .select(col(keyCol).cast("string").as("__g"),
+          col(valueCol).cast("double").as("__v"))
+        .filter(col("__g").isNotNull &&
+          col("__v").isNotNull && !isnan(col("__v"))), Seq("__g", "__v")))
+    }
 
   /** Exact per-group median read over a [[streamGroupedValueCounts]]
     * directory: the LOWER weighted median (first value whose doubled
@@ -1968,15 +1883,12 @@ object MicroBatch {
     require(!stream.columns.contains("batch"),
       "streamNearDupIngest: the stream must not carry a column named " +
         "'batch' — it is reserved for the output/index partition layout")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestDedupBatch(batch, batchId, indexDir, outDir, idCol, textCol,
-          shingleK, numHashes, bands, threshold, maxBucketSize)
-        maybeCompactIndex(batch.sparkSession, indexDir, batchId,
-          compactEvery)
-      }
-      .start()
+    batchSink(stream, None, Some(checkpointDir)) { (batch, batchId) =>
+      ingestDedupBatch(batch, batchId, indexDir, outDir, idCol, textCol,
+        shingleK, numHashes, bands, threshold, maxBucketSize)
+      maybeCompactIndex(batch.sparkSession, indexDir, batchId,
+        compactEvery)
+    }.start()
   }
 
   /** Auto-compaction cadence for the streaming near-dup index: fold
@@ -2035,39 +1947,25 @@ object MicroBatch {
       else
         graft.operators.Dedup.minhashIndex(batch.limit(0), idCol, textCol,
           shingleK, numHashes, bands).select("id", "bands", "sh")
-    // nearDupIncrement references the increment from several plan branches
-    // (intra-batch banding, shingle verify, anti-joins) before its lazy
-    // localCheckpoint materializes — persist so the micro-batch's source
-    // files are decoded once per trigger, not once per branch.
-    val pinned = batch.persist()
-    try {
-      // The indexed variant carries the survivors' own bands/sh out of
-      // the dedup, so the index append reuses the sketches the dedup
-      // already computed instead of re-running the shingle+minhash
-      // kernels over survivor text (the dominant per-doc compute). The
-      // eager checkpoint materializes the (increment-sized) survivors
-      // once for the two writes — referencing the live plan twice would
-      // re-run the whole dedup pipeline.
-      val survivors = graft.operators.Dedup.nearDupIncrementIndexed(
-          pinned, index, idCol, textCol, shingleK, numHashes, bands,
-          threshold, maxBucketSize)
-        .transform(CheckpointOps(_, eager = true))
-      // the two survivor writes read the same checkpointed blocks and
-      // are independent — run them concurrently (guide §2.6): the
-      // per-batch wall here is job-count-bound, not data-bound
-      locally {
-        import scala.concurrent.{Await, Future, ExecutionContext}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        Await.result(Future.sequence(Seq(
-          Future(survivors.drop("bands", "sh")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")),
-          Future(survivors.select(col(idCol).as("id"), col("bands"),
-              col("sh"))
-            .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId"))
-        )), Duration.Inf)
-      }
-    } finally pinned.unpersist()
+    // The indexed variant carries the survivors' own bands/sh out of
+    // the dedup, so the index append reuses the sketches the dedup
+    // already computed instead of re-running the shingle+minhash kernels
+    // over survivor text (the dominant per-doc compute). The batch needs
+    // no checkpoint of its own: the dedup reads it once, into its sketch
+    // checkpoint. The eager checkpoint here materializes the
+    // (increment-sized) survivors once for the two writes — referencing
+    // the live plan twice would re-run the whole dedup pipeline.
+    val survivors = graft.operators.Dedup.nearDupIncrementIndexed(
+        batch, index, idCol, textCol, shingleK, numHashes, bands,
+        threshold, maxBucketSize)
+      .transform(CheckpointOps(_, eager = true))
+    try inParallel(Seq(
+        survivors.drop("bands", "sh") -> s"$outDir/batch=$batchId",
+        survivors.select(col(idCol).as("id"), col("bands"), col("sh")) ->
+          s"$indexDir/batch=$batchId")) {
+      case (df, path) => df.write.mode("overwrite").parquet(path)
+    } finally CheckpointOps.release(survivors)
+    ()
   }
 
   /** Compact a [[streamNearDupIngest]] index directory: fold closed
@@ -2194,51 +2092,48 @@ object MicroBatch {
     require(!stream.columns.contains("batch"),
       "streamCurate: the stream must not carry a column named 'batch'")
     import graft.operators.{Classifier, TextAnalysis}
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val extracted =
-          if (cfg.htmlExtract)
-            batch.withColumn(textCol, TextAnalysis.htmlToText(col(textCol)))
-          else batch
-        val redacted =
-          if (cfg.redactPii)
-            extracted.withColumn(textCol,
-              TextAnalysis.redactPiiExtended(col(textCol)))
-          else extracted
-        val scored = redacted
-          .withColumn("__q", TextAnalysis.qualityScore(col(textCol)))
-          .withColumn("__nt", org.apache.spark.sql.graft.NativeFunctions
-            .tokenCount(col(textCol)).cast("long"))
-        val withReason = {
-          val comp = cfg.compressionBand.map { case (lo, hi) =>
-            when(!TextAnalysis.compressionKeep(col(textCol), lo, hi),
-              lit("compression"))
-          }
-          val cls = cfg.classifier.map { case (model, thr) =>
-            when(Classifier.scoreExpr(col(textCol), model) < thr,
-              lit("classifier"))
-          }
-          val reasons = Seq(
-            Some(when(col("__nt") < cfg.minTokens, lit("tokens"))),
-            Some(when(col("__q") < cfg.minQuality, lit("quality"))),
-            comp, cls).flatten
-          scored.withColumn("__reason", coalesce(
-            (reasons :+ lit(null).cast("string")): _*))
+    batchSink(stream, None, Some(checkpointDir)) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val extracted =
+        if (cfg.htmlExtract)
+          batch.withColumn(textCol, TextAnalysis.htmlToText(col(textCol)))
+        else batch
+      val redacted =
+        if (cfg.redactPii)
+          extracted.withColumn(textCol,
+            TextAnalysis.redactPiiExtended(col(textCol)))
+        else extracted
+      val scored = redacted
+        .withColumn("__q", TextAnalysis.qualityScore(col(textCol)))
+        .withColumn("__nt", org.apache.spark.sql.graft.NativeFunctions
+          .tokenCount(col(textCol)).cast("long"))
+      val withReason = {
+        val comp = cfg.compressionBand.map { case (lo, hi) =>
+          when(!TextAnalysis.compressionKeep(col(textCol), lo, hi),
+            lit("compression"))
         }
-        val rejects = withReason.filter(col("__reason").isNotNull)
-          .withColumnRenamed("__reason", "reason")
-          .drop("__q", "__nt")
-        rejects.write.mode("overwrite")
-          .parquet(s"$rejectDir/batch=$batchId")
-        val kept = withReason.filter(col("__reason").isNull)
-          .drop("__reason", "__q", "__nt")
-        ingestDedupBatch(kept, batchId, indexDir, outDir, idCol, textCol,
-          cfg.shingleK, cfg.numHashes, cfg.bands, cfg.threshold,
-          cfg.maxBucketSize)
-        maybeCompactIndex(spark, indexDir, batchId, cfg.compactEvery)
+        val cls = cfg.classifier.map { case (model, thr) =>
+          when(Classifier.scoreExpr(col(textCol), model) < thr,
+            lit("classifier"))
+        }
+        val reasons = Seq(
+          Some(when(col("__nt") < cfg.minTokens, lit("tokens"))),
+          Some(when(col("__q") < cfg.minQuality, lit("quality"))),
+          comp, cls).flatten
+        scored.withColumn("__reason", coalesce(
+          (reasons :+ lit(null).cast("string")): _*))
       }
-      .start()
+      val rejects = withReason.filter(col("__reason").isNotNull)
+        .withColumnRenamed("__reason", "reason")
+        .drop("__q", "__nt")
+      rejects.write.mode("overwrite")
+        .parquet(s"$rejectDir/batch=$batchId")
+      val kept = withReason.filter(col("__reason").isNull)
+        .drop("__reason", "__q", "__nt")
+      ingestDedupBatch(kept, batchId, indexDir, outDir, idCol, textCol,
+        cfg.shingleK, cfg.numHashes, cfg.bands, cfg.threshold,
+        cfg.maxBucketSize)
+      maybeCompactIndex(spark, indexDir, batchId, cfg.compactEvery)
+    }.start()
   }
 }

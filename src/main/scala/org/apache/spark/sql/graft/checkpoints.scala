@@ -67,7 +67,7 @@ object CheckpointOps {
     if (parts >= target) ck0
     else {
       val out = apply(ck0.repartition(target), eager = true)
-      lr0.foreach(_.rdd.unpersist(false))
+      release(ck0)
       out
     }
   }
@@ -114,12 +114,17 @@ object CheckpointOps {
         if (n < wideRegimeFloor(ck0)) ck0
         else {
           val out = declared(ck0, keys, n)
-          // phase-1 blocks are dead weight once the declared copy exists
-          logicalRdd(ck0).foreach(_.rdd.unpersist(false))
+          release(ck0) // dead weight once the declared copy exists
           out
         }
     }
   }
+
+  /** Free the blocks of checkpoints made here, once their last
+    * consumer has run. Only for frames this module returned: a frame
+    * that is not a bare checkpoint is left alone. */
+  def release(dfs: DataFrame*): Unit =
+    dfs.foreach(logicalRdd(_).foreach(_.rdd.unpersist(false)))
 
   private def shufflePartitions(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt

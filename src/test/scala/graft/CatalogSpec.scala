@@ -118,17 +118,13 @@ class CatalogSpec extends SparkTestBase {
       "(no listing, no job); the sidecars are underscore-hidden from " +
       "plain directory readers") {
     import spark.implicits._
-    import graft.sources.{ManifestCommit, PartitionedWrite}
+    import graft.sources.ManifestCommit
     val root = java.nio.file.Files
       .createTempDirectory("graft_cat_mfc").toString + "/t"
-    // the commitMode flag on the standard writer routes to the
-    // manifest protocol
-    PartitionedWrite.writePartitioned(
-      Seq(("2017", 1L), ("2018", 2L)).toDF("dt", "v"), root, Seq("dt"),
-      commitMode = "manifest")
-    PartitionedWrite.writePartitioned(
-      Seq(("2019", 3L)).toDF("dt", "v"), root, Seq("dt"),
-      commitMode = "manifest")
+    ManifestCommit.writePartitioned(
+      Seq(("2017", 1L), ("2018", 2L)).toDF("dt", "v"), root, Seq("dt"))
+    ManifestCommit.writePartitioned(
+      Seq(("2019", 3L)).toDF("dt", "v"), root, Seq("dt"))
     assert(ManifestCommit.maxPt(root, "dt") === Some("2019"))
     assert(ManifestCommit.maxPt(root, "nope") === None)
     // every byte lives under _gen/_pointer — a reader that bypasses
@@ -428,6 +424,20 @@ class CatalogSpec extends SparkTestBase {
     // "9" > "10" lexicographically — the typed compare must say 10
     assert(graft.catalog.CatalogFunctions.maxPt(
       spark, "graft_mp", Array("db"), "t") == Some("10"))
+  }
+
+  test("maxPt of a manifest table reads the latest pointer and compares " +
+      "in the partition column's type") {
+    val wh = Files.createTempDirectory("graft_maxpt_mft").toString
+    spark.conf.set("spark.sql.catalog.graft_mpm", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_mpm.root", wh)
+    sql("CREATE NAMESPACE graft_mpm.db")
+    sql("CREATE TABLE graft_mpm.db.t (v BIGINT, pt INT) PARTITIONED BY (pt) " +
+      "TBLPROPERTIES ('graft.commit.mode'='manifest')")
+    sql("INSERT INTO graft_mpm.db.t VALUES (1, 9), (2, 10)")
+    // "9" > "10" lexicographically — the typed compare must say 10
+    assert(graft.catalog.CatalogFunctions.maxPt(
+      spark, "graft_mpm", Array("db"), "t") == Some("10"))
   }
 
   test("cluster specs are guarded: no partition+cluster combos, no " +

@@ -670,6 +670,25 @@ class StreamingSpec extends SparkTestBase {
       s"$root/snap")) == maxPerHourWant)
   }
 
+  test("dead-letter split over an unaliased max aggregate in update " +
+      "mode lands every emitted row in exactly one sink") {
+    val root = Files.createTempDirectory("graft_dlq_max")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[String]("hr"), r.getAs[String]("k"),
+        r.getAs[String]("max(event_type)"))).toSeq
+    var good = Seq.empty[(String, String, String)]
+    var bad = Seq.empty[(String, String, String)]
+    val q = MicroBatch.withDeadLetter(maxPerHourStream(root),
+        col("max(event_type)") === "view",
+        b => good ++= rows(b), b => bad ++= rows(b),
+        MicroBatch.IngestConfig(checkpointDir = s"$root/ckpt"))
+      .outputMode("update").start()
+    try q.processAllAvailable() finally q.stop()
+    // update mode emits (h0,a) twice: click in batch 0, view in batch 1
+    assert(good.sorted == Seq(("h0", "a", "view"), ("h0", "b", "view")))
+    assert(bad.sorted == Seq(("h0", "a", "click"), ("h1", "c", "click")))
+  }
+
   test("streamRollup: versioned snapshots reach the recompute state; " +
       "restart with no new input is a no-op") {
     import org.apache.spark.sql.functions._
