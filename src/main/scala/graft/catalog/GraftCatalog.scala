@@ -589,53 +589,42 @@ object CatalogFunctions {
     df
   }
 
+  private def loadTable(spark: SparkSession, catalogName: String,
+      namespace: Array[String], table: String): Table =
+    org.apache.spark.sql.graft.Catalogs.plugin(spark, catalogName)
+      .asInstanceOf[TableCatalog].loadTable(Identifier.of(namespace, table))
+
   /** Explicit ANALYZE: recompute and persist a catalog table's row/byte
     * statistics from the committed files (commits refresh automatically;
     * this covers tables written outside the catalog, e.g. external data
     * that changed). Returns the fresh stats. */
   def analyzeTable(spark: SparkSession, catalogName: String,
-      namespace: Array[String], table: String): TableStatistics.TableStats = {
-    val cat = org.apache.spark.sql.graft.Catalogs.plugin(spark, catalogName)
-      .asInstanceOf[TableCatalog]
-    cat.loadTable(Identifier.of(namespace, table)) match {
+      namespace: Array[String], table: String): TableStatistics.TableStats =
+    loadTable(spark, catalogName, namespace, table) match {
       case gt: GraftTable => TableStatistics.refresh(
         new HPath(gt.location), gt.partitionColumnNames,
         Some(new HPath(gt.statsLocation)))
       case other => sys.error(s"cannot analyze ${other.name()}")
     }
-  }
 
   /** Small-file compaction of a managed catalog table (see
     * [[graft.sources.Maintenance.compactPartitions]]): rewrites only the
     * fragmented partitions, then refreshes the table statistics scoped to
-    * exactly those partitions. Rejected for hash/range-clustered tables
-    * (a hash rewrite would break their bucket-to-file contract — re-insert
-    * through their declarative write path instead) and for external tables
-    * (the catalog never writes into external data directories). Returns
-    * the rewritten partition rel-paths. */
+    * exactly those partitions. A manifest-pointer table compacts under its
+    * own pointer commit (one new pointer, no stats file). Rejected for
+    * hash/range-clustered tables (a hash rewrite would break their
+    * bucket-to-file contract — re-insert through their declarative write
+    * path instead) and for external tables (the catalog never writes into
+    * external data directories). Returns the rewritten partition
+    * rel-paths. */
   def compactTable(spark: SparkSession, catalogName: String,
       namespace: Array[String], table: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): Seq[String] = {
-    val cat = org.apache.spark.sql.graft.Catalogs.plugin(spark, catalogName)
-      .asInstanceOf[TableCatalog]
-    cat.loadTable(Identifier.of(namespace, table)) match {
-      case gt: GraftTable =>
-        val props = gt.properties()
-        require(!props.containsKey(GraftTable.BucketColsKey) &&
-          !props.containsKey(GraftTable.RangeColsKey),
-          s"$table is clustered; compaction would break its bucket layout")
-        require(!props.containsKey(TableMeta.ExternalLocationKey),
-          s"$table is external; the catalog does not rewrite external data")
-        val rels = graft.sources.Maintenance.compactPartitions(
-          spark, gt.location, gt.partitionColumnNames, targetFileBytes)
-        if (rels.nonEmpty) TableStatistics.refresh(
-          new HPath(gt.location), gt.partitionColumnNames,
-          Some(new HPath(gt.statsLocation)),
-          Some(TableStatistics.Touched(rels.filter(_.nonEmpty))))
-        rels
-      case other => sys.error(s"cannot compact ${other.name()}")
+      targetFileBytes: Long = 128L * 1024 * 1024): Seq[String] =
+    rewriteLayout(spark, catalogName, namespace, table, "compact",
+        "compaction would break its bucket layout") { t =>
+      graft.sources.Maintenance.compactPartitions(
+        spark, t.location, t.partitionColumnNames, targetFileBytes)
     }
-  }
 
   /** Rewrite a managed table's files Z-order-clustered on `zorderCols`
     * (the `OPTIMIZE … ZORDER BY` maintenance op —
@@ -646,46 +635,54 @@ object CatalogFunctions {
     * never rewritten. Refreshes stats for the rewritten scope. */
   def zorderTable(spark: SparkSession, catalogName: String,
       namespace: Array[String], table: String, zorderCols: Seq[String],
-      targetFileBytes: Long = 128L * 1024 * 1024): Seq[String] = {
-    val cat = org.apache.spark.sql.graft.Catalogs.plugin(spark, catalogName)
-      .asInstanceOf[TableCatalog]
-    cat.loadTable(Identifier.of(namespace, table)) match {
-      case gt: GraftTable =>
-        val props = gt.properties()
+      targetFileBytes: Long = 128L * 1024 * 1024): Seq[String] =
+    rewriteLayout(spark, catalogName, namespace, table, "zorder",
+        "its layout is already a contract") { t =>
+      val cols = t.columns().map(_.name()).toSet
+      zorderCols.foreach(c => require(cols.contains(c),
+        s"zorder column $c is not a column of $table"))
+      require(zorderCols.forall(c => !t.partitionColumnNames.contains(c)),
+        "zorder columns must be data columns, not partition columns")
+      graft.sources.Maintenance.zorderRewrite(
+        spark, t.location, t.partitionColumnNames, zorderCols, targetFileBytes)
+    }
+
+  /** The one eligibility check and stats refresh of a layout rewrite: the
+    * table must be a managed, unclustered catalog table; after `rewrite`
+    * a [[GraftTable]]'s stats are refreshed scoped to the rewritten
+    * partitions (a manifest table keeps no stats file). */
+  private def rewriteLayout(spark: SparkSession, catalogName: String,
+      namespace: Array[String], table: String, op: String, clustered: String)(
+      rewrite: Table with PartitionedCommit => Seq[String]): Seq[String] =
+    loadTable(spark, catalogName, namespace, table) match {
+      case t: PartitionedCommit =>
+        val props = t.properties()
         require(!props.containsKey(GraftTable.BucketColsKey) &&
           !props.containsKey(GraftTable.RangeColsKey),
-          s"$table is clustered; its layout is already a contract")
+          s"$table is clustered; $clustered")
         require(!props.containsKey(TableMeta.ExternalLocationKey),
           s"$table is external; the catalog does not rewrite external data")
-        val cols = gt.schema().fieldNames.toSet
-        zorderCols.foreach(c => require(cols.contains(c),
-          s"zorder column $c is not a column of $table"))
-        require(zorderCols.forall(c => !gt.partitionColumnNames.contains(c)),
-          "zorder columns must be data columns, not partition columns")
-        val rels = graft.sources.Maintenance.zorderRewrite(
-          spark, gt.location, gt.partitionColumnNames, zorderCols,
-          targetFileBytes)
-        if (rels.nonEmpty) TableStatistics.refresh(
-          new HPath(gt.location), gt.partitionColumnNames,
-          Some(new HPath(gt.statsLocation)),
-          Some(TableStatistics.Touched(rels.filter(_.nonEmpty))))
+        val rels = rewrite(t)
+        t match {
+          case gt: GraftTable if rels.nonEmpty => TableStatistics.refresh(
+            new HPath(gt.location), gt.partitionColumnNames,
+            Some(new HPath(gt.statsLocation)),
+            Some(TableStatistics.Touched(rels.filter(_.nonEmpty))))
+          case _ =>
+        }
         rels
-      case other => sys.error(s"cannot zorder ${other.name()}")
+      case other => sys.error(s"cannot $op ${other.name()}")
     }
-  }
 
   /** Reclaim crashed-commit staging debris under a managed table's
     * directory ([[graft.sources.Maintenance.vacuumStaging]]). */
   def vacuumTable(spark: SparkSession, catalogName: String,
-      namespace: Array[String], table: String, ttlMs: Long): Seq[String] = {
-    val cat = org.apache.spark.sql.graft.Catalogs.plugin(spark, catalogName)
-      .asInstanceOf[TableCatalog]
-    cat.loadTable(Identifier.of(namespace, table)) match {
+      namespace: Array[String], table: String, ttlMs: Long): Seq[String] =
+    loadTable(spark, catalogName, namespace, table) match {
       case gt: GraftTable =>
         graft.sources.Maintenance.vacuumStaging(gt.location, ttlMs)
       case other => sys.error(s"cannot vacuum ${other.name()}")
     }
-  }
 
   /** `max_pt(table)` — the latest partition value of a partitioned catalog
     * table, resolved from the PARTITION LISTING (no data scan), exactly the
@@ -693,10 +690,8 @@ object CatalogFunctions {
     * (`spark-connector/common/src/main/java/org/apache/spark/sql/odps/udf/MaxPtUDF.java:30-41`).
     * A manifest-pointer table's partitions come from its latest pointer. */
   def maxPt(spark: SparkSession, catalogName: String, namespace: Array[String],
-      table: String): Option[String] = {
-    val cat = org.apache.spark.sql.graft.Catalogs.plugin(spark, catalogName)
-      .asInstanceOf[TableCatalog]
-    cat.loadTable(Identifier.of(namespace, table)) match {
+      table: String): Option[String] =
+    loadTable(spark, catalogName, namespace, table) match {
       case m: GraftManifestTable =>
         maxFirstColumn(table, m.partitionSchema, m.pointerPartitions)
       case pm: SupportsPartitionManagement =>
@@ -704,7 +699,6 @@ object CatalogFunctions {
           pm.listPartitionIdentifiers(Array.empty, InternalRow.empty).toSeq)
       case _ => sys.error(s"$table does not support partition management")
     }
-  }
 
   private def maxFirstColumn(table: String, ps: StructType,
       partitions: Seq[InternalRow]): Option[String] = {

@@ -9,9 +9,10 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
@@ -45,11 +46,25 @@ object GraftTable {
         s"bad range-cluster column spec: '$tok' (want 'col [ASC|DESC]')")
       (parts(0), parts.length > 1 && parts(1).equalsIgnoreCase("DESC"))
     }
+
+  /** A write that asks Spark for `distribution` over `numPartitions`
+    * partitions, each sorted by `ordering`, and otherwise is `d`. */
+  private final class ClusteredWrite(d: Write, distribution: Distribution,
+      ordering: Array[SortOrder], numPartitions: Int)
+    extends Write with RequiresDistributionAndOrdering {
+    override def requiredDistribution(): Distribution = distribution
+    override def requiredNumPartitions(): Int = numPartitions
+    override def requiredOrdering(): Array[SortOrder] = ordering
+    override def toBatch: BatchWrite = d.toBatch
+    override def toStreaming = d.toStreaming
+    override def description(): String = d.description()
+  }
 }
 
 class GraftTable(ident: Identifier, dir: HPath, meta: TableMeta,
     spark: SparkSession, statsDir: Option[HPath] = None)
-  extends Table with SupportsRead with SupportsWrite with SupportsPartitionManagement {
+  extends Table with SupportsRead with SupportsWrite with SupportsPartitionManagement
+  with PartitionedCommit {
 
   /** Where the stats file lives: the data dir for managed tables, the
     * warehouse metadata dir for external ones (whose data directory the
@@ -62,10 +77,8 @@ class GraftTable(ident: Identifier, dir: HPath, meta: TableMeta,
     new CaseInsensitiveStringMap(Map("path" -> dir.toString).asJava),
     Seq(dir.toString), Some(meta.schema), classOf[ParquetFileFormat])
 
-  /** Table directory (for the strategy-planned write path). */
-  def location: String = dir.toString
-  /** Ordered partition column names. */
-  def partitionColumnNames: Seq[String] = meta.partitionCols
+  override def location: String = dir.toString
+  override def partitionColumnNames: Seq[String] = meta.partitionCols
 
   override def name(): String = ident.toString
   override def schema(): StructType = meta.schema
@@ -83,7 +96,7 @@ class GraftTable(ident: Identifier, dir: HPath, meta: TableMeta,
     // Partitioned tables route writes through the V1 fallback into the
     // staged partitioned writer (real col=value layout) — except dynamic
     // overwrite, which Spark has no V1 fallback exec for and which
-    // GraftStrategies plans onto the same writer directly.
+    // GraftStrategies plans onto the same commitPartitioned directly.
     // Unpartitioned/bucketed tables stay on DSv2.
     (if (meta.partitionCols.nonEmpty)
       Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
@@ -121,31 +134,36 @@ class GraftTable(ident: Identifier, dir: HPath, meta: TableMeta,
 
   /** Wrap a DSv2 write so a successful commit refreshes the stats file —
     * the write-commit half of the stats-fed planning loop. */
-  private def withStatsRefresh(d: org.apache.spark.sql.connector.write.Write)
-      : org.apache.spark.sql.connector.write.Write =
-    new org.apache.spark.sql.connector.write.Write {
-      override def description(): String = d.description()
-      override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-        new org.apache.spark.sql.connector.write.BatchWrite {
-          private val b = d.toBatch
-          override def createBatchWriterFactory(
-              info: org.apache.spark.sql.connector.write.PhysicalWriteInfo) =
-            b.createBatchWriterFactory(info)
-          override def useCommitCoordinator(): Boolean = b.useCommitCoordinator()
-          override def onDataWriterCommit(
-              m: org.apache.spark.sql.connector.write.WriterCommitMessage): Unit =
-            b.onDataWriterCommit(m)
-          override def commit(
-              msgs: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-            b.commit(msgs)
-            refreshStats()
-          }
-          override def abort(
-              msgs: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-            b.abort(msgs)
-        }
-      override def toStreaming = d.toStreaming
+  private def withStatsRefresh(d: Write): Write = new Write {
+    override def description(): String = d.description()
+    override def toBatch: BatchWrite = new BatchWrite {
+      private val b = d.toBatch
+      override def createBatchWriterFactory(info: PhysicalWriteInfo) =
+        b.createBatchWriterFactory(info)
+      override def useCommitCoordinator(): Boolean = b.useCommitCoordinator()
+      override def onDataWriterCommit(m: WriterCommitMessage): Unit =
+        b.onDataWriterCommit(m)
+      override def commit(msgs: Array[WriterCommitMessage]): Unit = {
+        b.commit(msgs)
+        refreshStats()
+      }
+      override def abort(msgs: Array[WriterCommitMessage]): Unit = b.abort(msgs)
     }
+    override def toStreaming = d.toStreaming
+  }
+
+  /** The staged partitioned writer, then a stats refresh scoped to the
+    * committed partitions and to the truncated subtree. */
+  override def commitPartitioned(data: org.apache.spark.sql.DataFrame,
+      overwrite: Boolean, truncateSpec: Option[Seq[(String, String)]]): Unit = {
+    val written = graft.sources.PartitionedWrite.writePartitioned(
+      data, dir.toString, meta.partitionCols, overwrite = overwrite,
+      truncateSpec = truncateSpec)
+    refreshStats(Some(TableStatistics.Touched(written,
+      removedPrefix = truncateSpec.map(_.map { case (c, v) =>
+        graft.sources.PartitionedWrite.partSegment(c, v)
+      }.mkString("/")))))
+  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     // belt-and-braces behind the capabilities() gate above
@@ -156,123 +174,33 @@ class GraftTable(ident: Identifier, dir: HPath, meta: TableMeta,
     // Partitioned tables write through the V1 fallback into the staged
     // partitioned writer, so rows land in col=value directories and reads
     // get real partition pruning (the DSv2 file write would lay the files
-    // flat). Dynamic INSERT OVERWRITE maps to the staged dynamic-partition
-    // overwrite — `OdpsBatchWrite`'s overwrite-session semantics.
-    if (meta.partitionCols.nonEmpty) {
-      import org.apache.spark.sql.connector.write.{SupportsDynamicOverwrite, SupportsOverwrite, V1Write, WriteBuilder => WB}
-      import org.apache.spark.sql.sources.{AlwaysTrue, EqualNullSafe => FEqNs, EqualTo => FEq, Filter}
-      return new WB with SupportsOverwrite with SupportsDynamicOverwrite {
-        // None = plain append; Some(Nil) = full-table overwrite (static
-        // INSERT OVERWRITE); Some(spec) = static partition-subtree
-        // overwrite; DYNAMIC = replace only staged partitions (session
-        // partitionOverwriteMode=dynamic at plan time)
-        private var truncateSpec: Option[Seq[(String, String)]] = None
-        private var dynamic = false
-        // satisfies V2Writes; the actual dynamic plan comes from
-        // GraftStrategies → GraftDynamicOverwriteExec
-        override def overwriteDynamicPartitions(): WB = { dynamic = true; this }
-        override def overwrite(filters: Array[Filter]): WB = {
-          val dynamicMode = SparkSession.active.conf
-            .get("spark.sql.sources.partitionOverwriteMode", "static")
-            .equalsIgnoreCase("dynamic")
-          filters match {
-            case Array(_: AlwaysTrue) | Array() if dynamicMode =>
-              dynamic = true
-            case Array(_: AlwaysTrue) | Array() =>
-              truncateSpec = Some(Nil)
-            case fs =>
-              val eqs = fs.map {
-                case FEq(attr, v) => attr -> String.valueOf(v)
-                case FEqNs(attr, v) => attr -> String.valueOf(v)
-                case other => sys.error(s"unsupported overwrite filter $other " +
-                  "(static partition specs only)")
-              }.toMap
-              // partition spec must be a leading prefix of the partition cols
-              val prefix = meta.partitionCols.takeWhile(eqs.contains)
-              require(prefix.size == eqs.size,
-                s"overwrite spec $eqs must be a leading prefix of " +
-                  s"partition columns ${meta.partitionCols.mkString(",")}")
-              truncateSpec = Some(prefix.map(c => c -> eqs(c)))
-          }
-          this
-        }
-        override def build(): org.apache.spark.sql.connector.write.Write = new V1Write {
-          override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
-            new org.apache.spark.sql.sources.InsertableRelation {
-              override def insert(data: org.apache.spark.sql.DataFrame, ow: Boolean): Unit = {
-                val spec = truncateSpec.orElse(
-                  if (ow && !dynamic) Some(Nil) else None)
-                val written = graft.sources.PartitionedWrite.writePartitioned(
-                  data, dir.toString, meta.partitionCols,
-                  overwrite = dynamic || truncateSpec.isDefined || ow,
-                  truncateSpec = spec)
-                refreshStats(Some(TableStatistics.Touched(written,
-                  removedPrefix = spec.map(_.map { case (c, v) =>
-                    graft.sources.PartitionedWrite.partSegment(c, v)
-                  }.mkString("/")))))
-              }
-            }
-        }
-      }
-    }
+    // flat).
+    if (meta.partitionCols.nonEmpty) return new PartitionedWriteBuilder(this)
     val inner = delegate.newWriteBuilder(info)
-    rangeSpec match {
-      case Some((orders, n)) =>
-        // Range-clustered write: ordered distribution = one global sort,
-        // which range-partitions the data AND sorts within partitions in
-        // the declared per-column ASC/DESC — `Distributions.ordered` like
-        // the reference's range cluster spec (`OdpsWriteBuilder.scala:70-116`).
-        return new WriteBuilder {
-          override def build(): org.apache.spark.sql.connector.write.Write =
-            new org.apache.spark.sql.connector.write.Write
-              with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-          private val d = inner.build()
-          import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-          import org.apache.spark.sql.connector.expressions.{Expressions => E, SortDirection, SortOrder}
-          private val sortOrders: Array[SortOrder] = orders.map { case (c, desc) =>
-            E.sort(E.column(c),
-              if (desc) SortDirection.DESCENDING else SortDirection.ASCENDING)
-          }.toArray
-          override def requiredDistribution(): Distribution =
-            Distributions.ordered(sortOrders)
-          override def requiredNumPartitions(): Int = n
-          override def requiredOrdering(): Array[SortOrder] = sortOrders
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            withStatsRefresh(d).toBatch
-          override def toStreaming = d.toStreaming
-          override def description(): String = d.description()
-          }
+    // Declarative write distribution/ordering for clustered tables — the
+    // DSv2 hook the reference uses for clustered writes
+    // (`OdpsWriteBuilder.scala:70-116`): Spark injects the repartition +
+    // local sort, no custom exchange needed. A range cluster is an ordered
+    // distribution (one global sort in the declared per-column ASC/DESC,
+    // which range-partitions the data AND sorts within partitions); a hash
+    // cluster is a clustered distribution sorted ascending on its columns.
+    def sort(c: String, desc: Boolean) = Expressions.sort(Expressions.column(c),
+      if (desc) SortDirection.DESCENDING else SortDirection.ASCENDING)
+    val clustering: Option[(Distribution, Array[SortOrder], Int)] =
+      rangeSpec.map { case (orders, n) =>
+        val sorts = orders.map { case (c, desc) => sort(c, desc) }.toArray
+        (Distributions.ordered(sorts), sorts, n)
+      }.orElse(bucketSpec.map { case (cols, n) =>
+        (Distributions.clustered(cols.map(Expressions.column(_): Expression).toArray),
+          cols.map(sort(_, desc = false)).toArray, n)
+      })
+    new WriteBuilder {
+      override def build(): Write = {
+        val d = withStatsRefresh(inner.build())
+        clustering.fold(d) { case (distribution, ordering, n) =>
+          new GraftTable.ClusteredWrite(d, distribution, ordering, n)
         }
-      case None =>
-    }
-    bucketSpec match {
-      case None => new WriteBuilder {
-        override def build(): org.apache.spark.sql.connector.write.Write =
-          withStatsRefresh(inner.build())
       }
-      case Some((cols, n)) =>
-        // Declarative write distribution/ordering for clustered tables —
-        // the DSv2 hook the reference uses for range-clustered writes
-        // (`OdpsWriteBuilder.scala:70-116`): Spark injects the
-        // repartition+local-sort, no custom exchange needed.
-        new WriteBuilder {
-          override def build(): org.apache.spark.sql.connector.write.Write =
-            new org.apache.spark.sql.connector.write.Write
-              with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-          private val d = inner.build()
-          import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-          import org.apache.spark.sql.connector.expressions.{Expressions => E, SortDirection, SortOrder}
-          override def requiredDistribution(): Distribution =
-            Distributions.clustered(cols.map(c => E.column(c): org.apache.spark.sql.connector.expressions.Expression).toArray)
-          override def requiredNumPartitions(): Int = n
-          override def requiredOrdering(): Array[SortOrder] =
-            cols.map(c => E.sort(E.column(c), SortDirection.ASCENDING)).toArray
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            withStatsRefresh(d).toBatch
-          override def toStreaming = d.toStreaming
-          override def description(): String = d.description()
-          }
-        }
     }
   }
 

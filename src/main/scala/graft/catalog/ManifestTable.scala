@@ -60,14 +60,15 @@ import graft.sources.{Fs, ManifestCommit}
 class GraftManifestTable(ident: Identifier, dir: HPath, meta: TableMeta,
     spark: SparkSession, pointerId: Option[Long] = None,
     asOfTimestampMicros: Option[Long] = None)
-  extends Table with SupportsRead with SupportsWrite {
+  extends Table with SupportsRead with SupportsWrite with PartitionedCommit {
 
   import GraftManifestTable._
 
   override def name(): String = ident.toString +
     pointerId.map(p => s" VERSION AS OF $p").getOrElse("")
   /** Table directory (the manifest root holding `_gen` + `_pointer`). */
-  def location: String = dir.toString
+  override def location: String = dir.toString
+  override def partitionColumnNames: Seq[String] = meta.partitionCols
   override def schema(): StructType = meta.schema
   override def partitioning(): Array[Transform] =
     meta.partitionCols.map(Expressions.identity).toArray
@@ -77,7 +78,7 @@ class GraftManifestTable(ident: Identifier, dir: HPath, meta: TableMeta,
   override def capabilities(): java.util.Set[TableCapability] = {
     // pinned snapshots and external manifest locations are read-only;
     // a live managed manifest table takes the same INSERT surface as
-    // GraftTable's partitioned path (V1 staged writer → here, the
+    // GraftTable's partitioned path (PartitionedWriteBuilder → here, the
     // generation+pointer commit)
     if (pointerId.isDefined || asOfTimestampMicros.isDefined || meta.isExternal)
       java.util.Collections.singleton(TableCapability.BATCH_READ)
@@ -163,53 +164,15 @@ class GraftManifestTable(ident: Identifier, dir: HPath, meta: TableMeta,
       throw new UnsupportedOperationException(
         s"${name()} is an external table — writes through the catalog " +
           "are rejected; commit to its location with ManifestCommit")
-    import org.apache.spark.sql.connector.write.{SupportsDynamicOverwrite, SupportsOverwrite, V1Write, WriteBuilder => WB}
-    import org.apache.spark.sql.sources.{AlwaysTrue, EqualNullSafe => FEqNs, EqualTo => FEq}
-    new WB with SupportsOverwrite with SupportsDynamicOverwrite {
-      // None+!dynamic = append; Some(Nil) = full truncate (static INSERT
-      // OVERWRITE); Some(spec) = partition-prefix truncate; dynamic =
-      // replace exactly the staged partitions — the same four modes as
-      // GraftTable's staged writer, mapped onto one pointer commit each
-      private var truncateSpec: Option[Seq[(String, String)]] = None
-      private var dynamic = false
-      override def overwriteDynamicPartitions(): WB = { dynamic = true; this }
-      override def overwrite(filters: Array[org.apache.spark.sql.sources.Filter]): WB = {
-        val dynamicMode = SparkSession.active.conf
-          .get("spark.sql.sources.partitionOverwriteMode", "static")
-          .equalsIgnoreCase("dynamic")
-        filters match {
-          case Array(_: AlwaysTrue) | Array() if dynamicMode => dynamic = true
-          case Array(_: AlwaysTrue) | Array() => truncateSpec = Some(Nil)
-          case fs =>
-            val eqs = fs.map {
-              case FEq(attr, v) => attr -> String.valueOf(v)
-              case FEqNs(attr, v) => attr -> String.valueOf(v)
-              case other => sys.error(s"unsupported overwrite filter $other " +
-                "(static partition specs only)")
-            }.toMap
-            val prefix = meta.partitionCols.takeWhile(eqs.contains)
-            require(prefix.size == eqs.size,
-              s"overwrite spec $eqs must be a leading prefix of " +
-                s"partition columns ${meta.partitionCols.mkString(",")}")
-            truncateSpec = Some(prefix.map(c => c -> eqs(c)))
-        }
-        this
-      }
-      override def build(): org.apache.spark.sql.connector.write.Write = new V1Write {
-        override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
-          new org.apache.spark.sql.sources.InsertableRelation {
-            override def insert(data: org.apache.spark.sql.DataFrame, ow: Boolean): Unit = {
-              val spec = truncateSpec.orElse(
-                if (ow && !dynamic) Some(Nil) else None)
-              ManifestCommit.writePartitioned(
-                data, dir.toString, meta.partitionCols,
-                overwrite = dynamic || truncateSpec.isDefined || ow,
-                truncateSpec = spec)
-            }
-          }
-      }
-    }
+    new PartitionedWriteBuilder(this)
   }
+
+  /** Generation write + ONE pointer PUT — no stats file (pointer tables
+    * carry their state in the pointer itself). */
+  override def commitPartitioned(data: org.apache.spark.sql.DataFrame,
+      overwrite: Boolean, truncateSpec: Option[Seq[(String, String)]]): Unit =
+    ManifestCommit.writePartitioned(data, dir.toString, meta.partitionCols,
+      overwrite = overwrite, truncateSpec = truncateSpec)
 }
 
 object GraftManifestTable {

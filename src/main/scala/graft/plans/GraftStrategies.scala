@@ -9,31 +9,28 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OverwritePartit
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
-import graft.catalog.GraftTable
+import graft.catalog.PartitionedCommit
 
 /** Planner strategy for the one write shape Spark cannot route through the
   * V1 fallback: dynamic partition overwrite (`INSERT OVERWRITE` with
   * `partitionOverwriteMode=dynamic`) — there is no
   * `OverwritePartitionsDynamicExecV1`, so without this strategy a
-  * partitioned [[GraftTable]] would need a full custom DSv2 BatchWrite.
-  * Instead the logical `OverwritePartitionsDynamic` over a GraftTable is
-  * planned directly onto the staged partitioned writer
-  * ([[graft.sources.PartitionedWrite.writePartitioned]]), which already
-  * implements replace-touched-partitions with stage-then-swap commit.
+  * partitioned catalog table would need a full custom DSv2 BatchWrite.
+  * Instead the logical `OverwritePartitionsDynamic` over any
+  * [[PartitionedCommit]] table (a plain [[graft.catalog.GraftTable]] or a
+  * manifest-pointer [[graft.catalog.GraftManifestTable]]) is planned onto
+  * one exec, [[GraftDynamicOverwriteExec]], which hands the query to the
+  * table's own commit with replace-touched-partitions semantics.
   * This is the reference's `OdpsExtensions` strategy-injection pattern
   * (`spark-connector/.../extension/OdpsExtensions.scala:89-149`). */
 class GraftStrategies(spark: SparkSession) extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case o: OverwritePartitionsDynamic => o.table match {
-      case r: DataSourceV2Relation =>
-        r.table match {
-          case gt: GraftTable =>
-            GraftDynamicOverwriteExec(gt, o.query, spark) :: Nil
-          case mt: graft.catalog.GraftManifestTable =>
-            GraftManifestDynamicOverwriteExec(mt, o.query, spark) :: Nil
-          case _ => Nil
-        }
+      case r: DataSourceV2Relation => r.table match {
+        case t: PartitionedCommit => GraftDynamicOverwriteExec(t, o.query, spark) :: Nil
+        case _ => Nil
+      }
       case _ => Nil
     }
     case _ => Nil
@@ -52,8 +49,8 @@ object GraftStrategies {
 
 /** Eagerly-executed command node: materializes the aligned insert query
   * (analysis has already resolved it to the table's column order and
-  * names) and hands it to the staged partitioned writer. */
-case class GraftDynamicOverwriteExec(table: GraftTable, query: LogicalPlan,
+  * names) and commits it as a dynamic partition overwrite. */
+case class GraftDynamicOverwriteExec(table: PartitionedCommit, query: LogicalPlan,
     spark: SparkSession) extends LeafExecNode {
 
   override def output: Seq[Attribute] = Nil
@@ -61,48 +58,9 @@ case class GraftDynamicOverwriteExec(table: GraftTable, query: LogicalPlan,
   // Commands normally execute exactly once via executeCollect, but a plan
   // that hits both executeCollect and doExecute must not double-write; the
   // lazy val is the once-guard (thread-safe, one evaluation per instance).
-  @transient private lazy val ranOnce: Unit = {
-    val df = org.apache.spark.sql.graft.Catalogs.ofRows(spark, query)
-    val written = graft.sources.PartitionedWrite.writePartitioned(
-      df, table.location, table.partitionColumnNames, overwrite = true)
-    // advisory refresh scoped to the overwritten partitions: a stats
-    // failure must not fail a write whose data already committed
-    try graft.catalog.TableStatistics.refresh(
-      new org.apache.hadoop.fs.Path(table.location), table.partitionColumnNames,
-      touched = Some(graft.catalog.TableStatistics.Touched(written)))
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft] stats refresh after dynamic overwrite " +
-          s"failed (stale until next commit or ANALYZE): $e")
-    }
-  }
-
-  override def executeCollect(): Array[InternalRow] = { ranOnce; Array.empty }
-
-  protected override def doExecute(): RDD[InternalRow] = {
-    ranOnce
-    sparkContext.emptyRDD
-  }
-}
-
-/** Dynamic partition overwrite of a manifest-pointer catalog table: the
-  * same replace-touched-partitions semantics, committed as one
-  * generation write + one pointer PUT
-  * ([[graft.sources.ManifestCommit.writePartitioned]]) — no stats file
-  * (pointer tables carry their state in the pointer itself). */
-case class GraftManifestDynamicOverwriteExec(
-    table: graft.catalog.GraftManifestTable, query: LogicalPlan,
-    spark: SparkSession) extends LeafExecNode {
-
-  override def output: Seq[Attribute] = Nil
-
-  @transient private lazy val ranOnce: Unit = {
-    val df = org.apache.spark.sql.graft.Catalogs.ofRows(spark, query)
-    graft.sources.ManifestCommit.writePartitioned(
-      df, table.location, table.partitioning().map(
-        _.references()(0).fieldNames().mkString(".")).toSeq,
-      overwrite = true)
-  }
+  @transient private lazy val ranOnce: Unit = table.commitPartitioned(
+    org.apache.spark.sql.graft.Catalogs.ofRows(spark, query),
+    overwrite = true, truncateSpec = None)
 
   override def executeCollect(): Array[InternalRow] = { ranOnce; Array.empty }
 

@@ -807,4 +807,38 @@ class CatalogSpec extends SparkTestBase {
     assert(!v4.files.keySet.exists(_._1 == "pt=c"))
     assert(rows() == (v2Rows :+ ("b", 5L)).sorted)
   }
+
+  test("a plain partitioned table and a manifest table agree on append, " +
+      "static, partition-prefix and dynamic INSERT OVERWRITE") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graft.modes")
+    sql("CREATE TABLE graft.modes.plain (v BIGINT, pt STRING) PARTITIONED BY (pt)")
+    manifestTable("modes")
+    val tables = Seq("graft.modes.plain", "graft.modes.t")
+    def rows(t: String): Seq[(String, Long)] =
+      sql(s"SELECT pt, v FROM $t").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    // (statement over {T}, partitionOverwriteMode, rows after it)
+    val steps = Seq(
+      ("INSERT INTO {T} VALUES (1,'a'), (2,'b'), (3,'c')", "static",
+        Seq(("a", 1L), ("b", 2L), ("c", 3L))),
+      ("INSERT INTO {T} VALUES (4,'a')", "static",
+        Seq(("a", 1L), ("a", 4L), ("b", 2L), ("c", 3L))),
+      ("INSERT OVERWRITE {T} VALUES (5,'a'), (6,'b')", "static",
+        Seq(("a", 5L), ("b", 6L))),
+      ("INSERT OVERWRITE {T} PARTITION (pt='a') VALUES (7)", "static",
+        Seq(("a", 7L), ("b", 6L))),
+      ("INSERT OVERWRITE {T} VALUES (8,'b'), (9,'c')", "dynamic",
+        Seq(("a", 7L), ("b", 8L), ("c", 9L))))
+    val saved = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+    try steps.foreach { case (stmt, mode, expected) =>
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", mode)
+      tables.foreach(t => sql(stmt.replace("{T}", t)))
+      val got = tables.map(rows)
+      assert(got.distinct.size == 1, s"$stmt ($mode): ${tables.zip(got)}")
+      assert(got.head == expected, s"$stmt ($mode)")
+    } finally saved match {
+      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    }
+  }
 }

@@ -667,6 +667,36 @@ class MaintenanceSpec extends SparkTestBase {
     assert(err.getMessage.contains("clustered"))
   }
 
+  test("catalog compactTable on a fragmented manifest table commits " +
+      "exactly one new pointer and returns the same rows") {
+    import graft.catalog.CatalogFunctions
+    import graft.sources.ManifestCommit
+    val wh = Files.createTempDirectory("graft_wh_mmaint").toString
+    spark.conf.set("spark.sql.catalog.graft_mm", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_mm.root", wh)
+    spark.sql("CREATE NAMESPACE graft_mm.db")
+    spark.sql("CREATE TABLE graft_mm.db.t (v BIGINT, dt STRING) " +
+      "PARTITIONED BY (dt) TBLPROPERTIES ('graft.commit.mode'='manifest')")
+    // several small commits → several generations cited for dt=a
+    (1 to 3).foreach(i => spark.sql(s"INSERT INTO graft_mm.db.t VALUES ($i, 'a')"))
+    spark.sql("INSERT INTO graft_mm.db.t VALUES (9, 'b')")
+    val root = s"$wh/db/t"
+    def rows() = spark.sql("SELECT dt, v FROM graft_mm.db.t").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    val before = rows()
+    val pointersBefore = ManifestCommit.pointerIds(root)
+    assert(ManifestCommit.latestSnapshot(root).get.partitions("dt=a").size == 3)
+
+    val rels = CatalogFunctions.compactTable(spark, "graft_mm", Array("db"), "t",
+      targetFileBytes = 1L << 30)
+    assert(rels == Seq("dt=a"), "only dt=a is fragmented")
+    assert(ManifestCommit.pointerIds(root).sorted ==
+      pointersBefore.sorted :+ (pointersBefore.max + 1),
+      "compaction commits exactly one new pointer")
+    assert(ManifestCommit.latestSnapshot(root).get.partitions("dt=a").size == 1)
+    assert(rows() == before)
+  }
+
   test("generation claim race: 4 threads released together never claim " +
       "the same id") {
     import graft.sources.ManifestCommit
