@@ -98,18 +98,30 @@ object Dedup {
   /** Incremental NEAR-dup dedup: survivors of an ingest batch against a
     * [[minhashIndex]] of the already-deduplicated base — the analogue of
     * [[exactIncrement]] for near-duplicates:
-    *  1. intra-batch: canonical min-id survivor over [[minhashNearDups]]
-    *     pairs within the increment;
-    *  2. cross-corpus: the base index is first shrunk by a BROADCAST
-    *     semi-join against the increment's (small, distinct) bucket keys —
-    *     the full index streams through map tasks and never shuffles; only
-    *     the matched sliver enters the cap window and the band join. Base
-    *     buckets above `maxBucketSize` are dropped (boilerplate bands),
-    *     the shared skew guard — matched buckets keep all their members,
-    *     so the cap sees true bucket sizes;
-    *  3. candidates verify by exact Jaccard over the hashed shingle sets
-    *     (the increment computes its own once, the base side reads them
-    *     from the index).
+    *  1. sketch: the shingle+minhash kernels run once over the increment,
+    *     into one eager checkpoint that every later step reads;
+    *  2. intra-batch: the [[minhashNearDups]] pairs within the increment,
+    *     verified by exact Jaccard, go to ONE aggregate
+    *     ([[componentLosers]]) that drops every member but its
+    *     component's minimum id. Size contract: the verified pairs of one
+    *     increment sit in one row of one task, 16 B per pair — smaller
+    *     than the candidate block the probe below already broadcasts;
+    *  3. cross-corpus: every sketched row probes the base index, which is
+    *     first shrunk by a BROADCAST semi-join against the increment's
+    *     (small, distinct) bucket keys — the full index streams through
+    *     map tasks and never shuffles; only the matched sliver enters the
+    *     cap window and the band join. Base buckets above `maxBucketSize`
+    *     are dropped (boilerplate bands), the shared skew guard — matched
+    *     buckets keep all their members, so the cap sees true bucket
+    *     sizes. Candidates verify by exact Jaccard over the hashed
+    *     shingle sets (the increment's from its sketch, the base side's
+    *     from the index). A match found for an intra loser is dropped
+    *     with it, so probing the intra losers too changes no survivor;
+    *     it lets the probe start without waiting for step 2;
+    *  4. the survivors are the sketched rows anti-joined with the intra
+    *     losers and with the base matches. The frame stays lazy, so the
+    *     caller's materialization runs the stages of steps 2 and 3
+    *     concurrently.
     * Returns the surviving increment rows with all their columns. */
   def nearDupIncrement(increment: DataFrame, baseIndex: DataFrame,
       idCol: String, textCol: String,
@@ -153,48 +165,39 @@ object Dedup {
     // checkpoint; every downstream pass (intra-batch band join + verify,
     // base-index probe, shingle verify, survivors' index append) reads
     // the precomputed `bands`/`sh` columns instead of re-sketching.
+    // Eager: the probe's stages and the intra-batch stages below start
+    // concurrently, and a lazy checkpoint would be computed by whichever
+    // of them reaches it first, or by several.
     // Increment-scale by contract — never the index.
     val withSk = increment
       .withColumn("bands", org.apache.spark.sql.graft.NativeFunctions
         .minhashBands(col(textCol), shingleK, numHashes, bands))
       .withColumn("sh", shingleHashes(col(textCol), shingleK))
-      .transform(CheckpointOps(_, eager = false))
+      .transform(CheckpointOps(_, eager = true))
+    val incBanded = withSk
+      .select(col(idCol).as("inc_id"), posexplode(col("bands")))
+      .withColumnsRenamed(Map("pos" -> "band_idx", "col" -> "band_hash"))
+    val incSh = withSk.select(col(idCol).as("inc_id"), col("sh"))
     // Intra-batch pair candidates from the precomputed sketches — the
     // same band→cap→pair→jaccard-verify shape as [[minhashNearDups]],
     // minus its per-doc kernels.
-    val bandedIntra = withSk
-      .select(col(idCol).as("id"), posexplode(col("bands")))
-      .withColumnsRenamed(Map("pos" -> "band_idx", "col" -> "band_hash"))
-    val prunedIntra =
-      capBuckets(bandedIntra, Seq("band_idx", "band_hash"), maxBucketSize)
-    val shTbl = withSk.select(col(idCol).as("id"), col("sh"))
+    val prunedIntra = capBuckets(
+      incBanded.withColumnRenamed("inc_id", "id"),
+      Seq("band_idx", "band_hash"), maxBucketSize)
     val intraPairs = bucketPairs(prunedIntra, Seq("band_idx", "band_hash"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-      .join(shTbl.withColumnsRenamed(
-        Map("id" -> "id_a", "sh" -> "sh_a")), "id_a")
-      .join(shTbl.withColumnsRenamed(
-        Map("id" -> "id_b", "sh" -> "sh_b")), "id_b")
+      .join(incSh.withColumnsRenamed(
+        Map("inc_id" -> "id_a", "sh" -> "sh_a")), "id_a")
+      .join(incSh.withColumnsRenamed(
+        Map("inc_id" -> "id_b", "sh" -> "sh_b")), "id_b")
       .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
       .select(col("id_a"), col("id_b"))
     // Cluster-canonical intra-batch survivors: pairwise id_b-dropping
     // over-deletes chains (a~b, b~c, a!~c would delete BOTH b and c,
     // losing c's content entirely) — the same reasoning as the batch
-    // pipeline's dropNearDups; the pair graph is increment-sized, so the
-    // few label-propagation rounds are cheap.
-    val intraLosers = dupClusters(intraPairs)
-      .filter(col("id") =!= col("cluster_id"))
-      .select(col("id").as("__l")).distinct()
-    // The intra-deduped increment feeds three consumers (band join,
-    // shingle verify, final anti-join); a second nodes-light checkpoint
-    // keeps the anti-join from re-running per consumer. Reads the
-    // sketch checkpoint — no kernel re-run.
-    val intra = withSk
-      .join(intraLosers, withSk(idCol) === col("__l"), "left_anti")
-      .transform(CheckpointOps(_, eager = false))
+    // pipeline's dropNearDups.
+    val intraLosers = componentLosers(intraPairs).select(col("id").as("__l"))
 
-    val incBanded = intra
-      .select(col(idCol).as("inc_id"), posexplode(col("bands")))
-      .withColumnsRenamed(Map("pos" -> "band_idx", "col" -> "band_hash"))
     // Shrink the corpus-scale index to the buckets the increment touches
     // BEFORE any wide operator: the semi-join build side is the increment's
     // distinct bucket keys (micro-batch-sized by contract), broadcast, so
@@ -211,16 +214,30 @@ object Dedup {
     val cand = incBanded.join(basePruned, Seq("band_idx", "band_hash"))
       .select("inc_id", "base_id").distinct()
 
-    val incSh = intra.select(col(idCol).as("inc_id"),
-      col("sh").as("__sh_i"))
     val baseSh = baseIndex.select(col("id").as("base_id"), col("sh").as("__sh_b"))
     // cand x incSh is increment-sized; broadcasting it keeps the shingle
     // arrays of the base index (the heavy column) from ever shuffling.
-    val matched = baseSh.join(broadcast(cand.join(incSh, "inc_id")), "base_id")
+    val matched = baseSh.join(broadcast(cand.join(
+        incSh.withColumnRenamed("sh", "__sh_i"), "inc_id")), "base_id")
       .filter(jaccard(col("__sh_i"), col("__sh_b")) >= threshold)
       .select(col("inc_id").as("__m")).distinct()
-    intra.join(matched, intra(idCol) === col("__m"), "left_anti")
+    withSk
+      .join(intraLosers, withSk(idCol) === col("__l"), "left_anti")
+      .join(matched, withSk(idCol) === col("__m"), "left_anti")
   }
+
+  /** Loser ids of a pair graph `pairs(id_a, id_b)`: every member whose
+    * connected component has a smaller id, in ONE aggregate — the edges
+    * are collected into one row and a union-find kernel
+    * ([[org.apache.spark.sql.graft.ComponentLosers]]) resolves them, so
+    * no iteration and no round bound. For increment-sized graphs only:
+    * the whole edge list sits in one task. The survivors equal those of
+    * [[dupClusters]]; corpus-scale graphs go there. Returns one column
+    * `id`. */
+  private[graft] def componentLosers(pairs: DataFrame): DataFrame =
+    pairs.agg(collect_list(struct(col("id_a"), col("id_b"))).as("__es"))
+      .select(explode(org.apache.spark.sql.graft.NativeFunctions
+        .componentLosers(col("__es"))).as("id"))
 
   /** Incremental exact dedup: survivors of an INGEST batch against an
     * already-deduplicated base corpus — the path an accumulating corpus
@@ -635,7 +652,12 @@ object Dedup {
     * Checkpoint blocks are O(graph vertices) — two longs per dup-pair
     * member, a sliver of corpus size — and superseded iterations' blocks
     * are reclaimed by Spark's ContextCleaner once unreferenced. Returns
-    * (id, cluster_id). */
+    * (id, cluster_id).
+    *
+    * This is the corpus-scale path: `TrainingDataPipeline`,
+    * `MediaCurationPipeline` and the gates call it. An increment's pair
+    * graph, which fits one task, goes through [[componentLosers]]
+    * instead ([[nearDupIncrementIndexed]]). */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // edges are checkpointed too: every iteration joins against them, and
     // without truncation each join would re-execute the full upstream

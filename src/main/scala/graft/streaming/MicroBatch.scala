@@ -1954,7 +1954,9 @@ object MicroBatch {
     // no checkpoint of its own: the dedup reads it once, into its sketch
     // checkpoint. The eager checkpoint here materializes the
     // (increment-sized) survivors once for the two writes — referencing
-    // the live plan twice would re-run the whole dedup pipeline.
+    // the live plan twice would re-run the whole dedup pipeline — and is
+    // the one query that runs the dedup's index probe and its intra-batch
+    // components, whose stages AQE runs concurrently.
     val survivors = graft.operators.Dedup.nearDupIncrementIndexed(
         batch, index, idCol, textCol, shingleK, numHashes, bands,
         threshold, maxBucketSize)
@@ -2081,10 +2083,11 @@ object MicroBatch {
     * DLQ'd: duplication is a relation to the corpus, not a defect of the
     * row, and the index says it all.
     *
-    * All screens are codegen'd per-row expressions — the only shuffles
-    * per batch are the capped-bucket dedup exchanges. Replay-idempotent:
-    * output, index, and reject partitions are all overwritten per
-    * (batch, id). */
+    * All screens are codegen'd per-row expressions, computed once per
+    * batch into one eager checkpoint; the rejects write and the dedup
+    * both read it and run concurrently. The only shuffles per batch are
+    * the capped-bucket dedup exchanges. Replay-idempotent: output, index,
+    * and reject partitions are all overwritten per (batch, id). */
   def streamCurate(stream: DataFrame, indexDir: String, outDir: String,
       rejectDir: String, checkpointDir: String,
       idCol: String, textCol: String,
@@ -2123,16 +2126,21 @@ object MicroBatch {
         scored.withColumn("__reason", coalesce(
           (reasons :+ lit(null).cast("string")): _*))
       }
-      val rejects = withReason.filter(col("__reason").isNotNull)
+      // The screens run once: both sides below read this checkpoint, so
+      // the source is scanned once and the two run concurrently.
+      val screened = CheckpointOps(withReason, eager = true)
+      val rejects = screened.filter(col("__reason").isNotNull)
         .withColumnRenamed("__reason", "reason")
         .drop("__q", "__nt")
-      rejects.write.mode("overwrite")
-        .parquet(s"$rejectDir/batch=$batchId")
-      val kept = withReason.filter(col("__reason").isNull)
+      val kept = screened.filter(col("__reason").isNull)
         .drop("__reason", "__q", "__nt")
-      ingestDedupBatch(kept, batchId, indexDir, outDir, idCol, textCol,
-        cfg.shingleK, cfg.numHashes, cfg.bands, cfg.threshold,
-        cfg.maxBucketSize)
+      try inParallel(Seq[() => Unit](
+          () => rejects.write.mode("overwrite")
+            .parquet(s"$rejectDir/batch=$batchId"),
+          () => ingestDedupBatch(kept, batchId, indexDir, outDir, idCol,
+            textCol, cfg.shingleK, cfg.numHashes, cfg.bands, cfg.threshold,
+            cfg.maxBucketSize)))(_())
+      finally CheckpointOps.release(screened)
       maybeCompactIndex(spark, indexDir, batchId, cfg.compactEvery)
     }.start()
   }

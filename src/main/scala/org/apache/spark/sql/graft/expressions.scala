@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
@@ -497,6 +497,68 @@ case class TokenChunks(child: Expression, chunkSize: Int, overlap: Int)
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
   override def prettyName: String = "token_chunks"
+}
+
+/** Ids of a pair graph that are not their connected component's minimum,
+  * in ascending order: one union-find over an `array<struct<a, b>>` of
+  * edges whose root is always the smaller id, so the result does not
+  * depend on edge order. An edge with a null end joins nothing. The
+  * input is one collected edge list (one row), so evaluation is
+  * interpreted. */
+case class ComponentLosers(child: Expression)
+  extends UnaryExpression with CodegenFallback {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
+
+  private def idType: DataType = child.dataType match {
+    case ArrayType(st: StructType, _) => st.fields(0).dataType
+    case other => other
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(st: StructType, _)
+        if st.length == 2 && st(0).dataType == st(1).dataType =>
+      TypeUtils.checkForOrderingExpr(st(0).dataType, prettyName)
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs array<struct<a, b>> with a and b of one type, " +
+        s"got ${other.catalogString}")
+  }
+
+  override def dataType: DataType = ArrayType(idType, containsNull = false)
+
+  override def nullSafeEval(input: Any): Any = {
+    val edges = input.asInstanceOf[ArrayData]
+    val dt = idType
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    var i = 0
+    while (i < edges.numElements()) {
+      val e = edges.getStruct(i, 2)
+      if (!e.isNullAt(0) && !e.isNullAt(1)) {
+        val a = InternalRow.copyValue(e.get(0, dt))
+        val b = InternalRow.copyValue(e.get(1, dt))
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ord.lt(ra, rb)) parent(rb) = ra
+        else if (ord.lt(rb, ra)) parent(ra) = rb
+      }
+      i += 1
+    }
+    new GenericArrayData(
+      parent.keys.toArray.filter(x => find(x) != x).sorted(ord))
+  }
+
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  override def prettyName: String = "component_losers"
 }
 
 /** Token count without materializing the token array: counts separator
@@ -1438,6 +1500,9 @@ object NativeFunctions {
 
   def tokenCount(c: Column): Column =
     ExpressionUtils.column(TokenCount(ExpressionUtils.expression(c)))
+
+  def componentLosers(c: Column): Column =
+    ExpressionUtils.column(ComponentLosers(ExpressionUtils.expression(c)))
 
   def hashedBagSigmoid(c: Column, weights: Seq[Double], bias: Double): Column =
     ExpressionUtils.column(HashedBagSigmoid(

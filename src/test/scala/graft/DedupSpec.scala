@@ -823,6 +823,82 @@ class DedupSpec extends SparkTestBase {
     assert(ok.map(_.getLong(0)).toSeq == Seq(0L))
   }
 
+  test("componentLosers: on random pair graphs, the losers are the " +
+      "members dupClusters maps to another id") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val id = Gen.chooseNum(0L, 15L)
+    val edge = Gen.zip(id, id).suchThat { case (a, b) => a != b }
+      .map(Seq(_))
+    val path = Gen.chooseNum(2, 8).flatMap(n => Gen.pick(n, 0L to 15L))
+      .map(_.toSeq.sliding(2).map { case Seq(a, b) => (a, b) }.toSeq)
+    val star = Gen.zip(id, Gen.listOfN(4, id))
+      .map { case (c, xs) => xs.filter(_ != c).map(c -> _) }
+    // chains, stars and random edges over one small id range, so the
+    // parts merge into larger components
+    val graph = Gen.chooseNum(0, 4)
+      .flatMap(n => Gen.listOfN(n, Gen.oneOf(edge, path, star)))
+      .map(_.flatten)
+    (0 until 24).flatMap(i =>
+        graph.apply(Gen.Parameters.default, Seed(i.toLong)))
+      .foreach { edges =>
+        val pairs = edges.toDF("id_a", "id_b")
+        val got = Dedup.componentLosers(pairs).as[Long].collect().toSet
+        val want = Dedup.dupClusters(pairs)
+          .filter($"id" =!= $"cluster_id").select("id").as[Long]
+          .collect().toSet
+        assert(got == want, s"edges $edges")
+      }
+  }
+
+  /** A near-dup chain of `links + 1` documents: document i replaces the
+    * tokens at positions 6, 12, …, 6·i of one 200-token text, so
+    * neighbours share 191 of 201 5-shingles (Jaccard 0.95) and documents
+    * two links apart 186 of 206 (0.90). */
+  private def nearDupChain(links: Int): org.apache.spark.sql.DataFrame = {
+    val base = (0 until 200).map(j => s"w$j")
+    (0 to links).map { i =>
+      val toks = base.zipWithIndex.map { case (w, j) =>
+        if (j > 0 && j % 6 == 0 && j / 6 <= i) s"x$j" else w }
+      (1000L + i, toks.mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
+  test("nearDupIncrementIndexed resolves a 30-link intra-batch chain " +
+      "that exceeds dupClusters' round bound") {
+    val inc = nearDupChain(30)
+    val pairs = Dedup.minhashNearDups(inc, "doc_id", "text",
+      threshold = 0.93).select("id_a", "id_b")
+    assert(pairs.count() == 30, "the verified pair graph is one chain")
+    intercept[IllegalStateException] {
+      Dedup.dupClusters(pairs, maxIter = 20).collect()
+    }
+    val idx = Dedup.minhashIndex(
+      Seq((1L, (0 until 50).map(j => s"b$j").mkString(" ")))
+        .toDF("doc_id", "text"), "doc_id", "text")
+    val surv = Dedup.nearDupIncrementIndexed(inc, idx, "doc_id", "text",
+        threshold = 0.93)
+      .select("doc_id").as[Long].collect().toSeq
+    assert(surv == Seq(1000L), s"survivors: $surv")
+  }
+
+  test("nearDupIncrementIndexed reads one checkpoint: the sketched " +
+      "increment") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val inc = nearDupChain(3)
+    val idx = Dedup.minhashIndex(
+      Tables.documents(spark, sf).select("doc_id", "text")
+        .filter($"doc_id" < 50), "doc_id", "text")
+    val surv = Dedup.nearDupIncrementIndexed(inc, idx, "doc_id", "text",
+      threshold = 0.93)
+    val leaves = surv.queryExecution.analyzed
+      .collect { case l: LogicalRDD => l.rdd }.distinctBy(_.id)
+    assert(leaves.size == 1, s"checkpoints read: ${leaves.size}")
+    // the one checkpoint holds every increment row, intra losers too
+    assert(leaves.head.count() == inc.count())
+    assert(surv.select("doc_id").as[Long].collect().toSeq == Seq(1000L))
+  }
+
   test("exactLosers: a null-id duplicate loses to the real survivor") {
     val df = Seq((Option(1L), "same"), (Option.empty[Long], "same"),
       (Option(7L), "other")).toDF("doc_id", "text")

@@ -372,6 +372,55 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSet == Set(1L))
   }
 
+  test("streamCurate reads each source row once per trigger") {
+    def words(prefix: String) = (1 to 20).map(i => s"$prefix$i").mkString(" ")
+    val root = Files.createTempDirectory("graft_curate_rows")
+    val (indexDir, outDir, rejDir, srcDir, ckpt) = (s"$root/idx", s"$root/out",
+      s"$root/rej", s"$root/src", s"$root/ckpt")
+    val n = 12
+    (1 to n).map(i => (i.toLong, if (i % 4 == 0) "tiny" else words(s"d$i-")))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(srcDir)
+    val stream = spark.readStream
+      .schema(new org.apache.spark.sql.types.StructType()
+        .add("doc_id", "long").add("text", "string"))
+      .parquet(srcDir)
+    val q = MicroBatch.streamCurate(stream, indexDir, outDir, rejDir, ckpt,
+      "doc_id", "text",
+      MicroBatch.CurateConfig(minQuality = 0.0, minTokens = 3))
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.map(_.numInputRows).sum == n,
+      q.recentProgress.map(_.numInputRows).mkString(","))
+    assert(spark.read.parquet(outDir).count() +
+      spark.read.parquet(rejDir).count() == n)
+  }
+
+  test("a foreachBatch body plans its shuffles adaptively") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // the sinks' per-batch queries (dedup, folds, merges) rely on AQE's
+    // runtime broadcasts and concurrent stages although the streaming
+    // plan itself runs without AQE
+    val srcDir = Files.createTempDirectory("graft_fb_aqe").toString + "/src"
+    Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("k", "v").coalesce(1)
+      .write.parquet(srcDir)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val body: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, _) => {
+      val agg = b.groupBy("v").count()
+      plans.add(agg.queryExecution.executedPlan match {
+        case _: AdaptiveSparkPlanExec => "adaptive"
+        case p => p.nodeName
+      })
+      agg.collect()
+      ()
+    }
+    val q = spark.readStream
+      .schema(new org.apache.spark.sql.types.StructType()
+        .add("k", "long").add("v", "string"))
+      .parquet(srcDir).writeStream.foreachBatch(body).start()
+    try q.processAllAvailable() finally q.stop()
+    assert(!plans.isEmpty && plans.toArray.forall(_ == "adaptive"),
+      plans.toString)
+  }
+
   test("near-dup ingest batch replay is idempotent (no self-index dedup)") {
     import graft.operators.Dedup
     def words(prefix: String) = (1 to 20).map(i => s"$prefix$i").mkString(" ")
